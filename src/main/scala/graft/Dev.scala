@@ -46,7 +46,6 @@ object Dev {
     } else if (args(1) == "explain") {
       SparkEntry.queries(args(2))(spark, sfDir).explain("formatted")
     } else if (args(1) == "sql") {
-      graft.functions.VectorFunctions.register(spark)
       Tables.names.foreach { n =>
         Tables(spark, sfDir, n).createOrReplaceTempView(n)
       }

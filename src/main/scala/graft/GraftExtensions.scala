@@ -1,16 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BitmapAgg, BitmapAndCardinality, BitmapCardinality, BloomMightContain, DotProductLong, IntersectSize, LshBucket, MinHashSigs, NGramHashes, PqAdcLong, SparseDotLong, ZOrder2}
+import graft.functions.{IntersectSize, VectorFunctions}
 import graft.plans.{RewriteBoundedLevenshtein, RewriteIntersectSize, RewriteRangeJoin}
 
-/** Spark extension entry point: registers the engine's native Catalyst
-  * expressions so ANY session — including spark-sql / thrift users — can call
-  * them (not just code paths that invoke
-  * [[graft.functions.VectorFunctions.register]]), and installs the
+/** Spark extension entry point: injects every native Catalyst expression
+  * of [[graft.functions.VectorFunctions.table]] so ANY session — including
+  * spark-sql / thrift users — can call them (not just code paths that
+  * invoke [[graft.functions.VectorFunctions.register]]), and installs the
   * optimizer rule that rewrites `size(array_intersect(a, b))` to the
   * allocation-free native [[IntersectSize]].
   *
@@ -18,71 +16,7 @@ import graft.plans.{RewriteBoundedLevenshtein, RewriteIntersectSize, RewriteRang
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_l"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "dot_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductLong(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSigs(args(0), args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bucket"),
-      new ExpressionInfo(classOf[LshBucket].getName, "lsh_bucket"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LshBucket(args(0), args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("intersect_size"),
-      new ExpressionInfo(classOf[IntersectSize].getName, "intersect_size"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        IntersectSize(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sparse_dot_l"),
-      new ExpressionInfo(classOf[SparseDotLong].getName, "sparse_dot_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SparseDotLong(args(0), args(1), args(2), args(3))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc_l"),
-      new ExpressionInfo(classOf[PqAdcLong].getName, "pq_adc_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PqAdcLong(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NGramHashes].getName, "ngram_hashes"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NGramHashes(args(0), args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("zorder2"),
-      new ExpressionInfo(classOf[ZOrder2].getName, "zorder2"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // explicit arity check: surplus args must not be silently dropped
-        // (zorder2(x, y, z) returning the 2-D key would mis-cluster data)
-        if (args.length != 2) throw new IllegalArgumentException(
-          s"zorder2 expects exactly 2 arguments, got ${args.length}")
-        ZOrder2(args(0), args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomMightContain(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bitmap_agg"),
-      new ExpressionInfo(classOf[BitmapAgg].getName, "bitmap_agg"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BitmapAgg(args.head).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("bitmap_cardinality"),
-      new ExpressionInfo(classOf[BitmapCardinality].getName, "bitmap_cardinality"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BitmapCardinality(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("bitmap_and_cardinality"),
-      new ExpressionInfo(classOf[BitmapAndCardinality].getName, "bitmap_and_cardinality"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BitmapAndCardinality(args(0), args(1))))
+    VectorFunctions.table.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteIntersectSize)
     ext.injectOptimizerRule(_ => RewriteBoundedLevenshtein)
     ext.injectOptimizerRule(_ => RewriteRangeJoin)

@@ -1,9 +1,11 @@
 package graft.functions
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -898,37 +900,55 @@ case class QuantizeVec(child: Expression)
 }
 
 object VectorFunctions {
-  /** Registers the native expressions so operators can use them in
-    * `expr(...)` strings. Registration is skipped when the name already
-    * exists, so repeated calls (one per query build) stay silent —
-    * createOrReplaceTempFunction would WARN-spam the driver log. */
+  /** The ONE table of the engine's native expressions, as
+    * (name, info, builder). [[graft.GraftExtensions]] injects every entry
+    * into each session it is installed in; [[register]] adds them to a
+    * session that lacks the extension. */
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn[DotProductLong]("dot_l")(a => DotProductLong(a(0), a(1))),
+    fn[MinHashSigs]("minhash_sigs")(a =>
+      MinHashSigs(a(0), a(1).eval().asInstanceOf[Int])),
+    fn[LshBucket]("lsh_bucket")(a =>
+      LshBucket(a(0), a(1).eval().asInstanceOf[Int])),
+    fn[RpProject]("rp_project")(a =>
+      RpProject(a(0), a(1).eval().asInstanceOf[Int])),
+    fn[IntersectSize]("intersect_size")(a => IntersectSize(a(0), a(1))),
+    fn[SparseDotLong]("sparse_dot_l")(a =>
+      SparseDotLong(a(0), a(1), a(2), a(3))),
+    fn[PqAdcLong]("pq_adc_l")(a => PqAdcLong(a(0), a(1))),
+    fn[NGramHashes]("ngram_hashes")(a =>
+      NGramHashes(a(0), a(1).eval().asInstanceOf[Int])),
+    fn[ShingleRle]("shingle_rle")(a => ShingleRle(a(0))),
+    fn[ShingleArr]("shingle_arr")(a => ShingleArr(a(0))),
+    fn[Del1Hashes]("del1_hashes")(a => Del1Hashes(a(0))),
+    fn[QuantizeVec]("quantize_l")(a => QuantizeVec(a(0))),
+    fn[WinnowFps]("winnow_fps")(a => WinnowFps(a(0))),
+    fn[ZOrder2]("zorder2") { a =>
+      // explicit arity check: surplus args must not be silently dropped
+      // (zorder2(x, y, z) returning the 2-D key would mis-cluster data)
+      if (a.length != 2) throw new IllegalArgumentException(
+        s"zorder2 expects exactly 2 arguments, got ${a.length}")
+      ZOrder2(a(0), a(1))
+    },
+    fn[BloomMightContain]("bloom_might_contain")(a =>
+      BloomMightContain(a(0), a(1))),
+    fn[BitmapAgg]("bitmap_agg")(a => BitmapAgg(a.head).toAggregateExpression()),
+    fn[BitmapCardinality]("bitmap_cardinality")(a => BitmapCardinality(a.head)),
+    fn[BitmapAndCardinality]("bitmap_and_cardinality")(a =>
+      BitmapAndCardinality(a(0), a(1))))
+
+  private def fn[T: ClassTag](name: String)(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[T].runtimeClass.getName, name), build)
+
+  /** Registers the [[table]] so operators can use it in `expr(...)`
+    * strings. Registration is skipped when the name already exists (the
+    * extension is installed, or an earlier call ran), so repeated calls
+    * (one per query build) stay silent — re-registering would WARN-spam
+    * the log. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def add(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    add("dot_l")(args => DotProductLong(args(0), args(1)))
-    add("minhash_sigs")(args =>
-      MinHashSigs(args(0), args(1).eval().asInstanceOf[Int]))
-    add("lsh_bucket")(args =>
-      LshBucket(args(0), args(1).eval().asInstanceOf[Int]))
-    add("rp_project")(args =>
-      RpProject(args(0), args(1).eval().asInstanceOf[Int]))
-    add("intersect_size")(args => IntersectSize(args(0), args(1)))
-    add("sparse_dot_l")(args =>
-      SparseDotLong(args(0), args(1), args(2), args(3)))
-    add("pq_adc_l")(args => PqAdcLong(args(0), args(1)))
-    add("ngram_hashes")(args =>
-      NGramHashes(args(0), args(1).eval().asInstanceOf[Int]))
-    add("shingle_rle")(args => ShingleRle(args(0)))
-    add("shingle_arr")(args => ShingleArr(args(0)))
-    add("del1_hashes")(args => Del1Hashes(args(0)))
-    add("quantize_l")(args => QuantizeVec(args(0)))
-    add("winnow_fps")(args => WinnowFps(args(0)))
-    add("zorder2") { args =>
-      if (args.length != 2) throw new IllegalArgumentException(
-        s"zorder2 expects exactly 2 arguments, got ${args.length}")
-      ZOrder2(args(0), args(1))
-    }
+    for ((id, info, build) <- table if !reg.functionExists(id))
+      reg.registerFunction(id, info, build)
   }
 }

@@ -2666,9 +2666,8 @@ object Curation {
     // locks) from already-pinned inputs — three independent job chains,
     // overlapped (round 15, guide §2.6): previously the audit ran them
     // strictly one after another. The NSW lane stays ss58's shared
-    // artifact through the per-JVM memo: first toucher builds+erases,
-    // everyone else (including a concurrent toucher — computeIfAbsent
-    // blocks) reads.
+    // artifact through its Derived key: first toucher builds+erases,
+    // everyone else (including a concurrent toucher, who waits) reads.
     Similarity.parLadder(Seq[() => Unit](
       () => {
         // same standing-corpus build — clone the per-JVM pristine store
@@ -2682,7 +2681,7 @@ object Curation {
           centsPre = Some(Similarity.coarseCentroidsFor(s, dir)))
         Similarity.eraseFromIvfIndex(s, ivfDir, goneV)
       },
-      () => Similarity.buildNswOnce(nswDir) {
+      () => Derived(s, nswDir) {
         Similarity.buildNswIndex(s, base, nswDir,
           centsPre = Some(Similarity.coarseCentroidsFor(s, dir)))
         Similarity.eraseFromNswIndex(s, nswDir, goneV)

@@ -1019,15 +1019,14 @@ object DedupStore {
     * every fresh process rebuilds from the parquet inputs on first touch.
     * The MUTATING verbs (roll-forward / erase / ledger) get their own
     * bytes via [[cloneStoreTo]] — a store-sized file copy instead of a
-    * corpus-sized tokenize+shingle+minhash rebuild per verb. */
-  private val base80Once =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * corpus-sized tokenize+shingle+minhash rebuild per verb. A [[Derived]]
+    * key named by the store path. */
   private def ensureBase80Store(s: SparkSession, dir: String): String = {
     val p = storePathFor(dir)
-    base80Once.computeIfAbsent(s.sparkContext.applicationId + "#" + p, { _ =>
+    Derived(s, p) {
       build(Tables(s, dir, "documents").filter(col("doc_id") % 10 < 8), p)
       p
-    })
+    }
   }
 
   /** Replace `to` with a byte copy of the pristine store at `from` — the

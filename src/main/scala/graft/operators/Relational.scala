@@ -128,6 +128,18 @@ object Relational {
   // (the reference loops per row, src/post/mod.rs:96-107 — see SURVEY C16).
   // ---------------------------------------------------------------------
 
+  /** Per-peel-round record of the LAST [[trussEdges]] run in this JVM:
+    * (round, edges-before, edges-after, wall seconds). Exists so the
+    * bench artifact is self-explaining: a slow cc20 capture can be read
+    * as "same rounds, wall inflated uniformly" (host contention) vs
+    * "extra rounds / one slow round" (a real regression) from the
+    * artifact alone — Bench prints it as its own part-line. */
+  val trussRoundLog = new java.util.concurrent.atomic.AtomicReference[
+    Seq[(Int, Long, Long, Double)]](Nil)
+
+  // once-per-JVM latch for loopCheckpoint's reliable-mode config warnings
+  private val reliableWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
   /** Lineage truncation for LOOP-CARRIED tables in the iterative fixpoint
     * operators (CC ×3, SCC, PageRank/PPR, BFS/SSSP/stress, k-core,
     * k-truss, label propagation, transitive closure, k-means), applied as
@@ -146,19 +158,9 @@ object Relational {
     *    round — set the dir to HDFS/S3, not local disk.
     *
     * Both variants are eager and semantically identical (one spec runs a
-    * loop under both and proves equal output — ReliableCheckpointSpec). */
-  /** Per-peel-round record of the LAST [[trussEdges]] run in this JVM:
-    * (round, edges-before, edges-after, wall seconds). Exists so the
-    * bench artifact is self-explaining: a slow cc20 capture can be read
-    * as "same rounds, wall inflated uniformly" (host contention) vs
-    * "extra rounds / one slow round" (a real regression) from the
-    * artifact alone — Bench prints it as its own part-line. */
-  val trussRoundLog = new java.util.concurrent.atomic.AtomicReference[
-    Seq[(Int, Long, Long, Double)]](Nil)
-
-  // once-per-JVM latch for loopCheckpoint's reliable-mode config warnings
-  private val reliableWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
-
+    * loop under both and proves equal output — ReliableCheckpointSpec).
+    * The [[Derived]] registry's DataFrame pins go through here too, so
+    * the reliable setting covers memoized derivations as well. */
   private[operators] def loopCheckpoint(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val reliable = s.conf.getOption("spark.graft.reliableCheckpoint")

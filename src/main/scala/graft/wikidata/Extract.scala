@@ -67,9 +67,10 @@ object Extract {
     * one handle_line pass emitting tagged DataEntry rows to a router
     * (SURVEY A14, §3.1).
     *
-    * Typed-vs-columnar, measured (ExtractPathBench, 38 MB / 52k-entity
-    * fixture, local[8], steady state): from_json parse alone 1.4 s; parse +
-    * typed emit + all 9 outputs 2.9 s. The emit surcharge ≈ 1× the parse
+    * Typed-vs-columnar, measured (38 MB / 52k-entity fixture, local[8],
+    * steady state; `perfbench`'s traced `pipeline` run reports the same
+    * split as `extract.parse` vs `extract.tables`): from_json parse alone
+    * 1.4 s; parse + typed emit + all 9 outputs 2.9 s. The emit surcharge ≈ 1× the parse
     * cost that ANY design pays, so this one-pass route sits within ~2× of
     * the theoretical floor — while 9 per-output columnar plans would re-pay
     * the wide-schema parse per table (~9×), and a columnar emit of the

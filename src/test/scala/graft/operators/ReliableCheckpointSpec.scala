@@ -18,9 +18,19 @@ import graft.SparkSpec
   * settings must produce identical output — the conf changes durability,
   * never results. One multi-round CC loop (star contraction — two
   * checkpoints per round) and one budgeted loop (PageRank) cover the
-  * fixpoint and fixed-iteration families.
+  * fixpoint and fixed-iteration families. A [[Derived]] pin goes through
+  * the same switch.
   */
 class ReliableCheckpointSpec extends SparkSpec {
+
+  // One dir for the whole suite: the SparkContext checkpoint dir is
+  // JVM-global and the first reliable checkpoint pins it, so every case
+  // must configure the same location.
+  private lazy val ckptDir = Files.createTempDirectory("graft-reliable-ckpt").toFile
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(ckptDir)
+    finally super.afterAll()
 
   private def withReliable[A](dir: String)(body: => A): A = {
     val old = spark.conf.getOption("spark.graft.reliableCheckpoint")
@@ -51,20 +61,32 @@ class ReliableCheckpointSpec extends SparkSpec {
     val prLocal = Relational.pageRank(directed, iters = 5)
       .orderBy("node").collect().toSeq
 
-    val dir = Files.createTempDirectory("graft-reliable-ckpt").toFile
-    try {
-      val (ccRel, prRel) = withReliable(dir.getPath) {
-        (Relational.connectedComponentsStar(edges)
-           .orderBy("node").collect().toSeq,
-         Relational.pageRank(directed, iters = 5)
-           .orderBy("node").collect().toSeq)
-      }
-      assert(ccRel == ccLocal)
-      assert(prRel == prLocal)
-      // the reliable path really did write RDD checkpoints to the dir
-      val wrote = new java.io.File(dir.getPath).listFiles()
-      assert(wrote != null && wrote.nonEmpty,
-        "expected RDD checkpoint data under the configured dir")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    val (ccRel, prRel) = withReliable(ckptDir.getPath) {
+      (Relational.connectedComponentsStar(edges)
+         .orderBy("node").collect().toSeq,
+       Relational.pageRank(directed, iters = 5)
+         .orderBy("node").collect().toSeq)
+    }
+    assert(ccRel == ccLocal)
+    assert(prRel == prLocal)
+    // the reliable path really did write RDD checkpoints to the dir
+    val wrote = ckptDir.listFiles()
+    assert(wrote != null && wrote.nonEmpty,
+      "expected RDD checkpoint data under the configured dir")
+  }
+
+  test("a Derived pin under reliableCheckpoint=true is checkpointed into the configured dir") {
+    import spark.implicits._
+    val df = (1L to 50L).toDF("x").withColumn("y", col("x") * 3)
+    val pinned = withReliable(ckptDir.getPath) {
+      Derived.pinned(spark, s"reliable-spec#${java.util.UUID.randomUUID()}")(df)
+    }
+    val files = pinned.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+    }.flatten
+    val root = ckptDir.getCanonicalPath + "/"
+    assert(files.nonEmpty && files.forall(f =>
+      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(root)), files)
+    assert(pinned.orderBy("x").collect().toSeq == df.orderBy("x").collect().toSeq)
   }
 }
