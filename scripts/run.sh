@@ -4,6 +4,11 @@
 # Refresh /tmp/g/cp.txt after dependency changes:
 #   sbt -batch "export Runtime/fullClasspath" | grep -v '^\[' | tail -1 > /tmp/g/cp.txt
 set -e
+if [ ! -r /tmp/g/cp.txt ]; then
+  echo "run.sh: /tmp/g/cp.txt is missing; refresh it from the repo root with:" >&2
+  echo "  mkdir -p /tmp/g && sbt -batch \"export Runtime/fullClasspath\" | grep -v '^\\[' | tail -1 > /tmp/g/cp.txt" >&2
+  exit 1
+fi
 CP=$(cat /tmp/g/cp.txt)
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

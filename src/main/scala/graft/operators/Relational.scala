@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -159,9 +159,10 @@ object Relational {
     *
     * Both variants are eager and semantically identical (one spec runs a
     * loop under both and proves equal output — ReliableCheckpointSpec).
-    * The [[Derived]] registry's DataFrame pins go through here too, so
-    * the reliable setting covers memoized derivations as well. */
-  private[operators] def loopCheckpoint(df: DataFrame): DataFrame = {
+    * The [[Derived]] registry's DataFrame pins and the post-processing
+    * materializations (`wikidata.Post`'s closure and final cities) go
+    * through here too, so the reliable setting covers them as well. */
+  private[graft] def loopCheckpoint(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val reliable = s.conf.getOption("spark.graft.reliableCheckpoint")
       .exists(_.trim.equalsIgnoreCase("true"))
@@ -224,9 +225,12 @@ object Relational {
   /** Iterative frontier expansion, the Spark shape of WITH RECURSIVE.
     * `edges` has columns (id, parent); `seeds` a single column `seed`.
     * Returns (seed, node, step) with step 0 = the seed itself.
-    * localCheckpoint() truncates lineage so 100 iterations stay plannable
-    * (conf-switched to reliable checkpoints — see [[loopCheckpoint]]);
-    * each iteration is one shuffle-join, all seeds advance together.
+    * Each step's frontier goes through [[loopCheckpoint]], which truncates
+    * lineage so 100 iterations stay plannable; each iteration is one join,
+    * all seeds advance together. Frontier emptiness comes from a row count
+    * observed on that checkpoint's own job, so no step runs a second job
+    * to test it (a reliable checkpoint may recompute and over-count; the
+    * count is only read as zero or non-zero).
     */
   def transitiveClosure(edges: DataFrame, seeds: DataFrame, maxSteps: Int = 100,
       dedupPerStep: Boolean = false): DataFrame = {
@@ -244,8 +248,9 @@ object Relational {
         .select(frontier("seed"), e("parent").as("node"),
           (frontier("step") + 1).as("step"))
       if (dedupPerStep) next = next.dropDuplicates("seed", "node")
-      frontier = next.transform(loopCheckpoint)
-      if (frontier.isEmpty) done = true
+      val rows = Observation()
+      frontier = next.observe(rows, count(lit(1)).as("n")).transform(loopCheckpoint)
+      if (rows.get("n") == 0L) done = true
       else { acc = acc.unionAll(frontier); step += 1 }
     }
     e.unpersist()  // acc only references the checkpointed frontiers

@@ -204,18 +204,23 @@ object Extract {
       now: WTime = WikiTime.now()): Tables =
     apply(parse(spark.read.text(path)), classes, now)
 
-  /** The 9 output tables in write order — shared by the batch CLI sink and
-    * the streaming sink. */
-  def tableMap(t: Tables): Seq[(String, DataFrame)] = Seq(
-    "countries" -> t.countries.toDF(),
-    "object_languages" -> t.objectLanguages,
-    "languages" -> t.languages.toDF(),
-    "territorial_entities" -> t.territorialEntities.toDF(),
-    "territorial_entities_parents" -> t.teParents,
-    "cities" -> t.cities.toDF(),
-    "cities_countries" -> t.citiesCountries.toDF(),
-    "object_labels" -> t.objectLabels.toDF(),
-    "missing_p17" -> t.missingP17.toDF())
+  /** The 9 output tables in write order — shared by the batch CLI sink,
+    * the CLI's `post` and `entity` commands and the streaming sink. */
+  private val tables: Seq[(String, Tables => DataFrame)] = Seq(
+    ("countries", _.countries.toDF()),
+    ("object_languages", _.objectLanguages),
+    ("languages", _.languages.toDF()),
+    ("territorial_entities", _.territorialEntities.toDF()),
+    ("territorial_entities_parents", _.teParents),
+    ("cities", _.cities.toDF()),
+    ("cities_countries", _.citiesCountries.toDF()),
+    ("object_labels", _.objectLabels.toDF()),
+    ("missing_p17", _.missingP17.toDF()))
+
+  val tableNames: Seq[String] = tables.map(_._1)
+
+  def tableMap(t: Tables): Seq[(String, DataFrame)] =
+    tables.map { case (name, table) => name -> table(t) }
 
   /** Streaming flavor of the dump ingest — SURVEY A1's landing-dir mapping
     * (`spark.readStream.format("text")` over a landing directory). Each

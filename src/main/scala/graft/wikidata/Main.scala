@@ -19,10 +19,6 @@ import org.apache.spark.sql.SparkSession
   * decompress+parse for free (A3/A4).
   */
 object Main {
-  private val nineTables = Seq("countries", "object_languages", "languages",
-    "territorial_entities", "territorial_entities_parents", "cities",
-    "cities_countries", "object_labels", "missing_p17")
-
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -89,7 +85,7 @@ object Main {
           // mirrors that as a copy: enriched cities + the 8 untouched
           // tables, so a later `post --only-cleanup <out> <final>` composes
           enriched.write.mode("overwrite").parquet(s"$out/cities")
-          for (n <- nineTables if n != "cities")
+          for (n <- Extract.tableNames if n != "cities")
             rd(n).write.mode("overwrite").parquet(s"$out/$n")
         } else {
           val f = Post.cleanup(rd("countries"), rd("object_languages"),
@@ -105,17 +101,7 @@ object Main {
         val classes = rest.headOption.map(loadClasses)
           .getOrElse(ClassSets.seedsOnly)
         val t = Extract.fromDump(spark, file, classes)
-        Seq(
-          "countries" -> t.countries.toDF(),
-          "object_languages" -> t.objectLanguages,
-          "languages" -> t.languages.toDF(),
-          "territorial_entities" -> t.territorialEntities.toDF(),
-          "territorial_entities_parents" -> t.teParents,
-          "cities" -> t.cities.toDF(),
-          "cities_countries" -> t.citiesCountries.toDF(),
-          "object_labels" -> t.objectLabels.toDF(),
-          "missing_p17" -> t.missingP17.toDF()
-        ).foreach { case (name, df) =>
+        Extract.tableMap(t).foreach { case (name, df) =>
           println(s"== $name ==")
           df.show(100, truncate = false)
         }

@@ -7,16 +7,20 @@ import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
 /** Post-processing: the reference's 10 sequential SQL stages plus 9 cleanup
-  * scripts (/root/reference/src/post/mod.rs:114-190), re-expressed as one
-  * linear chain of DataFrame transformations (SURVEY §3.3).
+  * scripts (reference src/post/mod.rs:114-190), re-expressed as
+  * DataFrame transformations (SURVEY §3.3): per-key candidates joined once;
+  * cascade order is a coalesce.
   *
   * Key re-designs (SURVEY C16, §7.4):
-  *  - UPDATE-in-place becomes left-join + coalesce: unmatched rows keep the
-  *    old value, and each cascade stage fills only rows the previous stage
-  *    left NULL (C14).
+  *  - UPDATE-in-place becomes left-join + coalesce. Each stage's candidate
+  *    depends only on its key (the city id for stages 3-6, the 2nd_id for
+  *    stages 7-11), so every stage is computed once for every key and the
+  *    "fill only rows the previous stage left NULL" order (C14) is a
+  *    `coalesce` over the candidates in stage order.
   *  - The reference's per-row recursive-CTE driver loops (per_city.sql /
   *    per_subdivision.sql, one UPDATE per cursor row) become ONE set-based
-  *    closure + window pass over all unlabeled seeds at once.
+  *    closure from every city and every is_2nd TE, walked once and shared
+  *    by stages 2, 4 and 8, plus one window pass per stage.
   *  - Where SQLite semantics are unspecified (which row an UPDATE...FROM
   *    picks on multiple matches, GROUP_CONCAT order after DISTINCT), we pick
   *    a deterministic equivalent and document it at the use site.
@@ -86,21 +90,32 @@ object Post {
         col("population"), col("lat"), col("lon"))
 
     // ------------------------------------------------------------------
-    // Stage 2 — find_subdivision.sql: bounded transitive closure from every
-    // city (C4), deepest ancestor flagged is_2nd wins — ORDER BY step DESC
-    // picks the match closest to the root (C5 + note †); deterministic
-    // tiebreak `node asc` added for multi-parent DAGs.
+    // The keys: every city (stages 2-6) and every is_2nd TE (stages 7-11;
+    // every 2nd_id is one). A key-derived candidate is computed once per
+    // key, so a key that is both a city and a subdivision shares it.
+    // One hierarchy walk (C4) from all keys serves stages 2, 4 and 8: each
+    // seed's frontier evolves on its own under the same 100-step cap, so
+    // the closure's rows for a seed equal a walk from that seed alone.
     // ------------------------------------------------------------------
-    val closureAll = Relational.transitiveClosure(
+    val cityIds = cities0.select(col("id"))
+    val secondIds = territorialEntities.filter(col("is_2nd")).select(col("id"))
+    val keys = cityIds.union(secondIds).distinct()
+    val closure = Relational.transitiveClosure(
       teParents.select(col("id"), col("parent")),
-      c1.select(col("id").as("seed")),
+      keys.select(col("id").as("seed")),
       maxSteps = 100, dedupPerStep = true)
-      .localCheckpoint()
-    val secondIds = territorialEntities.filter(col("is_2nd"))
-      .select(col("id").as("te_id"))
+      .transform(Relational.loopCheckpoint)
+
+    // ------------------------------------------------------------------
+    // Stage 2 — find_subdivision.sql: per seed of the closure, the
+    // deepest ancestor flagged is_2nd wins — ORDER BY step DESC picks the
+    // match closest to the root (C5 + note †); deterministic tiebreak
+    // `node asc` added for multi-parent DAGs.
+    // ------------------------------------------------------------------
     val wDeep = Window.partitionBy(col("seed"))
       .orderBy(col("step").desc, col("node").asc)
-    val deepest = closureAll.join(secondIds, col("node") === col("te_id"))
+    val deepest = closure
+      .join(secondIds.select(col("id").as("te_id")), col("node") === col("te_id"))
       .withColumn("rn", row_number().over(wDeep)).filter(col("rn") === 1)
       .select(col("seed"), col("node").as("second_id"))
     val c2 = c1.join(deepest, c1("id") === deepest("seed"), "left")
@@ -112,20 +127,17 @@ object Post {
     // SQLite's DISTINCT temp-B-tree emits (label, id) sorted, so the concat
     // order is label-ascending — made explicit here with array_sort.
     // ------------------------------------------------------------------
-    val cityIds = c2.select(col("id"))
     val nativeFull = objectLabels
       .filter(col("native_order").isNotNull && col("native_order") <= 1)
       .join(cityIds, Seq("id"), "left_semi")
       .groupBy(col("id"))
       .agg(concat_ws(" / ",
         array_sort(array_distinct(collect_list(col("label"))))).as("full_label"))
-    val c3 = c2.join(nativeFull.as("nf"), c2("id") === col("nf.id"), "left")
-      .select(c2("*"), col("nf.full_label").as("native_label"))
 
     // ------------------------------------------------------------------
-    // Stage 4 — per_city.sql, set-based (C16): for every still-unlabeled
-    // city at once: walk ancestors (incl. self at step 0), take their
-    // official languages, prefix-match the CITY's own labels against those
+    // Stage 4 — per_city.sql, set-based (C16): for every key; the coalesce
+    // keeps the order. Walk ancestors (incl. self at step 0), take their
+    // official languages, prefix-match the key's own labels against those
     // codes, keep the best 2 by (step asc, lang_index asc), dedupe, " / ".
     // The reference's bare-column GROUP BY picks an arbitrary label per
     // (step, ancestor, lang); we take min(label).
@@ -139,17 +151,8 @@ object Post {
       col("lang").as("lab_lang"), col("label").as("lab_label"),
       primaryOf(col("lang")).as("lab_primary"))
 
-    def recursiveLabels(seeds: DataFrame,
-        precomputed: Option[DataFrame] = None): DataFrame = {
-      // seeds: single column `seed`. Result: (seed, full_label).
-      // When the full-city closure already exists (stage 2), restrict it to
-      // the requested seeds instead of walking the graph again.
-      val closure = precomputed match {
-        case Some(cl) => cl.join(seeds, Seq("seed"), "left_semi")
-        case None => Relational.transitiveClosure(
-          teParents.select(col("id"), col("parent")), seeds,
-          maxSteps = 100, dedupPerStep = true)
-      }
+    // (seed, full_label); stage 8 reads it by 2nd_id
+    val recursiveLabels = {
       val cand = closure
         .join(langCodes, col("node") === col("holder"))
         .join(labelsP,
@@ -168,21 +171,12 @@ object Post {
           x => x.getField("label")))).as("full_label"))
     }
 
-    val unlabeled4 = c3.filter(col("native_label").isNull)
-      .select(col("id").as("seed"))
-    val rec4 = recursiveLabels(unlabeled4, precomputed = Some(closureAll))
-    val c4 = c3.join(rec4.as("r4"), c3("id") === col("r4.seed"), "left")
-      .select(c3("id"), c3("country"), c3("population"), c3("lat"), c3("lon"),
-        c3("2nd_id"),
-        coalesce(c3("native_label"), col("r4.full_label")).as("native_label"))
-      .localCheckpoint()
-
     // ------------------------------------------------------------------
-    // Stage 5 — city_labels_by_country.sql (C11): for the remainder, use the
-    // city's country's primary (lang_index 0) and secondary (1) languages to
-    // prefix-match the city's labels; merge the two candidates (C10).
-    // Multiple matching labels per slot → min(label) (UPDATE pick is
-    // unspecified in SQLite).
+    // Stage 5 — city_labels_by_country.sql (C11): for every city; the
+    // coalesce keeps the order. Use the city's country's primary
+    // (lang_index 0) and secondary (1) languages to prefix-match the
+    // city's labels; merge the two candidates (C10). Multiple matching
+    // labels per slot → min(label) (UPDATE pick is unspecified in SQLite).
     // ------------------------------------------------------------------
     def countrySlotLabels(targets: DataFrame): DataFrame = {
       // targets: (owner, t_country), distinct, both freshly aliased — labels
@@ -214,96 +208,85 @@ object Post {
           mergeLabels(col("label1"), col("label2")).as("full_label"))
     }
 
-    val targets5 = c4.filter(col("native_label").isNull)
-      .select(col("id").as("owner"), col("country").as("t_country"))
-    val by5 = countrySlotLabels(targets5)
-    val c5 = c4.join(by5.as("b5"), c4("id") === col("b5.owner"), "left")
-      .select(c4("id"), c4("country"), c4("population"), c4("lat"), c4("lon"),
-        c4("2nd_id"),
-        coalesce(c4("native_label"), col("b5.full_label")).as("native_label"))
+    val by5 = countrySlotLabels(
+      c1.select(col("id").as("owner"), col("country").as("t_country")))
 
     // ------------------------------------------------------------------
-    // Stage 6 — esperanto_city_labels.sql (C13): eo_label for every city —
+    // Stage 6 — esperanto_city_labels.sql (C13): eo_label for every key —
     // any own label in (eo fr es en de nl), Esperanto preferred; tiebreak
-    // (lang asc, label asc) added for determinism.
+    // (lang asc, label asc) added for determinism. Stage 10 reads it by
+    // 2nd_id.
     // ------------------------------------------------------------------
     val eoLangs = Seq("eo", "fr", "es", "en", "de", "nl")
-    def preferredLabel(owners: DataFrame): DataFrame = {
-      // owners: single column `oid`; result (oid, label) per C13.
-      val wEo = Window.partitionBy(col("lab_id"))
-        .orderBy((col("lab_lang") === "eo").desc, col("lab_lang").asc,
-          col("lab_label").asc)
-      labelsP.join(owners, col("lab_id") === col("oid"), "left_semi")
-        .filter(col("lab_lang").isin(eoLangs: _*))
-        .withColumn("rn", row_number().over(wEo)).filter(col("rn") === 1)
-        .select(col("lab_id").as("oid"), col("lab_label").as("pref_label"))
-    }
-    val eo6 = preferredLabel(c5.select(col("id").as("oid")))
-    val c6 = c5.join(eo6.as("e6"), c5("id") === col("e6.oid"), "left")
-      .select(c5("*"), col("e6.pref_label").as("eo_label"))
+    val wEo = Window.partitionBy(col("lab_id"))
+      .orderBy((col("lab_lang") === "eo").desc, col("lab_lang").asc,
+        col("lab_label").asc)
+    val preferredLabel = labelsP
+      .join(keys, col("lab_id") === col("id"), "left_semi")
+      .filter(col("lab_lang").isin(eoLangs: _*))
+      .withColumn("rn", row_number().over(wEo)).filter(col("rn") === 1)
+      .select(col("lab_id"), col("lab_label"))
 
     // ------------------------------------------------------------------
     // Stage 7 — subdivision_labels.sql: the same native-label aggregate,
     // joined via 2nd_id. (Native labels only ever exist for settlement
     // entities — the reference computes the aggregate over cities' labels
-    // and that restriction is kept, quirk included.)
+    // and that restriction is kept, quirk included.) The candidate is
+    // stage 3's `nativeFull`, joined on 2nd_id below.
     // ------------------------------------------------------------------
-    val c7 = c6.join(nativeFull.as("nf2"), c6("2nd_id") === col("nf2.id"), "left")
-      .select(c6("*"), col("nf2.full_label").as("2nd_native_label"))
 
     // ------------------------------------------------------------------
-    // Stage 8 — per_subdivision.sql, set-based: seeds are the DISTINCT
-    // still-unlabeled 2nd_ids; the result labels every city sharing that
-    // subdivision (per_subdivision.sql:43).
+    // Stage 8 — per_subdivision.sql, set-based: stage 4's candidate read by
+    // 2nd_id; the coalesce keeps the order. The result labels every city
+    // sharing that subdivision (per_subdivision.sql:43).
     // ------------------------------------------------------------------
-    val seeds8 = c7.filter(col("2nd_native_label").isNull && col("2nd_id").isNotNull)
-      .select(col("2nd_id").as("seed")).distinct()
-    val rec8 = recursiveLabels(seeds8)
-    val c8 = c7.join(rec8.as("r8"), c7("2nd_id") === col("r8.seed"), "left")
-      .select(c7("id"), c7("country"), c7("population"), c7("lat"), c7("lon"),
-        c7("2nd_id"), c7("native_label"), c7("eo_label"),
-        coalesce(c7("2nd_native_label"), col("r8.full_label"))
-          .as("2nd_native_label"))
-      .localCheckpoint()
 
     // ------------------------------------------------------------------
     // Stage 9 — subdivision_labels_by_country.sql: country-language labels
-    // for the subdivision, computed per (2nd_id, country) over the cities
-    // still unlabeled; one deterministic winner per 2nd_id (non-null labels
-    // preferred, then min) — the reference's UPDATE pick is unspecified.
+    // for the subdivision, computed per (2nd_id, country) over every city
+    // (the coalesce keeps the order: a 2nd_id's stage 7/8 labels are
+    // functions of the 2nd_id alone, so the pairs seen by a still-unlabeled
+    // 2nd_id are unchanged); one deterministic winner per 2nd_id (non-null
+    // labels preferred, then min) — the reference's UPDATE pick is
+    // unspecified.
     // ------------------------------------------------------------------
-    val targets9 = c8.filter(col("2nd_native_label").isNull && col("2nd_id").isNotNull)
-      .select(col("2nd_id").as("owner"), col("country").as("t_country")).distinct()
-    val by9 = countrySlotLabels(targets9)
+    val by9 = countrySlotLabels(c2.filter(col("2nd_id").isNotNull)
+      .select(col("2nd_id").as("owner"), col("country").as("t_country"))
+      .distinct())
     // (owner, country) pairs that produced no row (dead country, no official
     // language) are equivalent to a null full_label — both lose the pick
     // below and coalesce(null) is a no-op, so no left-join-back is needed.
-    val wPick9 = Window.partitionBy(col("owner"))
-      .orderBy(col("full_label").isNull.asc, col("full_label").asc)
-    val pick9 = by9.withColumn("rn", row_number().over(wPick9))
-      .filter(col("rn") === 1)
-      .select(col("owner").as("sid"), col("full_label"))
-    val c9 = c8.join(pick9.as("p9"), c8("2nd_id") === col("p9.sid"), "left")
-      .select(c8("id"), c8("country"), c8("population"), c8("lat"), c8("lon"),
-        c8("2nd_id"), c8("native_label"), c8("eo_label"),
-        coalesce(c8("2nd_native_label"), col("p9.full_label"))
-          .as("2nd_native_label"))
+    // `min` skips nulls, so it is the non-null-first-then-min pick.
+    val pick9 = by9.groupBy(col("owner")).agg(min(col("full_label")))
 
     // ------------------------------------------------------------------
-    // Stage 10 — esperanto_subdivision_labels.sql: 2nd_eo_label per 2nd_id.
+    // Stage 10 — esperanto_subdivision_labels.sql: 2nd_eo_label per 2nd_id,
+    // stage 6's candidate read by 2nd_id.
     // ------------------------------------------------------------------
-    val eo10 = preferredLabel(
-      c9.filter(col("2nd_id").isNotNull).select(col("2nd_id").as("oid")).distinct())
-    val c10 = c9.join(eo10.as("e10"), c9("2nd_id") === col("e10.oid"), "left")
-      .select(c9("*"), col("e10.pref_label").as("2nd_eo_label"))
 
     // ------------------------------------------------------------------
     // Stage 11 — subdivision_iso.sql: 2nd_iso from the is_2nd TE row.
     // ------------------------------------------------------------------
     val isoSrc = territorialEntities.filter(col("is_2nd"))
-      .select(col("id").as("iso_id"), col("iso").as("te_iso"))
-    c10.join(isoSrc, c10("2nd_id") === col("iso_id"), "left")
-      .select(c10("*"), col("te_iso").as("2nd_iso"))
+      .select(col("id"), col("iso"))
+
+    // Each candidate (key, value) is left-joined once onto the stage-2
+    // table by its key column, as column `s<stage>`.
+    val candidates = Seq(
+      ("id", nativeFull, "s3"), ("id", recursiveLabels, "s4"),
+      ("id", by5, "s5"), ("id", preferredLabel, "s6"),
+      ("2nd_id", nativeFull, "s7"), ("2nd_id", recursiveLabels, "s8"),
+      ("2nd_id", pick9, "s9"), ("2nd_id", preferredLabel, "s10"),
+      ("2nd_id", isoSrc, "s11"))
+    candidates.foldLeft(c2) { case (df, (key, cand, name)) =>
+      val kv = cand.toDF(s"${name}_key", name)
+      df.join(kv, df(key) === kv(s"${name}_key"), "left").drop(s"${name}_key")
+    }.select(col("id"), col("country"), col("population"), col("lat"),
+      col("lon"), col("2nd_id"),
+      coalesce(col("s3"), col("s4"), col("s5")).as("native_label"),
+      col("s6").as("eo_label"),
+      coalesce(col("s7"), col("s8"), col("s9")).as("2nd_native_label"),
+      col("s10").as("2nd_eo_label"), col("s11").as("2nd_iso"))
   }
 
   /** The 9 cleanup scripts alone (the reference's `do_cleanup` half —
@@ -331,7 +314,7 @@ object Post {
         c11("lat"), c11("lon"), c11("2nd_id"), c11("native_label"),
         c11("eo_label"), c11("2nd_native_label"), c11("2nd_eo_label"),
         c11("2nd_iso"))
-      .localCheckpoint()
+      .transform(Relational.loopCheckpoint)
 
     // ------------------------------------------------------------------
     // Cleanup 02/08 (C17): object_languages keyed (id, lang=code); the

@@ -143,4 +143,82 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(h == Map(1L -> 3780L, 4L -> 3780L), h.toString)
   }
+
+  // transitiveClosure: exact (seed, node, step) rows, plus the job sites of
+  // the jobs the call starts (frontier emptiness must come from the step's
+  // checkpoint job, never from a separate isEmpty job).
+  private def closureRows(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxSteps: Int = 100, dedupPerStep: Boolean = false)
+      : (Seq[(Long, Long, Int)], Seq[String]) = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = s"closure-spec-${java.util.UUID.randomUUID()}"
+    val marker = group + "-marker"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        // the result stage is named after the action's call site
+        if (g == group && e.stageInfos.nonEmpty)
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+        if (g == marker) markerSeen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val rows = Relational.transitiveClosure(edges.toDF("id", "parent"),
+        seeds.toDF("seed"), maxSteps, dedupPerStep)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        .toSeq.sorted
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the call has been recorded
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (rows, sites.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def assertNoEmptinessJobs(sites: Seq[String]): Unit = {
+    assert(sites.nonEmpty, "expected the call's jobs to be recorded")
+    assert(!sites.exists(_.startsWith("isEmpty at")), sites.mkString(", "))
+  }
+
+  test("transitiveClosure: depth-5 chain, two seeds, each walks to the root") {
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val (rows, sites) = closureRows(chain, Seq(1L, 4L))
+    assert(rows == Seq((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2), (1L, 4L, 3),
+      (1L, 5L, 4), (1L, 6L, 5), (4L, 4L, 0), (4L, 5L, 1), (4L, 6L, 2)),
+      rows.toString)
+    assertNoEmptinessJobs(sites)
+  }
+
+  test("transitiveClosure: diamond DAG with dedupPerStep keeps one row per (seed, node, step)") {
+    // 1 -> {2, 3} -> 4 -> 5: both paths reach 4 at step 2; without the
+    // per-step dedup 4 and 5 would appear twice.
+    val diamond = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    val (rows, sites) = closureRows(diamond, Seq(1L), dedupPerStep = true)
+    assert(rows == Seq((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 1), (1L, 4L, 2),
+      (1L, 5L, 3)), rows.toString)
+    assertNoEmptinessJobs(sites)
+  }
+
+  test("transitiveClosure: a 3-cycle walks exactly maxSteps steps") {
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L))
+    val (rows, sites) = closureRows(cycle, Seq(1L), maxSteps = 7)
+    assert(rows == (0 to 7).map(k => (1L, (k % 3 + 1).toLong, k)).sorted,
+      rows.toString)
+    assertNoEmptinessJobs(sites)
+  }
+
+  test("transitiveClosure: no seeds, or seeds without parents, end the walk at once") {
+    val chain = Seq((1L, 2L))
+    assert(closureRows(chain, Nil)._1.isEmpty)
+    assert(closureRows(chain, Seq(7L))._1 == Seq((7L, 7L, 0)))
+  }
 }

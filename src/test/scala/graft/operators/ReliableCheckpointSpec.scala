@@ -18,8 +18,8 @@ import graft.SparkSpec
   * settings must produce identical output — the conf changes durability,
   * never results. One multi-round CC loop (star contraction — two
   * checkpoints per round) and one budgeted loop (PageRank) cover the
-  * fixpoint and fixed-iteration families. A [[Derived]] pin goes through
-  * the same switch.
+  * fixpoint and fixed-iteration families. A [[Derived]] pin and the
+  * post-processing pipeline (`wikidata.Post`) go through the same switch.
   */
 class ReliableCheckpointSpec extends SparkSpec {
 
@@ -88,5 +88,25 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(files.nonEmpty && files.forall(f =>
       new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(root)), files)
     assert(pinned.orderBy("x").collect().toSeq == df.orderBy("x").collect().toSeq)
+  }
+
+  test("Post.apply under reliableCheckpoint=true checkpoints into the configured dir, same rows") {
+    val (countries, objectLanguages, languages, tes, teParents, cities,
+      citiesCountries, objectLabels) = graft.wikidata.PostSpec.inputs(spark)
+    def post() = graft.wikidata.Post(countries, objectLanguages, languages,
+      tes, teParents, cities, citiesCountries, objectLabels)
+    def rows(f: graft.wikidata.Post.FinalTables): Seq[Seq[String]] =
+      Seq(f.cities, f.citiesLabels, f.citiesLanguages)
+        .map(_.collect().map(_.toString).toSeq.sorted)
+    val plain = rows(post())
+    val reliable = withReliable(ckptDir.getPath)(post())
+    // the final cities table is read back from a reliable checkpoint
+    val files = reliable.cities.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+    }.flatten
+    val root = ckptDir.getCanonicalPath + "/"
+    assert(files.nonEmpty && files.forall(f =>
+      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(root)), files)
+    assert(rows(reliable) == plain)
   }
 }
