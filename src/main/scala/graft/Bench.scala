@@ -63,7 +63,7 @@ object Bench {
     val leaseOps = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
     val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
       try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
-      val (acq0, blk0, _) = graft.operators.Similarity.leaseStatsSnapshot()
+      val (acq0, blk0, _) = graft.operators.Artifact.leaseStatsSnapshot()
       // Sub-second queries are dominated by shared-host scheduling noise
       // (a 0.24 s join was captured at 1.69 s in one driver round), so
       // they get a median-of-3; anything slower is measured once — its
@@ -73,7 +73,7 @@ object Bench {
       val first = timed(fn)
       val runs = if (first >= 0 && first < 0.5) Seq(first, timed(fn), timed(fn))
                  else Seq(first)
-      val (acq1, blk1, _) = graft.operators.Similarity.leaseStatsSnapshot()
+      val (acq1, blk1, _) = graft.operators.Artifact.leaseStatsSnapshot()
       if (acq1 > acq0 || blk1 > blk0) leaseOps(name) = (acq1 - acq0, blk1 - blk0)
       // Nudge the ContextCleaner: accumulated broadcast/checkpoint blocks
       // from one query otherwise bleed GC pressure into the next timing.

@@ -2668,7 +2668,7 @@ object Curation {
     // strictly one after another. The NSW lane stays ss58's shared
     // artifact through its Derived key: first toucher builds+erases,
     // everyone else (including a concurrent toucher, who waits) reads.
-    Similarity.parLadder(Seq[() => Unit](
+    Relational.parLadder(Seq[() => Unit](
       () => {
         // same standing-corpus build — clone the per-JVM pristine store
         // and erase the clone (the dd27/dd29/dd30 discipline)

@@ -2050,7 +2050,7 @@ object Dedup {
     def buildFilters(s: SparkSession, hashesOld: DataFrame, bandsOld: DataFrame)
         : (org.apache.spark.util.sketch.BloomFilter,
            org.apache.spark.util.sketch.BloomFilter) = {
-      val both = Similarity.parLadder(Seq(
+      val both = Relational.parLadder(Seq(
         () => buildHashFilterDf(hashesOld)
           .stat.bloomFilter("hk", expectedItems, fpp),
         () => buildBandFilterDf(bandsOld)

@@ -58,6 +58,9 @@ object DedupStore {
     * [[requestErase]]. */
   private val ErasePending = "_erase_pending"
 
+  /** The store's three tables, in rewrite and swap order. */
+  private val StoreTables = Seq("hashes", "sets", "bands")
+
   /** Build (or rebuild) the store from a full corpus: one tokenize pass,
     * three parquet tables. A rebuild also clears the roll-forward identity
     * sidecar — the appended increments it fingerprinted no longer exist. */
@@ -66,7 +69,7 @@ object DedupStore {
     // a rebuild resets the sidecars: the fingerprinted increments and the
     // pending erasure requests both referred to the replaced content
     for (sidecar <- Seq(RfSidecar, ErasePending))
-      fs(s, dir).delete(new org.apache.hadoop.fs.Path(s"$dir/$sidecar"), true)
+      Artifact.fs(s, dir).delete(new org.apache.hadoop.fs.Path(s"$dir/$sidecar"), true)
     storeBaseCountsMemo.remove(dir) // a rebuild voids the memoized base
     write(docs, dir)
   }
@@ -85,7 +88,7 @@ object DedupStore {
     * appended rows without scanning anything. Untagged stays the manual
     * one-shot path (plain parquet append, no identity).
     *
-    * Both paths append under the store's MUTATION LOCK ([[Similarity
+    * Both paths append under the store's MUTATION LOCK ([[Artifact
     * .withTableLock]] — round 14; the round-13 writer lease closed the
     * same hole but made every micro-batch wait out a full store rewrite):
     * a concurrent maintainer's staged table rewrite (erase/compact on
@@ -97,7 +100,7 @@ object DedupStore {
     * the spent identity and the admitted rows were permanently lost. Now
     * the rewrite holds the lock only for its snapshot→swap BLINK and
     * CARRIES files appended since its snapshot across the swap
-    * ([[Similarity.blinkSwap]]); the append computes and stages its
+    * ([[Artifact.Staged.swap]]); the append computes and stages its
     * increment outside any lock and holds the lock only for its file
     * moves + sidecar merges — O(increment) both sides, so an ingest
     * stream beside an hours-long 100 TB erase stalls for a file-move
@@ -115,8 +118,8 @@ object DedupStore {
         .localCheckpoint()
       val bands = Dedup.lshBands(Dedup.minhashSigsFromSets(sets).drop("sh"))
         .localCheckpoint()
-      Similarity.withTableLock(s, dir) {
-        Similarity.promoteStages(s, dir)
+      Artifact.withTableLock(s, dir) {
+        Artifact.promoteStages(s, dir)
         storeBaseCountsMemo.remove(dir)
         hashes.write.mode("append").parquet(s"$dir/hashes")
         sets.write.mode("append").parquet(s"$dir/sets")
@@ -162,7 +165,7 @@ object DedupStore {
     val fp = s"v2:${fpRow.getLong(0)}:${fpRow.getLong(0)}:${fpRow.getLong(1)}"
     val fpV1 = s"${fpRow.getLong(0)}:${fpRow.getLong(0)}:${fpRow.getLong(2)}"
     def checkSpent(): Boolean =
-      Similarity.appendTagFingerprint(s, dir, tag, RfSidecar) match {
+      Artifact.appendTagFingerprint(s, dir, tag, RfSidecar) match {
         case Some(prev) =>
           val soft = !prev.startsWith("v2:") && prev == fpV1
           if (prev != fp && !soft) throw new IllegalStateException(
@@ -181,7 +184,7 @@ object DedupStore {
     // was flagged) is a no-op past the fingerprint — appending empty
     // files and merging empty blooms would be identity writes
     if (fpRow.getLong(0) == 0L) {
-      Similarity.withTableLock(s, dir) {
+      Artifact.withTableLock(s, dir) {
         if (!checkSpent()) writeRfFingerprint(s, dir, tag, fp)
       }
       return
@@ -193,7 +196,7 @@ object DedupStore {
     // the sets/bands derivation chain (guide §2.6); within that chain the
     // two stage writes overlap once both checkpoints exist. Same jobs,
     // same staged files, shorter critical path.
-    val staged = Similarity.parLadder(Seq[() => DataFrame](
+    val staged = Relational.parLadder(Seq[() => DataFrame](
       () => { stageAppendWrite(s, dir, "hashes", hashesInc, tag,
         partitioned = false); null },
       () => {
@@ -201,7 +204,7 @@ object DedupStore {
         val bands =
           Dedup.lshBands(Dedup.minhashSigsFromSets(setsInc).drop("sh"))
             .localCheckpoint()
-        Similarity.parLadder(Seq[() => Unit](
+        Relational.parLadder(Seq[() => Unit](
           () => stageAppendWrite(s, dir, "sets", setsInc, tag,
             partitioned = false),
           () => stageAppendWrite(s, dir, "bands", bands, tag,
@@ -209,21 +212,23 @@ object DedupStore {
         bands
       }))(f => f())
     val bandsInc = staged(1)
-    Similarity.withTableLock(s, dir) {
-      Similarity.promoteStages(s, dir) // heal a crashed staged compact first
+    Artifact.withTableLock(s, dir) {
+      Artifact.promoteStages(s, dir) // heal a crashed staged compact first
       // re-check under the lock: a concurrent replica of this batch may
       // have landed it since the peek (two live writers on one tag is a
       // deployment bug writeRfFingerprint refuses loudly; a finished
       // replay is a clean no-op here)
       if (checkSpent()) {
-        for (t <- Seq("hashes", "sets", "bands"))
-          fs(s, dir).delete(
+        for (t <- StoreTables)
+          Artifact.fs(s, dir).delete(
             new org.apache.hadoop.fs.Path(stagePathFor(dir, t, tag)), true)
       } else {
-        val retired =
-          moveStagedAppend(s, dir, "hashes", tag) |
-          moveStagedAppend(s, dir, "sets", tag) |
-          moveStagedAppend(s, dir, "bands", tag)
+        // every table moves (no short-circuit), bands into their band=
+        // partitions; `retired` = some table retired same-tag leftovers
+        val retired = StoreTables.map(t =>
+          Artifact.moveTaggedAppend(s, stagePathFor(dir, t, tag), s"$dir/$t",
+            s"rf-$tag", if (t == "bands") Some("band") else None))
+          .contains(true)
         // If this append actually RETIRED same-tag leftovers (the replay
         // of a crashed, fingerprint-less attempt), any memoized base
         // counts are stale: a cold-JVM plan taken while the leftovers sat
@@ -247,7 +252,7 @@ object DedupStore {
 
   private def writeRfFingerprint(s: SparkSession, dir: String, tag: String,
       fp: String): Unit = {
-    val f = fs(s, dir)
+    val f = Artifact.fs(s, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/$RfSidecar/$tag")
     f.mkdirs(p.getParent)
     // overwrite=false: two writers racing on one tag is a deployment bug
@@ -270,63 +275,22 @@ object DedupStore {
     * sized to the increment (`spark.graft.dedup.rowsPerFile`, default 4M)
     * — a day-scale accepted batch at 100 TB must not funnel through one
     * task. Overwrite mode: a crashed prior attempt's stage is replaced
-    * wholesale on replay. */
+    * wholesale on replay. Phase 2, under the mutation lock, moves the
+    * files in as `rf-<tag>-i` ([[Artifact.moveTaggedAppend]]). */
   private def stageAppendWrite(s: SparkSession, dir: String, table: String,
       rows: DataFrame, tag: String, partitioned: Boolean): Unit = {
     val staged = stagePathFor(dir, table, tag)
     if (partitioned)
       rows.repartition(col("band"))
         .write.mode("overwrite").partitionBy("band").parquet(staged)
-    else {
-      val rowsPerFile =
-        Similarity.confInt(s, "spark.graft.dedup.rowsPerFile", 4000000).toLong
-      val n = rows.count()
-      val nFiles = math.max(1L, (n + rowsPerFile - 1L) / rowsPerFile).toInt
-      rows.repartition(nFiles).write.mode("overwrite").parquet(staged)
-    }
+    else rows.repartition(filesFor(s, rows.count()))
+      .write.mode("overwrite").parquet(staged)
   }
 
-  /** Phase 2 (call under the mutation lock): move the staged files into
-    * the table under deterministic `rf-<tag>-i` names, retiring any
-    * same-tag leftovers of a previous partially-moved attempt first (the
-    * [[Similarity]] index tiers' staged-append discipline). Returns
-    * whether any same-tag leftovers were retired — the caller's signal
-    * that a crashed partial append was replayed (and any base counts
-    * memoized over the leftovers are stale). */
-  private def moveStagedAppend(s: SparkSession, dir: String, table: String,
-      tag: String): Boolean = {
-    val staged = stagePathFor(dir, table, tag)
-    val tableDir = s"$dir/$table"
-    val f = fs(s, tableDir)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    var retired = false
-    def moveInto(src: org.apache.hadoop.fs.Path,
-        dest: org.apache.hadoop.fs.Path): Unit = {
-      f.mkdirs(dest)
-      for (old <- f.listStatus(dest)
-          if old.getPath.getName.startsWith(s"rf-$tag-")) {
-        f.delete(old.getPath, false)
-        retired = true
-      }
-      val files = f.listStatus(src)
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-          && !st.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-      for ((st, i) <- files.zipWithIndex)
-        f.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(dest, s"rf-$tag-$i.parquet"))
-    }
-    val stagedRoot = new org.apache.hadoop.fs.Path(staged)
-    val parts = f.listStatus(stagedRoot)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("band="))
-    if (parts.nonEmpty)
-      for (part <- parts)
-        moveInto(part.getPath,
-          new org.apache.hadoop.fs.Path(root, part.getPath.getName))
-    else moveInto(stagedRoot, root)
-    f.delete(stagedRoot, true)
-    retired
-  }
+  /** The file count of a flat store table (or ledger) of `rows` rows,
+    * sized by `spark.graft.dedup.rowsPerFile` (default 4M). */
+  private def filesFor(s: SparkSession, rows: Long): Int =
+    Artifact.sizedFiles(s, "spark.graft.dedup.rowsPerFile", rows)
 
   /** Merge increment-built bloom filters into the standing sidecars (or
     * rebuild from the full tables when no merge-compatible pair exists —
@@ -374,7 +338,7 @@ object DedupStore {
     // (guide §2.6, the NSW build-verb discipline): one job's stage tail
     // back-fills the other's idle executors. The ladder preserves both
     // jobs and both outputs; only the serialization between them goes.
-    Similarity.parLadder(Seq(
+    Relational.parLadder(Seq(
       () => Dedup.shingleSets(docs).write.mode("overwrite")
         .parquet(s"$dir/sets"),
       () => docs.select(md5(col("text")).as("h"), col("doc_id"))
@@ -384,7 +348,7 @@ object DedupStore {
     // just-written hashes table — independent of the bands write, so the
     // two overlap from the same ladder shape. The band-side bloom needs
     // the bands on disk and runs after.
-    val results = Similarity.parLadder(Seq[() => AnyRef](
+    val results = Relational.parLadder(Seq[() => AnyRef](
       () => { Dedup.lshBands(Dedup.minhashSigsFromSets(setsBack).drop("sh"))
         .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
         null },
@@ -404,10 +368,6 @@ object DedupStore {
     writeBloomFiles(s, dir, fh, fb)
   }
 
-  private def fs(s: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-
   // Sidecar FORMAT VERSION, part of the file name: v2 keys the hash
   // filter on xxhash64(h) BIGINTs (the native-expression key domain)
   // where v1 inserted raw md5-hex strings. A v1 sidecar probed with v2
@@ -423,7 +383,7 @@ object DedupStore {
   private def writeBloomFiles(s: SparkSession, dir: String,
       bh: org.apache.spark.util.sketch.BloomFilter,
       bb: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val f = fs(s, dir)
+    val f = Artifact.fs(s, dir)
     // Every v2 write retires the unversioned v1 names: v2 readers never
     // open them, so after the first v2 write they are dead megabyte-scale
     // files sitting next to the store forever. Idempotent, no-op once gone.
@@ -447,7 +407,7 @@ object DedupStore {
   private def readBloomFiles(s: SparkSession, dir: String)
       : Option[(org.apache.spark.util.sketch.BloomFilter,
                 org.apache.spark.util.sketch.BloomFilter)] = {
-    val f = fs(s, dir)
+    val f = Artifact.fs(s, dir)
     def one(name: String) = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$name.bin")
       if (!f.exists(p)) None
@@ -498,7 +458,7 @@ object DedupStore {
       // over). The ledger folds are O(pending) and hold the same lock for
       // their whole (short) body, so the request lands without waiting
       // out a table rewrite (round 14).
-      Similarity.withTableLock(s, dir) {
+      Artifact.withTableLock(s, dir) {
         batch.write.mode("append").parquet(s"$dir/$ErasePending")
       }
   }
@@ -511,7 +471,7 @@ object DedupStore {
   private def pendingErasures(s: SparkSession, dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$ErasePending")
     try {
-      if (!fs(s, dir).exists(p)) None
+      if (!Artifact.fs(s, dir).exists(p)) None
       else Some(s.read.parquet(s"$dir/$ErasePending")
         .select(col("doc_id")).distinct())
     } catch {
@@ -543,13 +503,13 @@ object DedupStore {
     * every store read is exactly the driver-state class the engine
     * exists to avoid at 100 TB. */
   def read(s: SparkSession, dir: String): Store = {
-    Similarity.promoteStages(s, dir)
-    val pending = Similarity.retryOnMissingFiles(s, dir) {
+    Artifact.promoteStages(s, dir)
+    val pending = Artifact.retryOnMissingFiles(s, dir) {
       // checkpoint pins the ledger snapshot against a concurrent erase's
       // ledger delete; the retry covers the listing→checkpoint window
       pendingErasures(s, dir).map(_.localCheckpoint())
     }
-    val hintCap = Similarity.confInt(
+    val hintCap = Artifact.confInt(
       s, "spark.graft.dedup.eraseScreenBroadcastRows", 4000000).toLong
     val pendingSide = pending.map(p =>
       if (p.count() <= hintCap) broadcast(p) else p)
@@ -569,10 +529,10 @@ object DedupStore {
     * under the per-doc hash layout there is no cross-increment hash
     * duplication left to collapse). Answers are unchanged — consumers
     * semi-join hashes and equi-join bands, both multiplicity-insensitive.
-    * Each table rewrite goes through the staged
-    * writer: a crash mid-write leaves the readable original, and a death
-    * inside the delete→rename blink self-heals on the next [[read]] via
-    * promoteStages (the round-10 verdict #1 shape — the old bespoke
+    * Each table rewrite goes through the staged rewrite
+    * ([[rewriteStore]]): a crash mid-write leaves the readable original,
+    * and a death inside the delete→rename blink self-heals on the next
+    * [[read]] via promoteStages (the round-10 verdict #1 shape — the old bespoke
     * delete+rename here could leave a table missing with a finished
     * `.compact_` copy nothing promoted). Loose roll-forward fingerprints
     * are retired into a `_spent_<gen>` manifest LAST: the rewrite folded
@@ -581,80 +541,68 @@ object DedupStore {
     * before the retire just leaves `compact_due` still true for the next
     * maintenance pass to finish (answers unchanged throughout). */
   def compact(s: SparkSession, dir: String): Unit =
-      Similarity.withWriterLease(s, dir) {
-    Similarity.promoteStages(s, dir)
-    // TWO-PHASE (round 14, [[Similarity.blinkSwap]]): the O(store)
-    // rewrites derive from SNAPSHOT listings and land in the promotable
-    // .stage_ dirs while appends keep landing in the live tables; the
-    // mutation lock is held only for the carry+swap blink at the end.
-    val snaps = Seq("hashes", "sets", "bands")
-      .map(t => t -> Similarity.listTableFiles(s, s"$dir/$t")).toMap
-    def snapped(table: String): DataFrame =
-      Similarity.readTableSnapshot(s, s"$dir/$table", snaps(table))
-    Similarity.testRewriteDelay(s)
-    def rewrite(table: String, df: DataFrame, partitionCols: Seq[String]): Unit =
-      Similarity.prepareStage(s, s"$dir/$table") { tmp =>
-        val w = df.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(tmp)
-      }
     // file counts sized to the SET (footer-row estimate / rowsPerFile — the
     // tombstone-writer discipline), not to defaultParallelism: a fixed-width
     // rewrite leaves a small store fragmented past the file dial (an
-    // immediate re-compact loop) and a 100 TB store funneled into 32 tasks
-    def filesFor(table: String): Int = {
-      val rowsPerFile =
-        Similarity.confInt(s, "spark.graft.dedup.rowsPerFile", 4000000).toLong
-      val rows = snapped(table).count() // footer-only
-      math.max(1L, (rows + rowsPerFile - 1L) / rowsPerFile).toInt
-    }
-    // The three staged rewrites read disjoint snapshots and write disjoint
-    // .stage_ dirs — independent jobs, overlapped from the bounded ladder
-    // (guide §2.6, the NSW/erase discipline): each rewrite's stage tail
-    // back-fills the next one's scan. Same three jobs, same staged tables.
+    // immediate re-compact loop) and a 100 TB store funneled into 32 tasks.
     // Bands repartition ON the band column so each band's rows land in one
     // task: the rewrite restores ONE file per band partition no matter how
     // many roll-forwards fragmented it. (At sizes where a single band
     // outgrows one task, add a second split key here — the partition
     // layout and its consumers don't change.)
-    Similarity.parLadder(Seq(
-      () => rewrite("hashes",
-        snapped("hashes").distinct().repartition(filesFor("hashes")),
-        Seq.empty),
-      () => rewrite("sets",
-        snapped("sets").repartition(filesFor("sets")), Seq.empty),
-      () => rewrite("bands",
-        snapped("bands").repartition(col("band")), Seq("band"))))(f => f())
-    // Rebuild the bloom sidecars from the compacted (staged) tables —
-    // same content (blooms have no deletes to lose), but derived from one
-    // source of truth instead of a merge chain. Carried appends' members
-    // merge in at the blink below, so the sidecars can never miss a
-    // member whose rows are in the tables.
+    rewriteStore(s, dir) {
+      case ("hashes", snap) =>
+        snap.distinct().repartition(filesFor(s, snap.count())) // footer-only
+      case ("sets", snap) => snap.repartition(filesFor(s, snap.count()))
+      case (_, bands) => bands.repartition(col("band"))
+    }
+
+  /** The store rewrite [[compact]] and [[erase]] share, differing only in
+    * `replace` (each table's replacement, from its snapshot rows) and
+    * `inBlink` (erase's ledger fold). TWO-PHASE (round 14,
+    * [[Artifact.prepareRewrite]]): the O(store) rewrites derive from
+    * SNAPSHOT listings and land in the promotable .stage_ dirs while
+    * appends keep landing in the live tables — three independent jobs over
+    * disjoint snapshots, overlapped. The bloom sidecars are rebuilt from
+    * the staged tables — derived from one source of truth instead of a
+    * merge chain; for erase, the rebuild is the privacy half (the sidecars
+    * must stop fingerprinting the erased content). The mutation lock is
+    * held only for the BLINK: swap, fold the carried appends' members into
+    * the blooms, `inBlink`, retire the loose roll-forward fingerprints,
+    * reset the base-counts memo. */
+  private def rewriteStore(s: SparkSession, dir: String, inBlink: => Unit = ())(
+      replace: (String, DataFrame) => DataFrame): Unit =
+      Artifact.withWriterLease(s, dir) {
+    val staged = Artifact.prepareRewrite(s, dir, StoreTables) { (t, snap) =>
+      val w = replace(t, snap).write
+      if (t == "bands") w.partitionBy("band") else w
+    }
     val (rh, rb) = Dedup.BloomPrefilter.buildFilters(s,
-      s.read.parquet(s"$dir/.stage_hashes"),
-      s.read.option("basePath", s"$dir/.stage_bands")
-        .parquet(s"$dir/.stage_bands")
+      s.read.parquet(staged.dirOf("hashes")),
+      s.read.option("basePath", staged.dirOf("bands"))
+        .parquet(staged.dirOf("bands"))
         .withColumn("band", col("band").cast("int")))
-    Similarity.withTableLock(s, dir) {
-      swapAndMergeCarried(s, dir, snaps, rh, rb)
-      Similarity.compactAppendTags(s, dir, RfSidecar)
+    staged.swap { carried =>
+      mergeCarried(s, dir, carried, rh, rb)
+      inBlink
+      Artifact.compactAppendTags(s, dir, RfSidecar)
       storeBaseCountsMemo.remove(dir) // the rewrite changed the base counts
     }
   }
 
-  /** The store rewrite's BLINK (call under the mutation lock): swap all
-    * three staged tables in — [[Similarity.blinkSwap]] carries any files
-    * appended since the snapshots across each swap — then write the
-    * sidecar blooms, folding the carried increments' members into the
-    * stage-built filters first (an increment-sized build + bitwise OR,
-    * the appendBloomSidecars merge shape; never an O(store) rescan). */
-  private def swapAndMergeCarried(s: SparkSession, dir: String,
-      snaps: Map[String, Set[String]],
+  /** Part of the store rewrite's BLINK (call under the mutation lock),
+    * after the swap carried files appended since the snapshots across
+    * (`carried`, per table): write the sidecar blooms, folding the carried
+    * increments' members into the stage-built filters first (an
+    * increment-sized build + bitwise OR, the appendBloomSidecars merge
+    * shape; never an O(store) rescan), so the sidecars can never miss a
+    * member whose rows are in the tables. */
+  private def mergeCarried(s: SparkSession, dir: String,
+      carried: Map[String, Seq[String]],
       rh: org.apache.spark.util.sketch.BloomFilter,
       rb: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val carH = Similarity.blinkSwap(s, s"$dir/hashes", snaps("hashes"))
-    Similarity.blinkSwap(s, s"$dir/sets", snaps("sets"))
-    val carB = Similarity.blinkSwap(s, s"$dir/bands", snaps("bands"))
+    val carH = carried("hashes")
+    val carB = carried("bands")
     if (carH.nonEmpty || carB.nonEmpty) {
       def carriedDf(table: String, rels: Seq[String]): DataFrame =
         if (rels.isEmpty) s.read.parquet(s"$dir/$table").limit(0)
@@ -702,8 +650,8 @@ object DedupStore {
 
   def dedupMaintenancePlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Similarity.promoteStages(s, dir)
-    val f = fs(s, dir)
+    Artifact.promoteStages(s, dir)
+    val f = Artifact.fs(s, dir)
     val root = new org.apache.hadoop.fs.Path(s"$dir/$RfSidecar")
     // loose fingerprints = increments appended since the last compaction
     // (a compact retires them into the _spent_ manifest — folded, but
@@ -714,7 +662,7 @@ object DedupStore {
             !st.getPath.getName.startsWith(".") => st.getPath.getName
       }
     val looseCounts = loose.map { t =>
-      val fp = Similarity.appendTagFingerprint(s, dir, t, RfSidecar)
+      val fp = Artifact.appendTagFingerprint(s, dir, t, RfSidecar)
         .getOrElse("0:0:0").split(':')
       val off = if (fp(0) == "v2") 1 else 0 // v1 tags have no version field
       (fp(off).toLong, fp(off + 1).toLong) // (setRows, hashRows)
@@ -733,7 +681,7 @@ object DedupStore {
       storeBaseCountsMemo.put(dir, base)
       base
     }
-    val pct = Similarity.confInt(s, "spark.graft.dedup.compactAppendPct", 5)
+    val pct = Artifact.confInt(s, "spark.graft.dedup.compactAppendPct", 5)
     val due = if (appendedSetRows * 100L > baseS * pct) 1L else 0L
     // deferred-erasure half: pending requests screened at read cost an
     // anti-join per consumer until the physical pass retires them — the
@@ -745,8 +693,8 @@ object DedupStore {
     // screen's working set would reach 100M ids before the pct fired;
     // the absolute cap bounds it by a constant at any corpus size.
     val pendingN = pendingErasures(s, dir).map(_.count()).getOrElse(0L)
-    val erasePct = Similarity.confInt(s, "spark.graft.dedup.erasePendingPct", 1)
-    val eraseMaxRows = Similarity.confInt(
+    val erasePct = Artifact.confInt(s, "spark.graft.dedup.erasePendingPct", 1)
+    val eraseMaxRows = Artifact.confInt(
       s, "spark.graft.dedup.erasePendingMaxRows", 4000000).toLong
     val eraseDue = if (pendingN > 0L &&
       (pendingN * 100L > (baseS + appendedSetRows) * erasePct ||
@@ -793,7 +741,7 @@ object DedupStore {
   def maintainDedupStore(s: SparkSession, dir: String): Map[String, Long] = {
     val plan = dedupMaintenancePlan(s, dir).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val f = fs(s, dir)
+    val f = Artifact.fs(s, dir)
     def dataFiles(p: org.apache.hadoop.fs.Path): Long =
       if (!f.exists(p)) 0L
       else f.listStatus(p).count(st => st.isFile &&
@@ -808,14 +756,10 @@ object DedupStore {
     val perBandMax = if (perBand.isEmpty) 0L else perBand.max
     val hashFiles = dataFiles(new org.apache.hadoop.fs.Path(s"$dir/hashes"))
     val setFiles = dataFiles(new org.apache.hadoop.fs.Path(s"$dir/sets"))
-    val maxPer = Similarity.confInt(s, "spark.graft.dedup.maxFilesPerTable", 8)
-    val rowsPerFile =
-      Similarity.confInt(s, "spark.graft.dedup.rowsPerFile", 4000000).toLong
-    def baselineFiles(rows: Long): Long =
-      math.max(1L, (rows + rowsPerFile - 1L) / rowsPerFile)
+    val maxPer = Artifact.confInt(s, "spark.graft.dedup.maxFilesPerTable", 8)
     val flatExcess = math.max(
-      hashFiles - baselineFiles(plan("store_hash_rows")),
-      setFiles - baselineFiles(plan("store_set_rows")))
+      hashFiles - filesFor(s, plan("store_hash_rows")),
+      setFiles - filesFor(s, plan("store_set_rows")))
     val filesMax = (perBand.toSeq :+ hashFiles :+ setFiles).max
     val due = plan("compact_due") == 1L || perBandMax > maxPer ||
       flatExcess > maxPer
@@ -830,7 +774,7 @@ object DedupStore {
     // marker-pruning amortization pointed at the erase ledger.
     val ledgerN = dataFiles(new org.apache.hadoop.fs.Path(s"$dir/$ErasePending"))
     val maxLedger =
-      Similarity.confInt(s, "spark.graft.dedup.maxEraseLedgerFiles", 8)
+      Artifact.confInt(s, "spark.graft.dedup.maxEraseLedgerFiles", 8)
     val ledgerFoldDue = !eraseDue && ledgerN > maxLedger
     // due work runs under the cross-JVM lease: a concurrent maintainer
     // (another stream's autoMaintain, a nightly job) holding it makes this
@@ -842,7 +786,7 @@ object DedupStore {
     // compact (the next plan re-evaluates from the folded state).
     val (erased, ran, folded, yielded) =
       if (!due && !eraseDue && !ledgerFoldDue) (0L, 0L, 0L, 0L)
-      else Similarity.withMaintenanceLease(s, dir)((0L, 0L, 0L, 1L)) {
+      else Artifact.withMaintenanceLease(s, dir)((0L, 0L, 0L, 1L)) {
         if (eraseDue) {
           pendingErasures(s, dir).foreach(p => erase(s, dir, p))
           (1L, 0L, 0L, 0L)
@@ -867,20 +811,21 @@ object DedupStore {
     * the staged delete+rename window would otherwise be swept — the
     * lost-append shape. O(pending) body, so holding the lock is cheap. */
   private def foldEraseLedger(s: SparkSession, dir: String): Unit =
-    Similarity.withWriterLease(s, dir) {
-      Similarity.withTableLock(s, dir) {
-      pendingErasures(s, dir).foreach { p =>
-        val pinned = p.localCheckpoint()
-        val rowsPerFile = Similarity.confInt(
-          s, "spark.graft.dedup.rowsPerFile", 4000000).toLong
-        val nFiles = math.max(1L,
-          (pinned.count() + rowsPerFile - 1L) / rowsPerFile).toInt
-        Similarity.stagedWrite(s, s"$dir/$ErasePending") { tmp =>
-          pinned.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-        }
-      }
+    Artifact.withWriterLease(s, dir) {
+      Artifact.withTableLock(s, dir) {
+        pendingErasures(s, dir).foreach(p => writeLedger(s, dir, p.localCheckpoint()))
       }
     }
+
+  /** The one erase-ledger writer: staged overwrite of `_erase_pending/`
+    * with `ids`, in files sized to the set — not coalesce(1) (round-13
+    * advice). */
+  private def writeLedger(s: SparkSession, dir: String, ids: DataFrame): Unit = {
+    val nFiles = filesFor(s, ids.count())
+    Artifact.stagedWrite(s, s"$dir/$ErasePending") { tmp =>
+      ids.repartition(nFiles).write.mode("overwrite").parquet(tmp)
+    }
+  }
 
   /** GDPR/right-to-be-forgotten erasure for the DERIVED artifact — the
     * missing half of tp12's corpus-table erasure: the store retains
@@ -914,70 +859,26 @@ object DedupStore {
     // blocking order (erase, then append), because an increment admitted
     // after the erase began was never subject to it.
     val ids = erasedIds.select(col("doc_id")).localCheckpoint()
-    Similarity.withWriterLease(s, dir) {
-    Similarity.promoteStages(s, dir)
-    val snaps = Seq("hashes", "sets", "bands")
-      .map(t => t -> Similarity.listTableFiles(s, s"$dir/$t")).toMap
-    def snapped(table: String): DataFrame =
-      Similarity.readTableSnapshot(s, s"$dir/$table", snaps(table))
-    Similarity.testRewriteDelay(s)
-    def rewrite(table: String, df: DataFrame, partitionCols: Seq[String]): Unit =
-      Similarity.prepareStage(s, s"$dir/$table") { tmp =>
-        val w = df.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(tmp)
-      }
-    // three independent survivor anti-join rewrites (disjoint snapshots,
-    // disjoint .stage_ dirs) — overlapped, the eraseFromNswIndex shape
-    // (guide §2.6); same jobs, same staged tables, shorter critical path
-    Similarity.parLadder(Seq(
-      () => rewrite("hashes",
-        snapped("hashes").join(ids, Seq("doc_id"), "left_anti"),
-        Seq.empty),
-      () => rewrite("sets",
-        snapped("sets").join(ids, Seq("doc_id"), "left_anti"),
-        Seq.empty),
-      () => rewrite("bands",
-        snapped("bands")
-          .withColumn("band", col("band").cast("int"))
-          .join(ids, Seq("doc_id"), "left_anti")
-          .repartition(col("band")), Seq("band"))))(f => f())
-    // blooms from the staged (erased) tables: the rebuild is the privacy
-    // half — the sidecars must stop fingerprinting the erased content
-    val (rh, rb) = Dedup.BloomPrefilter.buildFilters(s,
-      s.read.parquet(s"$dir/.stage_hashes"),
-      s.read.option("basePath", s"$dir/.stage_bands")
-        .parquet(s"$dir/.stage_bands")
-        .withColumn("band", col("band").cast("int")))
-    Similarity.withTableLock(s, dir) {
-      swapAndMergeCarried(s, dir, snaps, rh, rb)
-      // fulfilled deferred requests leave the ledger ([[requestErase]]):
-      // rewrite pending minus the erased ids (staged), delete when empty —
-      // a maintenance-run erase self-clears and the read screen returns to
-      // the zero-cost steady state. A crash before this fold just leaves
-      // no-op screens (the rows are already gone) and a re-firing dial
-      // whose next erase is a no-op anti-join — convergent. Inside the
-      // blink (a concurrent requestErase appends under the same lock),
-      // reading the LIVE ledger so requests that arrived mid-rewrite
-      // stay pending; sized files, not coalesce(1) (round-13 advice).
-      pendingErasures(s, dir).foreach { p =>
-        val left = p.join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-        if (left.isEmpty)
-          fs(s, dir).delete(
-            new org.apache.hadoop.fs.Path(s"$dir/$ErasePending"), true)
-        else {
-          val rowsPerFile = Similarity.confInt(
-            s, "spark.graft.dedup.rowsPerFile", 4000000).toLong
-          val nFiles = math.max(1L,
-            (left.count() + rowsPerFile - 1L) / rowsPerFile).toInt
-          Similarity.stagedWrite(s, s"$dir/$ErasePending") { tmp =>
-            left.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-          }
-        }
-      }
-      Similarity.compactAppendTags(s, dir, RfSidecar)
-      storeBaseCountsMemo.remove(dir) // the rewrite changed the base counts
+    // fulfilled deferred requests leave the ledger ([[requestErase]],
+    // [[Artifact.foldLedger]]): rewrite pending minus the erased ids
+    // (staged), delete when empty — a maintenance-run erase self-clears and
+    // the read screen returns to the zero-cost steady state. A crash before
+    // this fold just leaves no-op screens (the rows are already gone) and a
+    // re-firing dial whose next erase is a no-op anti-join — convergent.
+    // Inside the blink (a concurrent requestErase appends under the same
+    // lock), reading the LIVE ledger so requests that arrived mid-rewrite
+    // stay pending.
+    def foldPending(): Unit = pendingErasures(s, dir).foreach { p =>
+      Artifact.foldLedger(s, s"$dir/$ErasePending",
+        p.join(ids, Seq("doc_id"), "left_anti"))(writeLedger(s, dir, _))
     }
+    // each table's survivors: an exact anti-join on doc_id
+    rewriteStore(s, dir, inBlink = foldPending()) {
+      case ("bands", bands) =>
+        bands.withColumn("band", col("band").cast("int"))
+          .join(ids, Seq("doc_id"), "left_anti")
+          .repartition(col("band"))
+      case (_, snap) => snap.join(ids, Seq("doc_id"), "left_anti")
     }
   }
 
@@ -986,7 +887,7 @@ object DedupStore {
     * mixed schema or erasing incorrectly — rebuild the store once. */
   private def requireErasableLayout(s: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    if (fs(s, dir).exists(p) &&
+    if (Artifact.fs(s, dir).exists(p) &&
         !s.read.parquet(s"$dir/hashes").columns.contains("doc_id"))
       throw new IllegalStateException(
         s"store at $dir uses the pre-round-11 hash layout (no doc_id); " +

@@ -222,6 +222,36 @@ object Relational {
     }
   }
 
+  /** Run a ladder's independent rungs from a small thread pool so each
+    * rung's jobs back-fill the executor slots the previous rung's stage
+    * tail leaves idle (guide §2.6: actions are only sequential because
+    * the driver calls them sequentially). Result order is the input
+    * order — execution overlap never reorders the returned Seq — and
+    * each rung's lineage is its own (the artifact builds the rungs share
+    * are [[Derived]] keys, so a racing first touch waits instead of
+    * double-building). Pool is per-call and bounded:
+    * 2-3 in-flight jobs fill a stage tail; more just contend. */
+  private[operators] def parLadder[A, B](xs: Seq[A], par: Int = 3)(f: A => B): Seq[B] =
+    if (xs.lengthCompare(2) < 0) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(par, xs.size))
+      try {
+        val futs = xs.map { x =>
+          pool.submit(new java.util.concurrent.Callable[B] {
+            override def call(): B = f(x)
+          })
+        }
+        futs.map { fut =>
+          try fut.get()
+          catch { // surface the rung's own failure, not the wrapper
+            case e: java.util.concurrent.ExecutionException =>
+              throw e.getCause
+          }
+        }
+      } finally pool.shutdown()
+    }
+
   /** Iterative frontier expansion, the Spark shape of WITH RECURSIVE.
     * `edges` has columns (id, parent); `seeds` a single column `seed`.
     * Returns (seed, node, step) with step 0 = the seed itself.

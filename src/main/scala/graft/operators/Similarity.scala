@@ -26,7 +26,15 @@ import graft.Tables
   * bit-identical IEEE math in Spark and DuckDB.
   */
 object Similarity {
-  import Relational.Q
+  import Relational.{Q, parLadder}
+  import Artifact.{appendTagFingerprint, compactAppendTags, confInt,
+    promoteStages, stagedWrite, withMaintenanceLease, withTableLock,
+    withWriterLease}
+
+  /** Lock telemetry under the name the benchmark harness reads; the
+    * counters live in [[Artifact]]. */
+  private[graft] def leaseStatsSnapshot(): (Long, Long, Long) =
+    Artifact.leaseStatsSnapshot()
 
   private val K = 10
   private val numPlanes = 8
@@ -1028,173 +1036,6 @@ object Similarity {
   // =====================================================================
   private val nswEdgeRangeParts = 16
 
-  private def hadoopFs(s: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-
-  /** Staged overwrite of one index table: write to a dot-temp dir, then
-    * delete+rename. Crash-safe (a crash mid-write leaves the readable
-    * original) AND read-safe for the roll-forward, whose new edge list is
-    * derived lazily FROM the table being replaced — the temp write
-    * materializes it before the original is touched. */
-  private[graft] def stagedWrite(s: SparkSession, dest: String)(
-      write: String => Unit): Unit = {
-    val tmp = dest.replaceAll("/([^/]+)$", "/.stage_$1")
-    write(tmp)
-    val f = hadoopFs(s, dest)
-    val dst = new org.apache.hadoop.fs.Path(dest)
-    f.delete(dst, true)
-    f.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-  }
-
-  /** Crash recovery for [[stagedWrite]]'s residual window (round-8 advice:
-    * a death between its delete and rename leaves the destination missing
-    * with the COMPLETE staged copy behind): promote any `.stage_<name>`
-    * child of `parent` whose write finished (`_SUCCESS` present) and whose
-    * destination is missing. No-op when the destination exists — the stage
-    * dir is then a dead temp the next staged write overwrites. Readers
-    * call this, so a post-crash serve self-heals instead of failing on a
-    * missing table. */
-  private[graft] def promoteStages(s: SparkSession, parent: String): Unit = {
-    val f = hadoopFs(s, parent)
-    val p = new org.apache.hadoop.fs.Path(parent)
-    if (f.exists(p))
-      for (st <- f.listStatus(p)
-          if st.isDirectory && st.getPath.getName.startsWith(".stage_")) {
-        val dest = new org.apache.hadoop.fs.Path(p,
-          st.getPath.getName.stripPrefix(".stage_"))
-        if (!f.exists(dest) &&
-            f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-          f.rename(st.getPath, dest)
-      }
-  }
-
-  // ---------------------------------------------------------------------
-  // TWO-PHASE rewrite (round-13 verdict #1 — the no-stall-then-lands
-  // discipline): an O(artifact) rewrite must not exclude O(increment)
-  // appends for its whole wall. PREPARE (under the rewrite lease only):
-  // snapshot the table's file listing, derive the replacement from
-  // EXACTLY those files, write it into the promotable `.stage_<table>`
-  // dir — appends keep landing in the live table throughout. BLINK
-  // (under [[withTableLock]]): diff the live listing against the
-  // snapshot, COPY every file appended since into the stage dir (copy,
-  // not move — a crash before the swap must leave the live table intact,
-  // and a crash inside the delete→rename window then promotes a stage
-  // that already CONTAINS the carried appends), then delete+rename.
-  // promoteStages ignores a complete stage whose destination exists, so
-  // the finished phase-1 stage is inert to concurrent readers until the
-  // swap.
-  // ---------------------------------------------------------------------
-
-  /** Recursive data-file listing of a table dir as table-relative paths —
-    * the same set a parquet reader loads (hidden dot/underscore names are
-    * skipped at every level). Absent dir = empty. */
-  private[graft] def listTableFiles(s: SparkSession, tableDir: String)
-      : Set[String] = {
-    val f = hadoopFs(s, tableDir)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!f.exists(root)) return Set.empty
-    val out = scala.collection.mutable.Set.empty[String]
-    def walk(p: org.apache.hadoop.fs.Path, rel: String): Unit =
-      for (st <- f.listStatus(p)) {
-        val n = st.getPath.getName
-        if (!n.startsWith(".") && !n.startsWith("_")) {
-          val r = if (rel.isEmpty) n else s"$rel/$n"
-          if (st.isDirectory) walk(st.getPath, r) else out += r
-        }
-      }
-    walk(root, "")
-    out.toSet
-  }
-
-  /** Read exactly the snapshotted files of a table (basePath recovers any
-    * hive partition columns), so a rewrite's input is pinned to its
-    * snapshot — a file appended between the snapshot and the read is
-    * neither double-counted by the rewrite nor missed by the blink's
-    * carry diff. */
-  private[graft] def readTableSnapshot(s: SparkSession, tableDir: String,
-      files: Set[String]): DataFrame =
-    if (files.isEmpty) s.read.parquet(tableDir)
-    else s.read.option("basePath", tableDir)
-      .parquet(files.toSeq.sorted.map(r => s"$tableDir/$r"): _*)
-
-  /** Phase 1 of a two-phase rewrite: write the replacement into the
-    * promotable `.stage_<table>` dir WITHOUT swapping. */
-  private[graft] def prepareStage(s: SparkSession, dest: String)(
-      write: String => Unit): Unit =
-    write(dest.replaceAll("/([^/]+)$", "/.stage_$1"))
-
-  /** Phase 2 (call under [[withTableLock]]): carry files appended since
-    * `snapshot` into the stage dir by COPY, then swap. Returns the
-    * carried table-relative paths (under the NEW live table) so the
-    * caller can fold their rows into any derived sidecars. */
-  private[graft] def blinkSwap(s: SparkSession, tableDir: String,
-      snapshot: Set[String]): Seq[String] = {
-    val f = hadoopFs(s, tableDir)
-    val stage = new org.apache.hadoop.fs.Path(
-      tableDir.replaceAll("/([^/]+)$", "/.stage_$1"))
-    val live = new org.apache.hadoop.fs.Path(tableDir)
-    val carried = (listTableFiles(s, tableDir) -- snapshot).toSeq.sorted
-    for (rel <- carried) {
-      val dst = new org.apache.hadoop.fs.Path(stage, rel)
-      f.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(f, new org.apache.hadoop.fs.Path(live, rel),
-        f, dst, false, true, s.sparkContext.hadoopConfiguration)
-    }
-    f.delete(live, true)
-    if (!f.rename(stage, live) && !f.exists(live))
-      throw new java.io.IOException(
-        s"two-phase swap failed to promote $stage over $tableDir")
-    carried
-  }
-
-  /** Run `body` (a serve that materializes its result), retrying through
-    * a heal when a CONCURRENT maintenance swap yanked files mid-scan
-    * (round-10 advice: autoMaintain folds/compacts inside foreachBatch
-    * while beamServeStream may be serving the same artifact — a lazy plan
-    * that listed the pre-fold files can hit FileNotFound at task time).
-    * The staged writers guarantee a consistent table exists at every
-    * instant except the delete→rename blink; the retry re-plans from a
-    * fresh listing after promoting any crashed stage, which is exactly
-    * the recovery a restarted reader would perform — bounded, because a
-    * fold is not a livelock source (the policy folds once per due state).
-    * Retries re-execute `body` from scratch, so `body` must be
-    * side-effect-idempotent (the serve sinks are marker-gated or
-    * deterministic overwrites). */
-  private[graft] def retryOnMissingFiles[T](s: SparkSession, idxDir: String)(
-      body: => T): T = {
-    def missingFile(e: Throwable): Boolean = {
-      var cur = e
-      var seen = List.empty[Throwable]
-      while (cur != null && !seen.exists(_ eq cur)) {
-        // task-time (a listed file was yanked mid-scan) and plan-time (a
-        // whole table dir vanished between exists() and read) shapes both
-        // count — the latter is how a raced read of a just-deleted
-        // edges_delta/ or a mid-swap lists/ surfaces
-        if (cur.isInstanceOf[java.io.FileNotFoundException] ||
-            (cur.getMessage != null &&
-              (cur.getMessage.contains("FileNotFoundException") ||
-                cur.getMessage.contains("PATH_NOT_FOUND") ||
-                cur.getMessage.contains("Path does not exist")))) return true
-        seen ::= cur
-        cur = cur.getCause
-      }
-      false
-    }
-    var attempts = 0
-    var out: Option[T] = None
-    while (out.isEmpty) {
-      try out = Some(body)
-      catch {
-        case e: Throwable if attempts < 2 && missingFile(e) =>
-          attempts += 1
-          promoteStages(s, idxDir)
-          promoteStages(s, s"$idxDir/ivf")
-      }
-    }
-    out.get
-  }
-
   /** Create a copy-on-write OVERLAY over a built index: `overlayDir` holds
     * only a `_base` pointer (and, once a caller tombstones it, its own
     * `tombstones/`); reads of ivf/edges/entries resolve through the
@@ -1205,7 +1046,7 @@ object Similarity {
     * ss28/ss36/ss37/ss40 also serve from). */
   private[operators] def overlayNswIndex(s: SparkSession, baseIdx: String,
       overlayDir: String): Unit = {
-    val f = hadoopFs(s, overlayDir)
+    val f = Artifact.fs(s, overlayDir)
     f.mkdirs(new org.apache.hadoop.fs.Path(overlayDir))
     val out = f.create(new org.apache.hadoop.fs.Path(s"$overlayDir/_base"), true)
     try out.write(baseIdx.getBytes("UTF-8")) finally out.close()
@@ -1222,7 +1063,7 @@ object Similarity {
     // ivf/ where the idxDir-level promote above cannot see it — promote
     // inside the subdir too before callers read `<resolved>/lists`
     if (name == "ivf") promoteStages(s, s"$idxDir/ivf")
-    val f = hadoopFs(s, idxDir)
+    val f = Artifact.fs(s, idxDir)
     if (f.exists(new org.apache.hadoop.fs.Path(s"$idxDir/$name"))) s"$idxDir/$name"
     else {
       val bp = new org.apache.hadoop.fs.Path(s"$idxDir/_base")
@@ -1282,7 +1123,7 @@ object Similarity {
       .select(col("src"), col("dst"), col("rnk").cast("int").as("rnk"), col("cos"))
     val deltaDir = resolveNswTable(s, idxDir, "edges_delta")
     promoteStages(s, deltaDir)
-    val f = hadoopFs(s, deltaDir)
+    val f = Artifact.fs(s, deltaDir)
     val dp = new org.apache.hadoop.fs.Path(deltaDir)
     val deltaTags = if (!f.exists(dp)) Set.empty[String]
       else f.listStatus(dp).collect {
@@ -1304,7 +1145,7 @@ object Similarity {
       // set): appends grow the tag set and re-trigger the check.
       if (!Option(deltaSprawlChecked.put(idxDir, deltaTags)).contains(deltaTags)) {
         val deltaBytes = f.getContentSummary(dp).getLength
-        val baseBytes = hadoopFs(s, basePath)
+        val baseBytes = Artifact.fs(s, basePath)
           .getContentSummary(new org.apache.hadoop.fs.Path(basePath)).getLength
         if (deltaBytes * 4 > baseBytes)
           System.err.println(
@@ -1347,7 +1188,7 @@ object Similarity {
   private[operators] def storedNswTombstones(s: SparkSession, idxDir: String): DataFrame = {
     promoteStages(s, idxDir)
     val p = s"$idxDir/tombstones"
-    if (hadoopFs(s, p).exists(new org.apache.hadoop.fs.Path(p)))
+    if (Artifact.fs(s, p).exists(new org.apache.hadoop.fs.Path(p)))
       s.read.parquet(p).select(col("vec_id"))
     else s.emptyDataFrame.select(lit(0L).as("vec_id")).limit(0)
   }
@@ -1474,7 +1315,7 @@ object Similarity {
           .write.mode("overwrite").partitionBy("cent_id").parquet(s"$ivfDir/lists")
         // a rebuilt index has no deletes: stale tombstones from the
         // replaced artifact must not screen the fresh corpus
-        hadoopFs(s, ivfDir)
+        Artifact.fs(s, ivfDir)
           .delete(new org.apache.hadoop.fs.Path(s"$ivfDir/tombstones"), true)
         listsListingMemo.remove(s"$ivfDir/lists")
       },
@@ -1482,7 +1323,7 @@ object Similarity {
       () => writeNswEntries(s, dir,
         pts.select(col("vec_id")).orderBy(col("vec_id").asc).limit(nswEntryCount))
     ))(_.apply())
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     // a rebuild resets the whole verb ladder: no deletes, no deltas, and
     // append tags start fresh against the new base
     for (t <- Seq("tombstones", "edges_delta", "_append_tags"))
@@ -1502,7 +1343,7 @@ object Similarity {
         .agg(max(col("vec_id"))).collect()(0)
       if (r.isNullAt(0)) -1L else r.getLong(0)
     }
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/manifest.json")
     val out = f.create(p, true)
     try out.write(
@@ -1564,7 +1405,7 @@ object Similarity {
       coalesce(bit_xor(xxhash64(col("vec_id"))), lit(0L)),
       max(col("vec_id"))).collect()(0)
     val fp = s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     appendTagFingerprint(s, dir, tag) match {
       case Some(prev) =>
         if (prev != fp) throw new IllegalStateException(
@@ -1695,11 +1536,11 @@ object Similarity {
     * — the merged read's dropDuplicates — but a DIFFERENT batch reusing
     * it must still be refused). They are kept COMPACTED: the fold merges
     * every loose per-tag file into one `_spent_<gen>` manifest
-    * ([[compactAppendTags]]), so an unattended stream's identity sidecar
+    * ([[Artifact.compactAppendTags]]), so an unattended stream's identity sidecar
     * stays one file instead of one per micro-batch forever. */
   def foldNswDeltas(s: SparkSession, dir: String): Unit =
       withWriterLease(s, dir) {
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     val dp = new org.apache.hadoop.fs.Path(s"$dir/edges_delta")
     if (f.exists(dp)) {
       val merged = storedNswEdgesMerged(s, dir)
@@ -1712,84 +1553,6 @@ object Similarity {
     }
   }
 
-  /** The fingerprint recorded for `tag`, if the tag was ever spent —
-    * checked against the loose per-tag file first (tags appended since the
-    * last fold), then against the `_spent_<gen>` manifests a fold compacts
-    * retired fingerprints into. */
-  private[graft] def appendTagFingerprint(s: SparkSession, dir: String,
-      tag: String, sidecar: String = "_append_tags"): Option[String] = {
-    val f = hadoopFs(s, dir)
-    val loose = new org.apache.hadoop.fs.Path(s"$dir/$sidecar/$tag")
-    if (f.exists(loose)) {
-      val in = f.open(loose)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close())
-    } else spentTagManifest(s, dir, sidecar).get(tag)
-  }
-
-  /** The merged `_spent_<gen>` manifests under `_append_tags/` — tag → fp.
-    * Manifests hold tab-separated `tag\tfp` lines; duplicate tags across
-    * generations carry identical fingerprints by construction (a crash
-    * between writing generation N+1 and deleting its inputs leaves a
-    * redundant SUPERSET, never a conflict). */
-  private[graft] def spentTagManifest(s: SparkSession, dir: String,
-      sidecar: String = "_append_tags"): Map[String, String] = {
-    val f = hadoopFs(s, dir)
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$sidecar")
-    if (!f.exists(root)) Map.empty
-    else f.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("_spent_"))
-      .flatMap { st =>
-        val in = f.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        txt.split('\n').toSeq.map(_.trim).filter(_.contains('\t')).map { line =>
-          val i = line.indexOf('\t')
-          line.substring(0, i) -> line.substring(i + 1)
-        }
-      }.toMap
-  }
-
-  /** Fold-time hygiene for the batch-identity sidecar (round-10 verdict
-    * #5): every micro-batch leaves one fingerprint file under
-    * `_append_tags/` and folds must KEEP the identities (a spent tag's
-    * reuse is refused forever), so an unattended per-minute stream grows
-    * ~500k files/year in one directory — the small-file pathology the
-    * list/probe compaction exists to prevent, one level up. This merges
-    * every loose tag file and every prior `_spent_*` manifest into ONE new
-    * `_spent_<gen+1>` file, then retires the inputs. Crash-ordered: the
-    * new manifest lands via atomic rename BEFORE any input is deleted, so
-    * a death anywhere leaves a superset of spent identities (duplicates
-    * agree on fp — over-refusal is impossible, and replay convergence is
-    * untouched). */
-  private[graft] def compactAppendTags(s: SparkSession, dir: String,
-      sidecar: String = "_append_tags"): Unit = {
-    val f = hadoopFs(s, dir)
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$sidecar")
-    if (!f.exists(root)) return
-    val entries = f.listStatus(root).toSeq.filter(_.isFile)
-      .filterNot(_.getPath.getName.startsWith(".")) // crashed tmp manifests
-    val loose = entries.filterNot(_.getPath.getName.startsWith("_spent_"))
-    val gens = entries.filter(_.getPath.getName.startsWith("_spent_"))
-    if (loose.isEmpty && gens.size <= 1) return // already compact
-    val merged = spentTagManifest(s, dir, sidecar) ++ loose.map { st =>
-      val in = f.open(st.getPath)
-      st.getPath.getName ->
-        (try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-         finally in.close())
-    }
-    val nextGen = (gens.map(_.getPath.getName.stripPrefix("_spent_").toLong)
-      :+ 0L).max + 1L
-    val tmp = new org.apache.hadoop.fs.Path(root, s".tmp_spent_$nextGen")
-    val out = f.create(tmp, true)
-    try out.write(merged.toSeq.sorted
-      .map { case (t, v) => s"$t\t$v" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // atomic promotion, THEN retire the inputs
-    f.rename(tmp, new org.apache.hadoop.fs.Path(root, s"_spent_$nextGen"))
-    (loose ++ gens).foreach(st => f.delete(st.getPath, false))
-  }
-
   /** The delete verb (HNSWlib markDelete shape): record ids in the
     * artifact's tombstone set. Edges are NOT touched — dead nodes keep
     * routing (severing them collapses the small-world shortcuts, ss43
@@ -1800,24 +1563,38 @@ object Similarity {
     // leased: the merge below read-modify-writes tombstones/, which a
     // concurrent erase's tombstone fold also rewrites
     val add = ids.select(col("vec_id"))
-    val merged = storedNswTombstones(s, dir).unionByName(add).distinct()
-      .localCheckpoint() // materialize BEFORE overwriting what it reads
-    // write RANGE-PARTITIONED, sized to the set (round-10 verdict #2: the
-    // compact dial deliberately lets tombstones reach 25% of the corpus,
-    // and the old coalesce(1) funneled that — billions of ids at 100 TB —
-    // through ONE task into one file per delete batch; the serving
-    // anti-joins never cared about file count). Sorted within partitions
-    // so row-group min/max stats keep the anti-join probes skippable.
-    val rowsPerFile =
-      confInt(s, "spark.graft.nsw.tombstoneRowsPerFile", 4000000).toLong
-    val parts = math.max(1L,
-      (merged.count() + rowsPerFile - 1L) / rowsPerFile).toInt
+    writeTombstones(s, dir, storedNswTombstones(s, dir).unionByName(add)
+      .distinct().localCheckpoint()) // materialize BEFORE overwriting what it reads
+  }
+
+  /** The one tombstone writer of both index tiers: staged overwrite of
+    * `<dir>/tombstones` with `ids`, RANGE-PARTITIONED and sized to the set
+    * (round-10 verdict #2: the compact dial deliberately lets tombstones
+    * reach 25% of the corpus, and the old coalesce(1) funneled that —
+    * billions of ids at 100 TB — through ONE task into one file per delete
+    * batch; the serving anti-joins never cared about file count). Sorted
+    * within partitions so row-group min/max stats keep the anti-join
+    * probes skippable. */
+  private def writeTombstones(s: SparkSession, dir: String,
+      ids: DataFrame): Unit = {
+    val parts = Artifact.sizedFiles(s, "spark.graft.nsw.tombstoneRowsPerFile",
+      ids.count())
     stagedWrite(s, s"$dir/tombstones") { tmp =>
-      merged.repartitionByRange(parts, col("vec_id"))
+      ids.repartitionByRange(parts, col("vec_id"))
         .sortWithinPartitions("vec_id")
         .write.mode("overwrite").parquet(tmp)
     }
   }
+
+  /** Fulfilled tombstones leave the ledger ([[Artifact.foldLedger]]): the
+    * set minus `gone` is rewritten, or the table deleted when nothing is
+    * left, so serves drop back to the unscreened plan. Call under the
+    * rewrite lease — every tombstone writer holds it. */
+  private def foldTombstones(s: SparkSession, dir: String,
+      gone: DataFrame): Unit =
+    if (Artifact.fs(s, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
+      Artifact.foldLedger(s, s"$dir/tombstones", storedNswTombstones(s, dir)
+        .join(gone, Seq("vec_id"), "left_anti"))(writeTombstones(s, dir, _))
 
   /** The compaction verb ss43's audit schedules: rebuild a graph index
     * from the corpus minus the source index's tombstones — alive-only
@@ -1861,7 +1638,7 @@ object Similarity {
         () => writeNswEntries(s, dstDir,
           aliveCk.select(col("vec_id")).orderBy(col("vec_id").asc)
             .limit(nswEntryCount))))(_.apply())
-      val f = hadoopFs(s, dstDir)
+      val f = Artifact.fs(s, dstDir)
       for (t <- Seq("tombstones", "edges_delta", "_append_tags"))
         f.delete(new org.apache.hadoop.fs.Path(s"$dstDir/$t"), true)
       writeNswManifest(s, dstDir)
@@ -1897,225 +1674,6 @@ object Similarity {
   //    nothing, so the default waits well past the measured point.
   // ---------------------------------------------------------------------
 
-  private[graft] def confInt(s: SparkSession, key: String, dflt: Int): Int =
-    s.conf.getOption(key).map(_.toInt).getOrElse(dflt)
-
-  /** Cross-JVM MAINTENANCE LEASE (round-11 verdict #8): two unattended
-    * maintainers on one artifact — separate JVMs, so the in-memory memos
-    * cannot serialize them — can both pass a dial and race their staged
-    * compacts; the marker/tag creates beneath fail loudly, but a fleet
-    * deployment wants the loser to YIELD, not crash. The lease is one
-    * file under `_maintenance/`: `create(overwrite = false)` is the
-    * acquisition (atomic on HDFS-like stores), the holder deletes it when
-    * done, and a holder that DIED is broken by age — a lease older than
-    * `spark.graft.maintenance.leaseTtlSec` (default 3600) is broken and
-    * re-contended. Three round-12-advice hardenings:
-    *  - RENEWAL: a live holder's daemon thread re-touches the lease mtime
-    *    every TTL/4, so a legitimately long compaction can no longer have
-    *    its lease broken mid-run — the TTL now only has to outlive a
-    *    renewal gap, not the worst compaction wall-time;
-    *  - race-free BREAK: an expired lease is RENAMED to a unique name
-    *    first (exactly one of N contenders wins the rename — the old
-    *    unconditional delete let a second breaker delete the first
-    *    breaker's freshly created lease), then the renamed corpse is
-    *    deleted and only the rename winner contends the create;
-    *  - the exists→getFileStatus window (holder releases in between)
-    *    yields instead of crashing on FileNotFoundException.
-    * REENTRANT per (artifact, thread): a verb that already holds the
-    * lease (e.g. [[graft.operators.DedupStore.erase]] invoked from
-    * inside `maintainDedupStore`'s leased turn) runs its body directly —
-    * public verbs can each take the lease without nesting deadlocks.
-    * Yielding is always safe: every guarded verb is answers-unchanged
-    * and re-triggered by the same dial on a later maintain, so a skipped
-    * turn only defers compaction, never loses it. Returns `yieldValue`
-    * when the lease is held elsewhere (or lost in the create race),
-    * else runs `body` holding the lease and releases it. */
-  private[graft] def withMaintenanceLease[T](s: SparkSession, dir: String)(
-      yieldValue: => T)(body: => T): T =
-    withLockFile(s, dir, "lease",
-      confInt(s, "spark.graft.maintenance.leaseTtlSec", 3600) * 1000L)(
-      yieldValue)(body)
-
-  /** FILESYSTEM REQUIREMENT (round-13 verdict): acquisition is
-    * `create(overwrite=false)`, break is rename, renewal is `setTimes` —
-    * all atomic/reliable on HDFS-class filesystems (HDFS, local,
-    * maprfs). On object stores (S3A), `setTimes` is a NO-OP and
-    * create/rename are not atomic, so a live holder's lease would read
-    * expired and be broken mid-run. The renewer below DETECTS a
-    * non-advancing mtime after its first touch and falls back to
-    * re-writing the lock file's content (which does advance mtime on
-    * every Hadoop store), logging loudly either way — so a no-op
-    * `setTimes` degrades to a still-renewed lease instead of silently
-    * reopening the lost-append race. [[leaseRenewalFallbacks]] counts the
-    * fallbacks for telemetry and the portability spec. */
-  private def withLockFile[T](s: SparkSession, dir: String, name: String,
-      ttlMs: Long)(yieldValue: => T)(body: => T): T = {
-    val f = hadoopFs(s, dir)
-    val root = new org.apache.hadoop.fs.Path(s"$dir/_maintenance")
-    val lease = new org.apache.hadoop.fs.Path(root, name)
-    val key = lease.toString
-    if (leaseHolders.get(key) eq Thread.currentThread()) return body
-    f.mkdirs(root)
-    if (f.exists(lease)) {
-      val fresh =
-        try System.currentTimeMillis() -
-          f.getFileStatus(lease).getModificationTime <= ttlMs
-        catch { // released between exists and stat: contend the create
-          case _: java.io.FileNotFoundException => false
-        }
-      if (fresh) return yieldValue
-      // the holder died past the TTL: break by RENAME — atomic, so exactly
-      // one contender owns the corpse; losers yield (the winner is about
-      // to create, and the dial re-triggers this turn's work later anyway)
-      val corpse = new org.apache.hadoop.fs.Path(root,
-        s".lease_broken_${java.util.UUID.randomUUID().toString.take(8)}")
-      val won = try f.rename(lease, corpse)
-        catch { case _: java.io.IOException => false }
-      if (!won && f.exists(lease)) return yieldValue
-      if (won) f.delete(corpse, false)
-    }
-    val acquired =
-      try { f.create(lease, false).close(); true }
-      catch { case _: java.io.IOException => false } // lost the race: yield
-    if (!acquired) return yieldValue
-    leaseHolders.put(key, Thread.currentThread())
-    leaseAcquisitions.incrementAndGet()
-    // holder-side renewal: touch the lease mtime every TTL/4 so a live
-    // body outlasting the TTL is never broken; daemon + interrupt on
-    // release. A setTimes that FAILS or silently does nothing (object
-    // stores — see the scaladoc) falls back to re-writing the file, and
-    // both paths log loudly so an operator can see whether the lease is
-    // actually protecting the artifact (round-13 advice).
-    val renewer = new Thread(() => {
-      var useFallback = false
-      try {
-        while (!Thread.currentThread().isInterrupted) {
-          Thread.sleep(math.max(1000L, ttlMs / 4))
-          val now = System.currentTimeMillis()
-          if (!useFallback) {
-            val advanced =
-              try {
-                f.setTimes(lease, now, -1)
-                f.getFileStatus(lease).getModificationTime >= now - 1000L
-              } catch { case _: java.io.IOException => false }
-            if (!advanced) {
-              useFallback = true
-              System.err.println(s"[graft] lease renewal via setTimes is " +
-                s"not advancing the mtime of $lease (object-store " +
-                "filesystem?); falling back to content-rewrite renewal")
-            }
-          }
-          if (useFallback) {
-            try {
-              // overwrite=true on the path we already hold: advances mtime
-              // on every Hadoop store; contenders that TTL-broke the lease
-              // in the meantime are caught by the create/tag guards beneath
-              val out = f.create(lease, true)
-              try out.write(now.toString.getBytes("UTF-8"))
-              finally out.close()
-              leaseRenewalFallbacks.incrementAndGet()
-            } catch {
-              case e: java.io.IOException => System.err.println(
-                s"[graft] lease renewal FAILED for $lease: ${e.getMessage}" +
-                  " — a contender may break this live lease past the TTL")
-            }
-          }
-        }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-lease-renewer")
-    renewer.setDaemon(true)
-    renewer.start()
-    try body finally {
-      renewer.interrupt()
-      leaseHolders.remove(key)
-      f.delete(lease, false)
-    }
-  }
-
-  // withLockFile's reentrancy map: lock-file path -> holding thread.
-  // In-memory only — cross-JVM holders are what the lock FILE serializes.
-  private val leaseHolders =
-    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
-
-  // Lock telemetry (round-13 verdict #4): successful acquisitions, total
-  // wall-ms spent blocked waiting for a held lock, and renewal fallbacks
-  // (see withLockFile). Bench snapshots these around each query and emits
-  // a part-line, so the lease protocol's cost is attributed, not inferred.
-  private[graft] val leaseAcquisitions =
-    new java.util.concurrent.atomic.AtomicLong()
-  private[graft] val leaseBlockedMs =
-    new java.util.concurrent.atomic.AtomicLong()
-  private[graft] val leaseRenewalFallbacks =
-    new java.util.concurrent.atomic.AtomicLong()
-  private[graft] def leaseStatsSnapshot(): (Long, Long, Long) =
-    (leaseAcquisitions.get(), leaseBlockedMs.get(), leaseRenewalFallbacks.get())
-
-  /** Blocking acquisition of one of the artifact's lock files: retries
-    * until it wins (a dead holder is TTL-broken by the loop, so the wait
-    * is bounded). Reentrant per (lock file, thread). */
-  private def blockingLock[T](s: SparkSession, dir: String, name: String,
-      ttlMs: Long, waitMs: Long)(body: => T): T = {
-    var blockedSince = -1L
-    while (true) {
-      val r = withLockFile(s, dir, name, ttlMs)(Option.empty[T])(Some(body))
-      if (r.isDefined) {
-        if (blockedSince >= 0)
-          leaseBlockedMs.addAndGet(System.currentTimeMillis() - blockedSince)
-        return r.get
-      }
-      if (blockedSince < 0) blockedSince = System.currentTimeMillis()
-      Thread.sleep(waitMs)
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The artifact's MUTATION lock (`_maintenance/wlock`) — the short,
-    * blocking blink lock of the round-13-verdict no-stall discipline.
-    * Held ONLY for work bounded by an increment, never by the artifact:
-    * an append's staged-file moves + sidecar merges, a rewrite's
-    * carry-new-files + delete/rename swap, a ledger append. O(artifact)
-    * rewrites hold the REWRITE lease (`_maintenance/lease`,
-    * [[withMaintenanceLease]]/[[withWriterLease]]) for their whole run
-    * and this lock only for the swap blink — so a streaming append beside
-    * an hours-long 100 TB erase waits out a file-move window, not the
-    * rewrite. Lock ordering is always lease → wlock (never the reverse),
-    * so the two can never deadlock. TTL defaults to min(60 s,
-    * leaseTtlSec) — short, because a dead holder blocks every append —
-    * renewed by the holder like the lease. */
-  private[graft] def withTableLock[T](s: SparkSession, dir: String)(
-      body: => T): T = {
-    val ttlSec = confInt(s, "spark.graft.maintenance.lockTtlSec",
-      math.min(60, confInt(s, "spark.graft.maintenance.leaseTtlSec", 3600)))
-    val waitMs = confInt(s, "spark.graft.maintenance.lockWaitMs", 100).toLong
-    blockingLock(s, dir, "wlock", ttlSec * 1000L, waitMs)(body)
-  }
-
-  /** Test hook: `spark.graft.test.rewriteDelayMs` stretches the unleased
-    * PREPARE phase of every two-phase rewrite, giving the no-stall specs
-    * a deterministic window to land an append inside. Zero (the default)
-    * is a no-op. */
-  private[graft] def testRewriteDelay(s: SparkSession): Unit = {
-    val ms = confInt(s, "spark.graft.test.rewriteDelayMs", 0)
-    if (ms > 0) Thread.sleep(ms.toLong)
-  }
-
-  /** BLOCKING form of the REWRITE lease ([[withMaintenanceLease]]'s
-    * file): serializes O(artifact) rewriters — erase / compact / fold /
-    * tombstone read-modify-writes — against each other when called
-    * directly rather than from a yielding maintainer. Round 14 narrowed
-    * its scope: APPENDS no longer take this lease (the round-13 blanket
-    * serialization made every micro-batch wait out a full store rewrite —
-    * hours at 100 TB); they take the short [[withTableLock]] instead, and
-    * rewrites hold this lease for their whole run plus the table lock for
-    * the snapshot→swap blink, carrying any concurrently appended files
-    * across the swap. Reentrant; a dead holder's lease is TTL-broken by
-    * the loop, so the wait is bounded. */
-  private[graft] def withWriterLease[T](s: SparkSession, dir: String)(
-      body: => T): T =
-    blockingLock(s, dir, "lease",
-      confInt(s, "spark.graft.maintenance.leaseTtlSec", 3600) * 1000L,
-      confInt(s, "spark.graft.maintenance.leaseWaitMs", 2000).toLong)(body)
-
   /** Maintenance metrics + decisions for a graph index, as a long-form
     * (metric, value) frame — dictionary-sized, computed from artifact
     * METADATA (parquet footers + the per-tag append fingerprints), never
@@ -2128,7 +1686,7 @@ object Similarity {
       .parquet(s"${resolveNswTable(s, idxDir, "ivf")}/lists").count()
     val deltaDir = resolveNswTable(s, idxDir, "edges_delta")
     promoteStages(s, deltaDir)
-    val f = hadoopFs(s, deltaDir)
+    val f = Artifact.fs(s, deltaDir)
     val dp = new org.apache.hadoop.fs.Path(deltaDir)
     val tags = if (!f.exists(dp)) Seq.empty[String]
       else f.listStatus(dp).toSeq.collect {
@@ -2207,9 +1765,9 @@ object Similarity {
     // micro-batch must not rebuild an already-finished destination — a
     // finished rotate is recognized by its manifest (written last).
     val rotateDue = !eraseDue && plan("compact_due") == 1L &&
-      rotateTo.exists(dst => !hadoopFs(s, dst).exists(
+      rotateTo.exists(dst => !Artifact.fs(s, dst).exists(
         new org.apache.hadoop.fs.Path(s"$dst/manifest.json")))
-    // due work runs under the cross-JVM lease ([[withMaintenanceLease]]):
+    // due work runs under the cross-JVM lease ([[Artifact.withMaintenanceLease]]):
     // a concurrent maintainer holding it makes this turn yield — the same
     // dials re-trigger the work on a later maintain
     val (erased, folded, rotated, yielded) =
@@ -2254,7 +1812,7 @@ object Similarity {
       .localCheckpoint()
       .write.mode("overwrite").parquet(s"$dstDir/ivf/centroids")
     // cast the rediscovered partition column back to long before the
-    // rewrite (the compactCentPartitioned discipline — partition
+    // rewrite (the rewriteCentPartitioned discipline — partition
     // discovery narrows small cent_ids to int)
     val lists = s.read
       .parquet(s"${resolveNswTable(s, srcDir, "ivf")}/lists")
@@ -2273,7 +1831,7 @@ object Similarity {
     writeNswEntries(s, dstDir,
       lists.select(col("vec_id")).orderBy(col("vec_id").asc)
         .limit(nswEntryCount))
-    val f = hadoopFs(s, dstDir)
+    val f = Artifact.fs(s, dstDir)
     for (t <- Seq("tombstones", "edges_delta", "_append_tags"))
       f.delete(new org.apache.hadoop.fs.Path(s"$dstDir/$t"), true)
     writeNswManifest(s, dstDir)
@@ -2299,7 +1857,8 @@ object Similarity {
     *  - entries refresh (min over survivors is re-derivable);
     *  - erased ids leave the tombstone set — their bytes are gone, there
     *    is nothing left to screen — while OTHER tombstones keep
-    *    screening;
+    *    screening; an emptied set is deleted ([[foldTombstones]]), so
+    *    serves drop back to the unscreened plan;
     *  - loose append-tag fingerprints retire into the `_spent_` manifest
     *    ([[DedupStore.erase]]'s accounting): the rewrite folded those
     *    increments into the base, identities keep refusing tag reuse.
@@ -2311,7 +1870,7 @@ object Similarity {
     * base, so overlays are refused loudly. */
   def eraseFromNswIndex(s: SparkSession, dir: String, ids: DataFrame): Unit =
       withWriterLease(s, dir) {
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     require(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/_base")),
       s"eraseFromNswIndex needs a materialized artifact; $dir is an overlay")
     deltaSprawlChecked.remove(dir) // the sized tag set is about to vanish
@@ -2322,27 +1881,16 @@ object Similarity {
     // different tables — overlap them (guide §2.6), then derive
     // edges/entries/tombstones (which need the rewritten tables) with the
     // independent ones overlapped too
-    parLadder(Seq[() => Unit](
-      () => {
-        stagedWrite(s, s"$dir/ivf/lists") { tmp =>
-          s.read.parquet(s"$dir/ivf/lists")
-            .withColumn("cent_id", col("cent_id").cast("long"))
-            .join(gone, Seq("vec_id"), "left_anti")
-            .repartition(col("cent_id"))
-            .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-        }
-        listsListingMemo.remove(s"$dir/ivf/lists")
-      },
-      () => {
-        stagedWrite(s, s"$dir/probes") { tmp =>
-          s.read.parquet(s"$dir/probes")
-            .withColumn("cent_id", col("cent_id").cast("long"))
-            .join(gone, Seq("vec_id"), "left_anti")
-            .repartition(col("cent_id"))
-            .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-        }
-        listsListingMemo.remove(s"$dir/probes")
-      }))(_.apply())
+    parLadder(Seq("ivf/lists", "probes")) { t =>
+      stagedWrite(s, s"$dir/$t") { tmp =>
+        s.read.parquet(s"$dir/$t")
+          .withColumn("cent_id", col("cent_id").cast("long"))
+          .join(gone, Seq("vec_id"), "left_anti")
+          .repartition(col("cent_id"))
+          .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
+      }
+      listsListingMemo.remove(s"$dir/$t")
+    }
     parLadder(Seq[() => Unit](
       () => {
         writeNswEdges(s, dir, edgesFromStored(s, dir))
@@ -2351,55 +1899,10 @@ object Similarity {
       () => writeNswEntries(s, dir,
         s.read.parquet(s"$dir/ivf/lists").select(col("vec_id"))
           .orderBy(col("vec_id").asc).limit(nswEntryCount)),
-      () => {
-        val tp = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-        if (f.exists(tp)) {
-          val left = storedNswTombstones(s, dir)
-            .join(gone, Seq("vec_id"), "left_anti").localCheckpoint()
-          val rowsPerFile =
-            confInt(s, "spark.graft.nsw.tombstoneRowsPerFile", 4000000).toLong
-          val parts = math.max(1L,
-            (left.count() + rowsPerFile - 1L) / rowsPerFile).toInt
-          stagedWrite(s, s"$dir/tombstones") { tmp =>
-            left.repartitionByRange(parts, col("vec_id"))
-              .sortWithinPartitions("vec_id")
-              .write.mode("overwrite").parquet(tmp)
-          }
-        }
-      }))(_.apply())
+      () => foldTombstones(s, dir, gone)))(_.apply())
     compactAppendTags(s, dir)
     writeNswManifest(s, dir)
   }
-
-  /** Run a ladder's independent rungs from a small thread pool so each
-    * rung's jobs back-fill the executor slots the previous rung's stage
-    * tail leaves idle (guide §2.6: actions are only sequential because
-    * the driver calls them sequentially). Result order is the input
-    * order — execution overlap never reorders the returned Seq — and
-    * each rung's lineage is its own (the artifact builds the rungs share
-    * are [[Derived]] keys, so a racing first touch waits instead of
-    * double-building). Pool is per-call and bounded:
-    * 2-3 in-flight jobs fill a stage tail; more just contend. */
-  private[operators] def parLadder[A, B](xs: Seq[A], par: Int = 3)(f: A => B): Seq[B] =
-    if (xs.lengthCompare(2) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(par, xs.size))
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            override def call(): B = f(x)
-          })
-        }
-        futs.map { fut =>
-          try fut.get()
-          catch { // surface the rung's own failure, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-      } finally pool.shutdown()
-    }
 
   /** One graph build per (artifact, JVM), a [[Derived]] key named by the
     * artifact path: the suite's serving queries all read the same
@@ -2425,7 +1928,7 @@ object Similarity {
     val idx = ensureNswIndex(s, dir)
     val ov = indexPathFor(dir + "#nswtomb")
     Derived(s, ov) {
-      hadoopFs(s, ov).delete(new org.apache.hadoop.fs.Path(ov), true)
+      Artifact.fs(s, ov).delete(new org.apache.hadoop.fs.Path(ov), true)
       overlayNswIndex(s, idx, ov)
     }
     ov
@@ -2877,7 +2380,7 @@ object Similarity {
       .getOrElse(ivfServeNprobeMeasured)
 
   private def writeIvfManifest(s: SparkSession, dir: String): Unit = {
-    val f = hadoopFs(s, dir)
+    val f = Artifact.fs(s, dir)
     val out = f.create(new org.apache.hadoop.fs.Path(s"$dir/manifest.json"), true)
     try out.write(
       (s"""{"nprobe":$nprobe,"serve_nprobe":$ivfServeNprobeMeasured,""" +
@@ -2890,7 +2393,7 @@ object Similarity {
     * so a field regex is the whole parser. */
   private def manifestLong(s: SparkSession, path: String,
       field: String): Option[Long] = {
-    val f = hadoopFs(s, path)
+    val f = Artifact.fs(s, path)
     val p = new org.apache.hadoop.fs.Path(path)
     if (!f.exists(p)) None
     else {
@@ -4539,7 +4042,7 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$dir/lists")
     // a rebuilt index has no deletes: stale tombstones from the replaced
     // artifact must not screen the fresh corpus (buildNswIndex discipline)
-    hadoopFs(pts.sparkSession, dir)
+    Artifact.fs(pts.sparkSession, dir)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
     listsListingMemo.remove(s"$dir/lists") // a rebuild voids the memo
     }
@@ -4585,7 +4088,7 @@ object Similarity {
     // no-stall (round 14): the append computes and stages outside any
     // lock, and [[stagedAppendPartitioned]] takes the short mutation lock
     // for its file moves only. A concurrent compact/erase carries files
-    // moved in before its swap blink across the swap ([[blinkSwap]]), so
+    // moved in before its swap blink across the swap ([[Artifact.Staged]]), so
     // the ingest-<tag> files can no longer be swept while the stream's
     // commit marker survives — and the append no longer waits out the
     // rewrite's O(artifact) wall as it did under the round-13 blanket
@@ -4599,8 +4102,9 @@ object Similarity {
   /** The tag-convergent append machinery behind [[stagedAppendToIvfIndex]]
     * (and the NSW artifact's reverse-probe table): stage the cent_id-
     * partitioned `rows` under a hidden dir, then move them into the table's
-    * partitions under deterministic `ingest-<tag>-i` names, retiring any
-    * same-tag leftovers of a previous partially-moved attempt first. */
+    * partitions under deterministic `ingest-<tag>-i` names
+    * ([[Artifact.moveTaggedAppend]]), retiring any same-tag leftovers of a
+    * previous partially-moved attempt first. */
   private def stagedAppendPartitioned(s: SparkSession, tableDir: String,
       rows: DataFrame, tag: String): Unit = {
     require(tag.matches("[A-Za-z0-9_-]+"), s"unsafe staging tag: $tag")
@@ -4619,33 +4123,15 @@ object Similarity {
     val staged = s"$lockRoot/.staged_append_$tableName/$tag"
     rows.repartition(col("cent_id"))
       .write.mode("overwrite").partitionBy("cent_id").parquet(staged)
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), s.sparkContext.hadoopConfiguration)
-    val tableRoot = new org.apache.hadoop.fs.Path(tableDir)
     withTableLock(s, lockRoot) {
       // heal a crashed rewrite's delete→rename window BEFORE moving in:
       // renaming into a missing table dir would mkdirs a fresh one and
       // strand the staged base forever
       promoteStages(s, lockRoot)
-      for (part <- f.listStatus(new org.apache.hadoop.fs.Path(staged))
-          if part.isDirectory && part.getPath.getName.startsWith("cent_id=")) {
-        val dest = new org.apache.hadoop.fs.Path(tableRoot, part.getPath.getName)
-        f.mkdirs(dest)
-        // retire leftovers of a previous attempt at this tag, then move in
-        for (old <- f.listStatus(dest)
-            if old.getPath.getName.startsWith(s"ingest-$tag-"))
-          f.delete(old.getPath, false)
-        val files = f.listStatus(part.getPath)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-            && !st.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName)
-        for ((st, i) <- files.zipWithIndex)
-          f.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(dest, s"ingest-$tag-$i.parquet"))
-      }
-      // only this tag's staging leaves — a concurrent append of another
-      // tag may be staging under the same parent right now
-      f.delete(new org.apache.hadoop.fs.Path(staged), true)
+      // the mover drops only this tag's stage — a concurrent append of
+      // another tag may be staging under the same parent right now
+      Artifact.moveTaggedAppend(s, staged, tableDir, s"ingest-$tag",
+        Some("cent_id"))
       // the listing-memo bound: this append added at most one file per
       // partition of this table
       listsListingMemo.computeIfPresent(tableDir,
@@ -4656,9 +4142,10 @@ object Similarity {
   /** Periodic maintenance mirroring [[graft.operators.DedupStore.compact]]:
     * roll-forwards append small files into the inverted-list partitions;
     * this rewrites each list as ONE file (repartition ON cent_id), through
-    * [[stagedWrite]] so a crash mid-compact leaves the readable original
+    * the staged rewrite ([[Artifact.prepareRewrite]]) so a crash
+    * mid-compact leaves the readable original
     * AND a death inside the delete→rename window self-heals on the next
-    * read via [[promoteStages]] (round-10 verdict #1 — the old bespoke
+    * read via [[Artifact.promoteStages]] (round-10 verdict #1 — the old bespoke
     * delete+rename here could leave the table missing with a finished
     * `.compact_` copy nothing promoted). Assignments are read, never
     * recomputed — answers unchanged, probe scans stop paying per-file
@@ -4666,11 +4153,11 @@ object Similarity {
     * same per-tag small files — [[compactNswProbes]] is this verb pointed
     * at it. */
   def compactIvfIndex(s: SparkSession, dir: String): Unit =
-    withWriterLease(s, dir) { compactCentPartitioned(s, s"$dir/lists") }
+    withWriterLease(s, dir) { rewriteCentPartitioned(s, s"$dir/lists") }
 
   /** [[compactIvfIndex]] for the NSW artifact's `probes/` table. */
   def compactNswProbes(s: SparkSession, idxDir: String): Unit =
-    withWriterLease(s, idxDir) { compactCentPartitioned(s, s"$idxDir/probes") }
+    withWriterLease(s, idxDir) { rewriteCentPartitioned(s, s"$idxDir/probes") }
 
   /** The IVF tier's maintenance policy — [[nswMaintenancePlan]]'s sibling
     * for a plain inverted-list index, where appends land directly as
@@ -4750,7 +4237,7 @@ object Similarity {
           "list_files_max" -> (mMax + appends),
           "compact_due" -> 0L, "compacted" -> 0L, "yielded" -> 0L)
       case _ =>
-        val f = hadoopFs(s, idxDir)
+        val f = Artifact.fs(s, idxDir)
         val lp = new org.apache.hadoop.fs.Path(s"$idxDir/lists")
         val parts = if (!f.exists(lp)) Array.empty[org.apache.hadoop.fs.FileStatus]
           else f.listStatus(lp).filter(st =>
@@ -4782,31 +4269,33 @@ object Similarity {
 
   // maintainIvfIndex's listing memo: lists dir -> (partitions, files,
   // filesMax, stagedAppendsSince) as of the last real listing. Appends
-  // bump the counter; compactCentPartitioned and buildIvfIndex invalidate
+  // bump the counter; rewriteCentPartitioned and buildIvfIndex invalidate
   // (the next maintain pays one listing, then skips again) — the
   // deltaSprawlChecked hygiene discipline.
   private val listsListingMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long, Long)]()
 
-  private def compactCentPartitioned(s: SparkSession, table: String): Unit = {
-    // heal a previous compact's crash first (the .stage_ dir may BE this
-    // table), then run the TWO-PHASE rewrite (round 14): prepare the
-    // compacted layout from a snapshot listing while appends keep
-    // landing, then carry+swap under the short mutation lock. The
-    // round-10 crash discipline carries over unchanged — the blink's
-    // delete→rename window still self-heals via promoteStages.
-    val lockRoot = table.replaceAll("/[^/]+$", "")
-    promoteStages(s, lockRoot)
-    val snap = listTableFiles(s, table)
-    testRewriteDelay(s)
-    prepareStage(s, table) { tmp =>
-      readTableSnapshot(s, table, snap)
-        .withColumn("cent_id", col("cent_id").cast("long"))
-        .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
+  /** Compaction and erasure of one cent_id-partitioned table are ONE
+    * rewrite: the TWO-PHASE rewrite (round 14, [[Artifact.prepareRewrite]])
+    * prepares the one-file-per-list layout from a snapshot listing while
+    * appends keep landing, then carries+swaps under the short mutation
+    * lock. The round-10 crash discipline carries over unchanged — the
+    * blink's delete→rename window still self-heals via promoteStages.
+    * With `gone`, the rewrite is erasure: the ids' rows drop (a
+    * `left_anti` join) and, after the swap, the fulfilled tombstones fold
+    * out of the artifact's ledger ([[foldTombstones]]). */
+  private def rewriteCentPartitioned(s: SparkSession, table: String,
+      gone: Option[DataFrame] = None): Unit = {
+    val root = table.replaceAll("/[^/]+$", "")
+    Artifact.prepareRewrite(s, root, Seq(table.substring(root.length + 1))) {
+      (_, snap) =>
+        val rows = snap.withColumn("cent_id", col("cent_id").cast("long"))
+        gone.fold(rows)(g => rows.join(g, Seq("vec_id"), "left_anti"))
+          .repartition(col("cent_id")).write.partitionBy("cent_id")
+    }.swap { _ =>
+      gone.foreach(foldTombstones(s, root, _))
+      listsListingMemo.remove(table) // the memoized listing no longer holds
     }
-    withTableLock(s, lockRoot) { blinkSwap(s, table, snap) }
-    listsListingMemo.remove(table) // the memoized listing no longer holds
   }
 
   private[operators] def indexPathFor(dir: String): String = {
@@ -4876,48 +4365,13 @@ object Similarity {
     // while appends keep landing and are carried across the swap blink
     // (round 14, the two-phase no-stall discipline).
     val gone = ids.select(col("vec_id")).localCheckpoint()
+    // fulfilled tombstones leave the ledger inside the swap blink (the
+    // DedupStore.erase discipline): a crash before the fold leaves no-op
+    // screens (the rows are already gone) and a still-armed dial whose
+    // next erase is a no-op anti-join; a crash before the swap leaves the
+    // ledger whole, so the screens keep hiding the unerased rows.
     withWriterLease(s, idxDir) {
-    promoteStages(s, idxDir)
-    val lists = s"$idxDir/lists"
-    val snap = listTableFiles(s, lists)
-    testRewriteDelay(s)
-    prepareStage(s, lists) { tmp =>
-      readTableSnapshot(s, lists, snap)
-        .withColumn("cent_id", col("cent_id").cast("long"))
-        .join(gone, Seq("vec_id"), "left_anti")
-        .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-    }
-    // fulfilled tombstones leave the ledger (the DedupStore.erase
-    // discipline): rewrite the set minus the erased ids, delete when
-    // empty — the serve screens return to the zero-cost steady state. A
-    // crash before this fold leaves no-op screens (the rows are already
-    // gone) and a still-armed dial whose next erase is a no-op anti-join.
-    // Safe outside the blink: tombstone writers all hold the rewrite
-    // lease this verb is holding. Sized files, not coalesce(1) — the
-    // residual set is corpus-proportional at the dial limit (round-13
-    // advice).
-    val tombLeft = storedNswTombstones(s, idxDir)
-      .join(gone, Seq("vec_id"), "left_anti").localCheckpoint()
-    val tombPath = new org.apache.hadoop.fs.Path(s"$idxDir/tombstones")
-    val haveTombs = hadoopFs(s, idxDir).exists(tombPath)
-    if (haveTombs && !tombLeft.isEmpty) {
-      val rowsPerFile =
-        confInt(s, "spark.graft.nsw.tombstoneRowsPerFile", 4000000).toLong
-      val parts = math.max(1L,
-        (tombLeft.count() + rowsPerFile - 1L) / rowsPerFile).toInt
-      stagedWrite(s, s"$idxDir/tombstones") { tmp =>
-        tombLeft.repartitionByRange(parts, col("vec_id"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    withTableLock(s, idxDir) {
-      blinkSwap(s, lists, snap)
-      if (haveTombs && tombLeft.isEmpty)
-        hadoopFs(s, idxDir).delete(tombPath, true)
-      listsListingMemo.remove(lists)
-    }
+      rewriteCentPartitioned(s, s"$idxDir/lists", Some(gone))
     }
   }
 
@@ -4931,18 +4385,9 @@ object Similarity {
     * `spark.graft.ivf.erasePendingPct`. Idempotent (distinct merge). */
   def tombstoneIvfIndex(s: SparkSession, idxDir: String, ids: DataFrame): Unit =
       withWriterLease(s, idxDir) {
-    val merged = storedNswTombstones(s, idxDir)
+    writeTombstones(s, idxDir, storedNswTombstones(s, idxDir)
       .unionByName(ids.select(col("vec_id"))).distinct()
-      .localCheckpoint() // materialize BEFORE overwriting what it reads
-    val rowsPerFile =
-      confInt(s, "spark.graft.nsw.tombstoneRowsPerFile", 4000000).toLong
-    val parts = math.max(1L,
-      (merged.count() + rowsPerFile - 1L) / rowsPerFile).toInt
-    stagedWrite(s, s"$idxDir/tombstones") { tmp =>
-      merged.repartitionByRange(parts, col("vec_id"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(tmp)
-    }
+      .localCheckpoint()) // materialize BEFORE overwriting what it reads
   }
 
   /** Screen an id-bearing table against the artifact's stored tombstones.
@@ -4953,7 +4398,7 @@ object Similarity {
   private def screenIvfTombstones(s: SparkSession, idxDir: String,
       df: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$idxDir/tombstones")
-    if (!hadoopFs(s, idxDir).exists(p)) df
+    if (!Artifact.fs(s, idxDir).exists(p)) df
     else df.join(
       s.read.parquet(s"$idxDir/tombstones").select(col("vec_id")).distinct(),
       Seq("vec_id"), "left_anti")

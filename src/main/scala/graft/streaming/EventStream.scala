@@ -201,14 +201,13 @@ object EventStream {
     * where later rows of a batch see earlier ones. */
   def ingestDedupBatch(batch: DataFrame, storeDir: String, outDir: String,
       batchId: Long, autoMaintain: Boolean = false): Unit = {
-    import graft.operators.{Dedup, DedupStore, Similarity}
+    import graft.operators.{Artifact, Dedup, DedupStore}
     val s = batch.sparkSession
     val b = batch.localCheckpoint() // pin: retries must re-check the same rows
     val flagDir = s"$outDir/batch=$batchId"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), s.sparkContext.hadoopConfiguration)
+    val f = Artifact.fs(s, outDir)
     if (!f.exists(new org.apache.hadoop.fs.Path(s"$flagDir/_SUCCESS")))
-      Similarity.retryOnMissingFiles(s, storeDir) {
+      Artifact.retryOnMissingFiles(s, storeDir) {
         DedupStore.incrementalAgainstStore(b, DedupStore.read(s, storeDir))
           .unionByName(Dedup.intraBatchFlags(b))
           .groupBy(col("doc_id"))
@@ -308,14 +307,14 @@ object EventStream {
   private[streaming] def pruneCommitMarkers(s: org.apache.spark.sql.SparkSession,
       f: org.apache.hadoop.fs.FileSystem, markerDir: org.apache.hadoop.fs.Path,
       batchId: Long): Unit = {
-    val interval = graft.operators.Similarity
+    val interval = graft.operators.Artifact
       .confInt(s, "spark.graft.stream.commitPruneInterval", 256).toLong
     val seen = markerBatchCounter
       .computeIfAbsent(markerDir.toString,
         _ => new java.util.concurrent.atomic.AtomicLong(0L))
       .incrementAndGet()
     if (seen % math.max(1L, interval) != 0L) return
-    val keep = graft.operators.Similarity
+    val keep = graft.operators.Artifact
       .confInt(s, "spark.graft.stream.commitRetention", 4096)
     if (!f.exists(markerDir)) return
     val markers = f.listStatus(markerDir).filter(st => st.isFile &&
@@ -355,8 +354,7 @@ object EventStream {
   def ingestVectorBatch(batch: DataFrame, idxDir: String, batchId: Long,
       autoMaintain: Boolean = false, autoErase: Boolean = false): Unit = {
     val s = batch.sparkSession
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(idxDir), s.sparkContext.hadoopConfiguration)
+    val f = graft.operators.Artifact.fs(s, idxDir)
     val marker = new org.apache.hadoop.fs.Path(s"$idxDir/_ingest_commits/$batchId")
     if (!f.exists(marker)) {
       graft.operators.Similarity.stagedAppendToIvfIndex(s, idxDir,
@@ -440,8 +438,7 @@ object EventStream {
       rotateTo: Option[String] = None,
       autoErase: Boolean = false): Unit = {
     val s = batch.sparkSession
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(idxDir), s.sparkContext.hadoopConfiguration)
+    val f = graft.operators.Artifact.fs(s, idxDir)
     val marker = new org.apache.hadoop.fs.Path(s"$idxDir/_ingest_commits/$batchId")
     if (!f.exists(marker)) {
       graft.operators.Similarity.appendToNswIndex(s, idxDir,
@@ -476,7 +473,7 @@ object EventStream {
   }
 
   /** Per-batch body of [[beamServeStream]]. The serve runs inside
-    * [[graft.operators.Similarity.retryOnMissingFiles]]: a CONCURRENT
+    * [[graft.operators.Artifact.retryOnMissingFiles]]: a CONCURRENT
     * autoMaintain fold/compact on the same artifact can yank files
     * between this serve's listing and its scan (round-10 advice) — the
     * retry re-plans from a fresh listing, and the deterministic
@@ -484,8 +481,7 @@ object EventStream {
   def serveGraphBatch(batch: DataFrame, idxDir: String, outDir: String,
       batchId: Long): Unit = {
     val s = batch.sparkSession
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), s.sparkContext.hadoopConfiguration)
+    val f = graft.operators.Artifact.fs(s, outDir)
     val marker = new org.apache.hadoop.fs.Path(s"$outDir/_serve_commits/$batchId")
     if (!f.exists(marker)) {
       // quantize the arriving embeddings exactly as the corpus was
@@ -497,7 +493,7 @@ object EventStream {
             .as("v1"))
         .withColumn("n1", expr("dot_l(v1, v1)"))
         .localCheckpoint() // pin the batch: retries must re-serve, not re-read
-      graft.operators.Similarity.retryOnMissingFiles(s, idxDir) {
+      graft.operators.Artifact.retryOnMissingFiles(s, idxDir) {
         graft.operators.Similarity.beamServeExternal(s, idxDir, qs)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
@@ -533,8 +529,7 @@ object EventStream {
   def serveIvfBatch(batch: DataFrame, idxDir: String, outDir: String,
       batchId: Long): Unit = {
     val s = batch.sparkSession
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), s.sparkContext.hadoopConfiguration)
+    val f = graft.operators.Artifact.fs(s, outDir)
     val marker = new org.apache.hadoop.fs.Path(s"$outDir/_serve_commits/$batchId")
     if (!f.exists(marker)) {
       graft.functions.VectorFunctions.register(s)
@@ -543,7 +538,7 @@ object EventStream {
             .as("v1"))
         .withColumn("n1", expr("dot_l(v1, v1)"))
         .localCheckpoint() // pin the batch: retries must re-serve, not re-read
-      graft.operators.Similarity.retryOnMissingFiles(s, idxDir) {
+      graft.operators.Artifact.retryOnMissingFiles(s, idxDir) {
         graft.operators.Similarity.ivfServeExternal(s, idxDir, qs)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }

@@ -981,13 +981,13 @@ class DedupStoreSpec extends SparkSpec {
     spark.conf.set("spark.graft.maintenance.leaseTtlSec", "2")
     try {
       val contender = new java.util.concurrent.atomic.AtomicReference[String]("")
-      val held = Similarity.withMaintenanceLease(spark, dir.getPath)("outer-yield") {
+      val held = Artifact.withMaintenanceLease(spark, dir.getPath)("outer-yield") {
         // 2.5 TTLs of "work": without holder-side renewal the lease would
         // read expired and a contender would break it mid-run
         Thread.sleep(5000)
         // the contender must run on ANOTHER thread (same thread re-enters)
         val t = new Thread(() => contender.set(
-          Similarity.withMaintenanceLease(spark, dir.getPath)("yielded")("ran")))
+          Artifact.withMaintenanceLease(spark, dir.getPath)("yielded")("ran")))
         t.start(); t.join(10000)
         "held"
       }
@@ -1011,22 +1011,22 @@ class DedupStoreSpec extends SparkSpec {
     spark.conf.set("spark.graft.maintenance.leaseTtlSec", "2")
     val ndir = s"notouch://${dir.getPath}"
     try {
-      val fallbacksBefore = Similarity.leaseStatsSnapshot()._3
+      val fallbacksBefore = Artifact.leaseStatsSnapshot()._3
       val contender = new java.util.concurrent.atomic.AtomicReference[String]("")
-      val held = Similarity.withMaintenanceLease(spark, ndir)("outer-yield") {
+      val held = Artifact.withMaintenanceLease(spark, ndir)("outer-yield") {
         // 2.5 TTLs of "work": with setTimes a no-op and NO fallback, the
         // lease mtime never advances, the contender reads it expired and
         // breaks a live holder — the silent race the probe must prevent
         Thread.sleep(5000)
         val t = new Thread(() => contender.set(
-          Similarity.withMaintenanceLease(spark, ndir)("yielded")("ran")))
+          Artifact.withMaintenanceLease(spark, ndir)("yielded")("ran")))
         t.start(); t.join(10000)
         "held"
       }
       assert(held == "held")
       assert(contender.get() == "yielded",
         "a live lease on a no-op-setTimes store must still be honored")
-      assert(Similarity.leaseStatsSnapshot()._3 > fallbacksBefore,
+      assert(Artifact.leaseStatsSnapshot()._3 > fallbacksBefore,
         "the renewer must have detected the no-op setTimes and fallen back")
     } finally {
       spark.conf.unset("spark.graft.maintenance.leaseTtlSec")

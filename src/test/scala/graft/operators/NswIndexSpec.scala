@@ -572,6 +572,8 @@ class NswIndexSpec extends SparkSpec {
       assert(ids("entries", "vec_id").intersect(goneIds).isEmpty)
       assert(Similarity.storedNswTombstones(spark, eDir).count() == 0,
         "fully-erased ids need no screening — the tombstone set empties")
+      assert(!new java.io.File(s"$eDir/tombstones").exists(),
+        "an emptied tombstone set is deleted — serves drop the screen")
       assert(!new java.io.File(s"$eDir/edges_delta").exists(),
         "the re-derived edges subsume the deltas")
       // serve sanity: a clean pre-ranked base, window-free
@@ -755,6 +757,12 @@ class NswIndexSpec extends SparkSpec {
       val expected = ((dead.count() + 49) / 50).toInt
       assert(files == expected,
         s"range-partitioned tombstones: $files files, expected $expected")
+      // the IVF tier's delete verb shares the writer: same sized layout
+      Similarity.tombstoneIvfIndex(spark, s"$idx/ivf", dead)
+      val ivfFiles = new java.io.File(s"$idx/ivf/tombstones").listFiles()
+        .count(f => f.isFile && f.getName.endsWith(".parquet"))
+      assert(ivfFiles == expected,
+        s"range-partitioned IVF tombstones: $ivfFiles files, expected $expected")
       assert(Similarity.storedNswTombstones(spark, idx)
         .collect().map(_.getLong(0)).toList.sorted ==
         dead.collect().map(_.getLong(0)).toList.sorted)
@@ -875,7 +883,7 @@ class NswIndexSpec extends SparkSpec {
       // a missing-file failure wrapped the way Spark surfaces it at task
       // time is retried; the second attempt sees the healed table
       var calls = 0
-      val n = Similarity.retryOnMissingFiles(spark, idx) {
+      val n = Artifact.retryOnMissingFiles(spark, idx) {
         calls += 1
         if (calls == 1) throw new org.apache.spark.SparkException("task failed",
           new java.io.FileNotFoundException(s"$idx/edges/part-0.parquet"))
@@ -888,7 +896,7 @@ class NswIndexSpec extends SparkSpec {
       assert(new java.io.File(s"$idx/ivf/lists")
         .renameTo(new java.io.File(s"$idx/ivf/.stage_lists")))
       var calls2 = 0
-      val healed = Similarity.retryOnMissingFiles(spark, idx) {
+      val healed = Artifact.retryOnMissingFiles(spark, idx) {
         calls2 += 1
         // raw read, no resolveNswTable heal in the body itself
         spark.read.parquet(s"$idx/ivf/lists").count()
@@ -898,7 +906,7 @@ class NswIndexSpec extends SparkSpec {
       // a non-missing-file error is NOT retried
       var calls3 = 0
       intercept[IllegalStateException] {
-        Similarity.retryOnMissingFiles(spark, idx) {
+        Artifact.retryOnMissingFiles(spark, idx) {
           calls3 += 1
           throw new IllegalStateException("unrelated")
         }
