@@ -39,8 +39,9 @@ import org.apache.spark.sql.SparkSession
   *                 coords (2/3 of cities), en/de/zh-hans labels, P1705
   *                 native label (every 3rd) or P1448 fallback (every 5th)
   * All entity references point at generated entities of the right kind.
-  * Lines carry an unread `descriptions` pad so the from_json
-  * "touch-only-these-paths" tokenization cost is exercised realistically.
+  * Lines carry an unread `descriptions` pad so the parser's
+  * "touch-only-these-paths" tokenization cost (skipping every field the
+  * entity schema does not name) is exercised realistically.
   */
 object DumpGen {
 

@@ -1,12 +1,21 @@
 package graft.wikidata
 
-/** Typed mirror of the WikiData entity subset (EntitySchema) plus the pure
-  * per-entity extraction logic — a faithful re-expression of
+/** Typed mirror of the WikiData entity subset plus the pure per-entity
+  * extraction logic — a faithful re-expression of
   * /root/reference/src/wiki_data_line.rs, testable without a SparkSession.
   *
-  * Spark reads the dump with `from_json(line, encoder.schema)` and maps these
-  * case classes over partitions; every function here is row-local, so the
-  * extraction scales with partition parallelism and shuffles nothing.
+  * These case classes ARE the parse schema: `Extract.entitySchema` is the
+  * `Entity` encoder's schema, so the parser reads only the JSON paths named
+  * here (the reference's json.rs:1-42 navigation; field inventory in
+  * FIXTURES.md §1). Everything is optional: a malformed entity yields
+  * `None`s rather than killing the job, matching the reference's
+  * log-and-skip per line (main.rs:183-189). Per-property value payloads
+  * differ (entity id, string, monolingual text, coordinate, quantity), so
+  * each claim property has its own precise element type.
+  *
+  * `Extract.parse` parses each dump line straight to an `Entity` and maps
+  * over partitions; every function here is row-local, so the extraction
+  * scales with partition parallelism and shuffles nothing.
   */
 
 final case class TimeV(time: Option[String], timezone: Option[Long])

@@ -1,18 +1,25 @@
 package graft.wikidata
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JsonToStructs}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Dump ingest + extraction: the Spark shape of the reference's
   * handle_line pipeline (/root/reference/src/main.rs:123-234 → SURVEY §3.1):
   *
-  *   text source → sanitize → from_json(typed schema) → tombstone filter
-  *   → classify via broadcast class sets → 9 typed outputs.
+  *   text source → sanitize → parse each line straight to an `Entity`
+  *   → tombstone filter → classify via broadcast class sets → 9 typed outputs.
   *
-  * One pass over the dump: `entities` is cached once, each output is a
-  * narrow flatMap over it (no shuffle except the keyed dedups mandated by
-  * the reference's PK semantics, SURVEY A13). At cluster scale the dump text
+  * One pass over the dump: each line is parsed once into a typed entity, as
+  * the reference's `serde_json::from_str` does (wiki_data_line.rs:350, A8);
+  * the emitted rows are cached once, and each output is a column filter
+  * over them (no shuffle except the keyed dedups mandated by the
+  * reference's PK semantics, SURVEY A13). At cluster scale the dump text
   * source is splittable (bz2/parquet landing), so partition parallelism
   * replaces the reference's rayon fan-out (SURVEY D2).
   */
@@ -33,16 +40,29 @@ object Extract {
 
   val entitySchema = Encoders.product[Entity].schema
 
+  private lazy val entityEncoder = ExpressionEncoder[Entity]().resolveAndBind()
+
+  /** The encoder's deserializer is stateful, so each executor thread keeps
+    * its own; it is generated once per thread, not once per task. */
+  private val entityDeserializer =
+    ThreadLocal.withInitial(() => entityEncoder.createDeserializer())
+
   /** Sanitize + parse the dump lines (wiki_data_line.rs:336-350, A6-A8):
     * drop `[`/`]`/empty lines, strip the trailing comma, parse with the
     * explicit minimal schema (PERMISSIVE: bad lines → null id → dropped,
-    * mirroring the reference's log-and-skip). */
+    * mirroring the reference's log-and-skip).
+    *
+    * Each line goes through Spark's own `from_json` expression (same
+    * schema, no options, the session time zone) and the row it yields
+    * straight through the `Entity` encoder's deserializer, in one
+    * `mapPartitions`. The result is one kryo-encoded column, so no
+    * operator carries Entity's wide columnar form (see [[RawOut]]). */
   def parse(lines: DataFrame): Dataset[Entity] = {
     val spark = lines.sparkSession
     import spark.implicits._
     // A real dump lands as many bz2 blocks / files and arrives well-split;
     // a small single-file input would otherwise parse on ONE task. Shuffle
-    // the raw lines (cheap: strings, before from_json) only in that case.
+    // the raw lines (cheap: strings, before parsing) only in that case.
     val parallelism = spark.sparkContext.defaultParallelism
     // queryExecution.toRdd probes the physical partitioning without the
     // row-conversion lineage that `.rdd` would materialize.
@@ -50,32 +70,49 @@ object Extract {
       if (lines.queryExecution.toRdd.getNumPartitions < parallelism)
         lines.repartition(parallelism)
       else lines
+    val timeZone = spark.sessionState.conf.sessionLocalTimeZone
     split
       .filter(length(col("value")) > 1)
-      .select(from_json(
-        regexp_replace(col("value"), ",$", ""), entitySchema).as("e"))
-      .select(col("e.*"))
-      .as[Entity]
-      .filter((e: Entity) => e.id.isDefined)
+      .select(regexp_replace(col("value"), ",$", ""))
+      .as[String]
+      .mapPartitions { it =>
+        // Built per task: JSON options read the session conf of the task.
+        val json = JsonToStructs(entitySchema, Map.empty,
+          BoundReference(0, StringType, nullable = true), Some(timeZone))
+        val toEntity = entityDeserializer.get()
+        val in = new GenericInternalRow(1)
+        it.flatMap { line =>
+          in.update(0, UTF8String.fromString(line))
+          json.eval(in) match {
+            case row: InternalRow =>
+              val e = toEntity(row)
+              if (e.id.isDefined) Some(e) else None
+            case _ => None
+          }
+        }
+      }(Encoders.kryo[Entity])
   }
 
-  /** One flat tagged row covering every output table — the whole dump is
-    * deserialized from the wide Entity schema exactly ONCE (the per-task
-    * codegen for that schema is megabytes of generated source; paying it per
-    * output table dominated ingest wall time), and the 9 tables are cheap
-    * filters over this cached union. This is also the reference's own shape:
-    * one handle_line pass emitting tagged DataEntry rows to a router
-    * (SURVEY A14, §3.1).
+  /** One flat tagged row covering every output table — each entity is
+    * read and emitted exactly ONCE, and the 9 tables are column filters
+    * over this cached union. This is also the reference's own shape: one
+    * handle_line pass emitting tagged DataEntry rows to a router (SURVEY
+    * A14, §3.1).
     *
-    * Typed-vs-columnar, measured (38 MB / 52k-entity fixture, local[8],
-    * steady state; `perfbench`'s traced `pipeline` run reports the same
-    * split as `extract.parse` vs `extract.tables`): from_json parse alone
-    * 1.4 s; parse + typed emit + all 9 outputs 2.9 s. The emit surcharge ≈ 1× the parse
-    * cost that ANY design pays, so this one-pass route sits within ~2× of
-    * the theoretical floor — while 9 per-output columnar plans would re-pay
-    * the wide-schema parse per table (~9×), and a columnar emit of the
-    * B13/B17/B18 logic (custom time parser, qualifier walks) would live in
-    * interpreted HOF/UDF territory anyway. */
+    * Typed-vs-columnar, measured (`perfbench`'s traced `pipeline` run:
+    * 4,000-entity DumpGen dump, 5.3 MB, local[4]; `extract.parse` is the
+    * parse alone, `extract.tables` is parse + emit + the 9 outputs): parse
+    * 0.6 s wall / 1.5 s busy, tables 3.0 s / 4.3 s, in 11 jobs and 38
+    * tasks. The columnar route this replaced (`from_json` into the Entity
+    * struct, `e.*`, `.as[Entity]`, typed filters on RawOut) took 2.0 / 4.6 s
+    * and 6.0 / 9.3 s for the same jobs and tasks: Entity has far more
+    * nested fields than `spark.sql.codegen.maxFields` (100), so every
+    * operator carrying its columns fell out of whole-stage codegen, and
+    * each task deserialized those expression trees and regenerated
+    * megabytes of projection source. Nine per-output plans would re-pay the
+    * parse per table, and a columnar emit of the B13/B17/B18 logic (custom
+    * time parser, qualifier walks) would live in interpreted HOF/UDF
+    * territory anyway. */
   final case class RawOut(tag: String, id: String,
       s1: Option[String], s2: Option[String],
       n1: Option[Long], n2: Option[Long],
@@ -159,7 +196,7 @@ object Extract {
 
     val tagged = raw.flatMap((e: Entity) => emit(e, bc.value, now)).cache()
 
-    def part(tag: String) = tagged.filter((r: RawOut) => r.tag == tag)
+    def part(tag: String) = tagged.filter(col("tag") === tag)
 
     val countries = part("country").map(r => CountryRow(r.id, r.s1.get))
 

@@ -334,13 +334,16 @@ object Post {
     // Cleanup 03/07 (C17): object_labels keyed (id, lang); first-wins is
     // insertion order — plain labels (native_order NULL) precede native
     // rows, so prefer native_order NULL, then min(native_order), min(label).
+    // The semi-join to the surviving cities runs first: `id` is in the
+    // window's partition key, so the rows are the same, and Catalyst does
+    // not push the semi-join below the window itself.
     // ------------------------------------------------------------------
     val wLab = Window.partitionBy(col("id"), col("lang"))
       .orderBy(col("native_order").asc_nulls_first, col("label").asc)
     val citiesLabels = objectLabels
+      .join(cFinal.select(col("id")), Seq("id"), "left_semi")
       .withColumn("rn", row_number().over(wLab)).filter(col("rn") === 1)
       .select(col("id"), col("lang"), col("label"))
-      .join(cFinal.select(col("id")), Seq("id"), "left_semi")
 
     FinalTables(cFinal, citiesLabels, citiesLanguages)
   }
