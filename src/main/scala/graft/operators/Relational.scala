@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
 
 import graft.Tables
 
@@ -142,7 +144,7 @@ object Relational {
 
   /** Lineage truncation for LOOP-CARRIED tables in the iterative fixpoint
     * operators (CC ×3, SCC, PageRank/PPR, BFS/SSSP/stress, k-core,
-    * k-truss, label propagation, transitive closure, k-means), applied as
+    * k-truss, label propagation, k-means), applied as
     * `.transform(loopCheckpoint)`:
     *
     *  - default: `localCheckpoint()` — fast, but pins blocks to
@@ -159,9 +161,10 @@ object Relational {
     *
     * Both variants are eager and semantically identical (one spec runs a
     * loop under both and proves equal output — ReliableCheckpointSpec).
-    * The [[Derived]] registry's DataFrame pins and the post-processing
-    * materializations (`wikidata.Post`'s closure and final cities) go
-    * through here too, so the reliable setting covers them as well. */
+    * The [[Derived]] registry's DataFrame pins, [[transitiveClosure]]'s
+    * one materialization (which `wikidata.Post` walks) and Post's final
+    * cities go through here too, so the reliable setting covers them as
+    * well. */
   private[graft] def loopCheckpoint(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val reliable = s.conf.getOption("spark.graft.reliableCheckpoint")
@@ -252,39 +255,76 @@ object Relational {
       } finally pool.shutdown()
     }
 
-  /** Iterative frontier expansion, the Spark shape of WITH RECURSIVE.
-    * `edges` has columns (id, parent); `seeds` a single column `seed`.
-    * Returns (seed, node, step) with step 0 = the seed itself.
-    * Each step's frontier goes through [[loopCheckpoint]], which truncates
-    * lineage so 100 iterations stay plannable; each iteration is one join,
-    * all seeds advance together. Frontier emptiness comes from a row count
-    * observed on that checkpoint's own job, so no step runs a second job
-    * to test it (a reliable checkpoint may recompute and over-count; the
-    * count is only read as zero or non-zero).
+  /** Bounded frontier expansion, the Spark shape of WITH RECURSIVE.
+    * `edges` has columns (id, parent) of one type; `seeds` a single column
+    * `seed`. Returns (seed, node, step): step 0 is the seed itself, and
+    * step k has one row per walk of k edges from the seed (bag semantics),
+    * or, with `dedupPerStep`, one row per (seed, node, step), for
+    * k = 1..maxSteps. These are the rows of one join per step.
+    *
+    * The walk costs one Spark action, however deep it goes:
+    *  - step 1 is a join of the seeds with `edges`, grouped per seed;
+    *  - every later frontier node is the parent of some edge, so only the
+    *    edges whose source is itself a parent (the TE→TE sub-graph of the
+    *    admin hierarchy, not the city→TE edges) are collected and
+    *    broadcast as an adjacency map;
+    *  - each task walks its seeds on that map until the frontier is empty
+    *    or `maxSteps` is reached: it counts the walks reaching each node,
+    *    or, with `dedupPerStep`, keeps one node set per step;
+    *  - the rows are materialized once through [[loopCheckpoint]].
+    *
+    * The sub-graph must fit in driver and executor memory. On DumpGen's
+    * 520k-entity world it is at most 20,800 edges, one per plain TE (40
+    * per 1,000 entities); the edges of cities and of city+TE entities,
+    * which are nobody's parent, stay in the step-1 join. A null seed keeps
+    * its step-0 row only; a null parent yields its row and ends that walk.
     */
   def transitiveClosure(edges: DataFrame, seeds: DataFrame, maxSteps: Int = 100,
       dedupPerStep: Boolean = false): DataFrame = {
-    // The edge table is reused every iteration — persist it once instead of
-    // re-scanning (and re-shuffling) its source per step. With its size known
-    // after the first job, AQE turns each step's join into a broadcast join
-    // when the edges fit, which is the plan we'd want on a cluster too.
-    val e = edges.persist()
-    var frontier = seeds.select(col("seed"), col("seed").as("node"), lit(0).as("step"))
-    var acc = frontier
-    var step = 0
-    var done = false
-    while (step < maxSteps && !done) {
-      var next = frontier.join(e, frontier("node") === e("id"))
-        .select(frontier("seed"), e("parent").as("node"),
-          (frontier("step") + 1).as("step"))
-      if (dedupPerStep) next = next.dropDuplicates("seed", "node")
-      val rows = Observation()
-      frontier = next.observe(rows, count(lit(1)).as("n")).transform(loopCheckpoint)
-      if (rows.get("n") == 0L) done = true
-      else { acc = acc.unionAll(frontier); step += 1 }
+    val e = edges.select(col("id"), col("parent"))
+    val s = seeds.select(col("seed"))
+    val adjacency: Map[Any, Array[Any]] = e
+      .join(e.select(col("parent").as("target")),
+        col("id") === col("target"), "left_semi")
+      .collect().groupBy(_.get(0)).map { case (id, rs) => id -> rs.map(_.get(1)) }
+    val adj = s.sparkSession.sparkContext.broadcast(adjacency)
+    val walkSchema = StructType(Seq(s.schema("seed"),
+      e.schema("parent").copy(name = "node"),
+      StructField("step", IntegerType, nullable = false)))
+    val walked = s.join(e, col("seed") === col("id"))
+      .groupBy(col("seed"))
+      .agg(collect_list(struct(col("parent"))).as("firsts")) // keeps null parents
+      .mapPartitions { seedRows =>
+        val graph = adj.value
+        seedRows.flatMap { r =>
+          walk(r.getSeq[Row](1).map(_.get(0)), graph, maxSteps, dedupPerStep)
+            .map { case (node, step) => Row(r.get(0), node, step) }
+        }
+      }(Encoders.row(walkSchema))
+    val out = s.select(col("seed"), col("seed").as("node"), lit(0).as("step"))
+      .unionAll(walked).transform(loopCheckpoint)
+    adj.unpersist()
+    out
+  }
+
+  /** One seed's (node, step) rows for steps 1..maxSteps, from its step-1
+    * nodes (one entry per step-1 edge): each frontier maps a node to the
+    * number of walks reaching it, or to 1 with `dedup`. */
+  private def walk(firsts: Seq[Any], graph: Map[Any, Array[Any]],
+      maxSteps: Int, dedup: Boolean): Iterator[(Any, Int)] = {
+    def add(f: mutable.LinkedHashMap[Any, Long], node: Any, walks: Long): Unit =
+      f(node) = if (dedup) 1L else f.getOrElse(node, 0L) + walks
+    val first = mutable.LinkedHashMap.empty[Any, Long]
+    firsts.foreach(add(first, _, 1L))
+    Iterator.iterate(first) { f =>
+      val next = mutable.LinkedHashMap.empty[Any, Long]
+      for ((node, walks) <- f; parent <- graph.getOrElse(node, Array.empty[Any]))
+        add(next, parent, walks)
+      next
+    }.take(maxSteps).zipWithIndex.takeWhile(_._1.nonEmpty).flatMap {
+      case (f, i) => f.iterator.flatMap { case (node, walks) =>
+        Iterator.fill(walks.toInt)((node, i + 1)) }
     }
-    e.unpersist()  // acc only references the checkpointed frontiers
-    acc
   }
 
   /** Skew-salted inner equi-join: replicates the (small-ish) right side

@@ -48,7 +48,8 @@ object Extract {
     ThreadLocal.withInitial(() => entityEncoder.createDeserializer())
 
   /** Sanitize + parse the dump lines (wiki_data_line.rs:336-350, A6-A8):
-    * drop `[`/`]`/empty lines, strip the trailing comma, parse with the
+    * drop `[`/`]`/empty lines, strip the trailing comma (both on the
+    * line's bytes, see [[sanitized]]), parse with the
     * explicit minimal schema (PERMISSIVE: bad lines → null id → dropped,
     * mirroring the reference's log-and-skip).
     *
@@ -72,25 +73,56 @@ object Extract {
       else lines
     val timeZone = spark.sessionState.conf.sessionLocalTimeZone
     split
-      .filter(length(col("value")) > 1)
-      .select(regexp_replace(col("value"), ",$", ""))
-      .as[String]
+      .select(col("value").cast("binary"))
+      .as[Array[Byte]]
       .mapPartitions { it =>
         // Built per task: JSON options read the session conf of the task.
         val json = JsonToStructs(entitySchema, Map.empty,
           BoundReference(0, StringType, nullable = true), Some(timeZone))
         val toEntity = entityDeserializer.get()
         val in = new GenericInternalRow(1)
-        it.flatMap { line =>
-          in.update(0, UTF8String.fromString(line))
-          json.eval(in) match {
-            case row: InternalRow =>
-              val e = toEntity(row)
-              if (e.id.isDefined) Some(e) else None
-            case _ => None
+        it.flatMap { bytes =>
+          val line = sanitized(bytes)
+          if (line == null) None
+          else {
+            in.update(0, line)
+            json.eval(in) match {
+              case row: InternalRow =>
+                val e = toEntity(row)
+                if (e.id.isDefined) Some(e) else None
+              case _ => None
+            }
           }
         }
       }(Encoders.kryo[Entity])
+  }
+
+  /** A dump line's UTF-8 bytes as the parser reads them, or null for a
+    * line of at most one character (`[`, `]`, empty). The same rows as
+    * `length(value) > 1` and `regexp_replace(value, ",$", "")`, from the
+    * first and last bytes only: a line is one character when it is one
+    * UTF-8 sequence (at most 4 bytes), and Java's `$` also matches before
+    * a final line terminator (\n, \r, \r\n, U+0085, U+2028, U+2029),
+    * so a comma there is dropped too. ASCII bytes never occur inside a
+    * multi-byte sequence, so the byte tests cannot misread a character. */
+  private[wikidata] def sanitized(b: Array[Byte]): UTF8String = {
+    val n = b.length
+    if (n == 0 || n <= 4 && UTF8String.fromBytes(b).numChars() <= 1) null
+    else {
+      def endsWith(suffix: Int*): Boolean = suffix.length <= n &&
+        suffix.indices.forall(k => b(n - suffix.length + k) == suffix(k).toByte)
+      val terminator =
+        if (endsWith('\r', '\n')) 2
+        else if (endsWith('\n') || endsWith('\r')) 1
+        else if (endsWith(0xc2, 0x85)) 2
+        else if (endsWith(0xe2, 0x80, 0xa8) || endsWith(0xe2, 0x80, 0xa9)) 3
+        else 0
+      val comma = n - terminator - 1
+      if (comma < 0 || b(comma) != ',') UTF8String.fromBytes(b)
+      else if (terminator == 0) UTF8String.fromBytes(b, 0, comma)
+      else UTF8String.concat(UTF8String.fromBytes(b, 0, comma),
+        UTF8String.fromBytes(b, comma + 1, terminator))
+    }
   }
 
   /** One flat tagged row covering every output table — each entity is

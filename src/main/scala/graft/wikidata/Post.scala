@@ -18,9 +18,12 @@ import graft.operators.Relational
   *    "fill only rows the previous stage left NULL" order (C14) is a
   *    `coalesce` over the candidates in stage order.
   *  - The reference's per-row recursive-CTE driver loops (per_city.sql /
-  *    per_subdivision.sql, one UPDATE per cursor row) become ONE set-based
-  *    closure from every city and every is_2nd TE, walked once and shared
-  *    by stages 2, 4 and 8, plus one window pass per stage.
+  *    per_subdivision.sql, one UPDATE per cursor row) become ONE closure
+  *    from every city and every is_2nd TE, shared by stages 2, 4 and 8,
+  *    plus one window pass per stage. The closure walks the broadcast
+  *    TE→TE sub-graph inside executor tasks, so it costs the same few
+  *    Spark jobs on a shallow tree and on a cyclic hierarchy walked to its
+  *    100-step cap.
   *  - Where SQLite semantics are unspecified (which row an UPDATE...FROM
   *    picks on multiple matches, GROUP_CONCAT order after DISTINCT), we pick
   *    a deterministic equivalent and document it at the use site.
@@ -95,7 +98,8 @@ object Post {
     // key, so a key that is both a city and a subdivision shares it.
     // One hierarchy walk (C4) from all keys serves stages 2, 4 and 8: each
     // seed's frontier evolves on its own under the same 100-step cap, so
-    // the closure's rows for a seed equal a walk from that seed alone.
+    // the closure's rows for a seed equal a walk from that seed alone. The
+    // walk comes back checkpointed, so the stages below read it once.
     // ------------------------------------------------------------------
     val cityIds = cities0.select(col("id"))
     val secondIds = territorialEntities.filter(col("is_2nd")).select(col("id"))
@@ -104,7 +108,6 @@ object Post {
       teParents.select(col("id"), col("parent")),
       keys.select(col("id").as("seed")),
       maxSteps = 100, dedupPerStep = true)
-      .transform(Relational.loopCheckpoint)
 
     // ------------------------------------------------------------------
     // Stage 2 — find_subdivision.sql: per seed of the closure, the

@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.SparkSpec
 
 /** Graph-centrality operators: fixed-iteration integer PageRank and
@@ -145,42 +148,16 @@ class GraphSpec extends SparkSpec {
   }
 
   // transitiveClosure: exact (seed, node, step) rows, plus the job sites of
-  // the jobs the call starts (frontier emptiness must come from the step's
-  // checkpoint job, never from a separate isEmpty job).
+  // the jobs the call starts (no job may test a frontier for emptiness).
   private def closureRows(edges: Seq[(Long, Long)], seeds: Seq[Long],
       maxSteps: Int = 100, dedupPerStep: Boolean = false)
       : (Seq[(Long, Long, Int)], Seq[String]) = {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val group = s"closure-spec-${java.util.UUID.randomUUID()}"
-    val marker = group + "-marker"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        // the result stage is named after the action's call site
-        if (g == group && e.stageInfos.nonEmpty)
-          sites.add(e.stageInfos.maxBy(_.stageId).name)
-        if (g == marker) markerSeen.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val rows = Relational.transitiveClosure(edges.toDF("id", "parent"),
+    graft.SparkSpec.jobSites {
+      Relational.transitiveClosure(edges.toDF("id", "parent"),
         seeds.toDF("seed"), maxSteps, dedupPerStep)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .toSeq.sorted
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job of the call has been recorded
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (rows, sites.toArray(Array.empty[String]).toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 
@@ -220,5 +197,80 @@ class GraphSpec extends SparkSpec {
     val chain = Seq((1L, 2L))
     assert(closureRows(chain, Nil)._1.isEmpty)
     assert(closureRows(chain, Seq(7L))._1 == Seq((7L, 7L, 0)))
+  }
+
+  /** The step-per-round loop the executor walk replaced, kept as the
+    * oracle: one join per step, all seeds advancing together. */
+  private def loopClosure(edges: DataFrame, seeds: DataFrame, maxSteps: Int,
+      dedupPerStep: Boolean): DataFrame = {
+    val e = edges.persist()
+    var frontier = seeds.select(col("seed"), col("seed").as("node"), lit(0).as("step"))
+    var acc = frontier
+    var step = 0
+    var done = false
+    while (step < maxSteps && !done) {
+      var next = frontier.join(e, frontier("node") === e("id"))
+        .select(frontier("seed"), e("parent").as("node"),
+          (frontier("step") + 1).as("step"))
+      if (dedupPerStep) next = next.dropDuplicates("seed", "node")
+      frontier = next.localCheckpoint()
+      if (frontier.isEmpty) done = true
+      else { acc = acc.unionAll(frontier); step += 1 }
+    }
+    e.unpersist()
+    acc
+  }
+
+  /** Disjoint random components of 3-9 nodes: each node has 0, 1 or 2
+    * parents drawn with replacement inside its component (so cycles,
+    * self-loops and repeated edges), about one parent in twelve is null,
+    * plus one edge with a null source. Seeds repeat, and include a null
+    * and a node outside the graph. */
+  private def randomGraph(rnd: scala.util.Random)
+      : (Seq[(Option[Long], Option[Long])], Seq[Option[Long]]) = {
+    val nodes = (0 until 6).flatMap { c =>
+      (0 until 3 + rnd.nextInt(7)).map(v => (c * 100L + v, c * 100L))
+    }
+    val size = nodes.groupBy(_._2).view.mapValues(_.size).toMap
+    val edges = nodes.flatMap { case (v, base) =>
+      Seq.fill(Seq(0, 1, 1, 1, 2)(rnd.nextInt(5))) {
+        Some(v) -> (if (rnd.nextInt(12) == 0) None
+                    else Some(base + rnd.nextInt(size(base))))
+      }
+    } :+ (None -> Some(0L))
+    val seeds = Seq.fill(12)(Some(nodes(rnd.nextInt(nodes.size))._1))
+    (edges, seeds ++ seeds.take(3) ++ Seq(None, Some(9999L)))
+  }
+
+  test("transitiveClosure equals the step loop on random multi-parent cyclic graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019)
+    for ((dedup, maxSteps, strings) <- Seq((true, 12, false), (false, 12, false),
+        (true, 3, true), (false, 5, true))) {
+      val (edgeRows, seedRows) = randomGraph(rnd)
+      val (edges, seeds) =
+        if (!strings) (edgeRows.toDF("id", "parent"), seedRows.toDF("seed"))
+        else (edgeRows.map { case (a, b) => (a.map("n" + _), b.map("n" + _)) }
+            .toDF("id", "parent"), seedRows.map(_.map("n" + _)).toDF("seed"))
+      val want = loopClosure(edges, seeds, maxSteps, dedup)
+      val got = Relational.transitiveClosure(edges, seeds, maxSteps, dedup)
+      def bag(df: DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+      val label = s"dedupPerStep=$dedup maxSteps=$maxSteps strings=$strings"
+      assert(got.schema == want.schema, label)
+      val (g, w) = (bag(got), bag(want))
+      assert(w.keys.exists(_.getInt(2) == maxSteps), s"$label: the walk must reach the cap")
+      assert(g == w, s"$label: missing ${w.keySet.diff(g.keySet).take(5)}, " +
+        s"extra ${g.keySet.diff(w.keySet).take(5)}, " +
+        s"counts ${w.filter { case (k, n) => g.get(k).exists(_ != n) }.take(5)}")
+    }
+  }
+
+  test("transitiveClosure: a 3-cycle walked 7 or 100 steps starts the same jobs") {
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L))
+    val (rows7, sites7) = closureRows(cycle, Seq(1L), maxSteps = 7)
+    val (rows100, sites100) = closureRows(cycle, Seq(1L), maxSteps = 100)
+    assert(rows7.size == 8 && rows100.size == 101)
+    assert(sites7.size == sites100.size,
+      s"7 steps: ${sites7.mkString(", ")}; 100 steps: ${sites100.mkString(", ")}")
   }
 }

@@ -74,6 +74,18 @@ class ExtractParseSpec extends SparkSpec {
     "not json",
     """{"id":"QB11","labels":{"en":{"language":"en","value":"Kept"}}},""")
 
+  /** The ends of a line that the sanitize steps look at: trailing commas,
+    * a comma before a final line terminator (Java's `$` matches there),
+    * lines of one character of each UTF-8 width, and the dump's wrappers. */
+  private val edgeLines: Seq[String] = {
+    Seq(",", ",,", ",\u2028", ",\u2029", ",\u0085", ",\n", ",\r", ",\r\n",
+      "\u2028,", " ,", ",\u2028,").zipWithIndex.map { case (end, k) =>
+        s"""{"id":"QE$k","labels":{"en":{"language":"en","value":"Edge"}}}$end"""
+      } ++
+      Seq("", ",", "[", "]", "\u00e9", "\u20ac", "\ud83d\ude00", "\r\n",
+        ",\u2028", ",\u0085", "[,", "\u00e9,")
+  }
+
   test("parse returns the from_json route's entities on the synthetic dump") {
     val n = 2000L
     val parsed = assertSameEntities(dumpLines(n))
@@ -88,6 +100,17 @@ class ExtractParseSpec extends SparkSpec {
   test("parse returns the from_json route's entities on malformed lines") {
     assertSameEntities(badLines.toDF("value"))
     badLines.foreach(l => assertSameEntities(Seq(l).toDF("value")))
+  }
+
+  test("parse sanitizes line ends as the length filter and the ,$ strip do") {
+    assert(assertSameEntities(edgeLines.toDF("value")) > 0)
+    // the sanitized text itself, since the parser can read past a comma
+    val want = edgeLines.toDF("value")
+      .select(when(length(col("value")) > 1, regexp_replace(col("value"), ",$", "")))
+      .collect().map(_.getString(0)).toSeq
+    val got = edgeLines.map(l => Option(Extract.sanitized(
+      l.getBytes(java.nio.charset.StandardCharsets.UTF_8))).map(_.toString).orNull)
+    assert(got == want)
   }
 
   /** Every node of an executed plan, through adaptive query stages, reused

@@ -1,6 +1,7 @@
 package graft.wikidata
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** End-to-end test of the post-processing cascade on a synthetic geo world
@@ -201,9 +202,49 @@ class PostSpec extends SparkSpec {
       "[D1,CB,TDA,Dde / Dfr,Dde,TDAfr,TDAeo,X-DA]",
       "[SC,CA,SC,SCNative,SCde,SCNative,SCde,X-SC]"), got.mkString("\n"))
   }
+
+  // DumpGen gives every TE a random P131 parent, so its hierarchy has
+  // cycles and the walk runs to its 100-step cap (the `pipeline` benchmark
+  // re-points it into a tree). The fingerprint of the three final tables
+  // (rows, xor and sum of the row hashes, in the benchmark's form) was
+  // computed by the step-per-round walk this one replaced.
+  test("DumpGen's cyclic hierarchy: pinned final tables, Post within 120 jobs") {
+    val n = 4000L
+    val dir = java.nio.file.Files.createTempDirectory("post-cyclic").toString
+    try {
+      val lines = spark.range(0, n, 1, 4).map(i => DumpGen.entityJson(i, n))
+        .toDF("value")
+      Extract.tableMap(Extract(Extract.parse(lines), ClassSets.seedsOnly,
+        WTime(2026, 0, 0, 0, 0, 0))).foreach { case (name, df) =>
+        df.write.parquet(s"$dir/$name")
+      }
+      spark.catalog.clearCache()
+      def rd(name: String) = spark.read.parquet(s"$dir/$name")
+      val start = System.nanoTime()
+      val (fingerprint, sites) = graft.SparkSpec.jobSites {
+        val f = Post(rd("countries"), rd("object_languages"), rd("languages"),
+          rd("territorial_entities"), rd("territorial_entities_parents"),
+          rd("cities"), rd("cities_countries"), rd("object_labels"))
+        Seq(f.cities, f.citiesLabels, f.citiesLanguages).map { df =>
+          val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
+          val r = df.agg(count(lit(1)), bit_xor(h),
+            coalesce(sum(shiftrightunsigned(h, 24)), lit(0L))).head()
+          f"${r.getLong(0)}:${r.getLong(1)}%016x:${r.getLong(2)}%x"
+        }.mkString("/")
+      }
+      info(f"Post: ${sites.size} jobs, ${(System.nanoTime() - start) / 1e9}%.1f s")
+      assert(fingerprint == PostSpec.cyclicFingerprint)
+      assert(sites.size <= 120, s"${sites.size} jobs: ${sites.mkString(", ")}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }
 
 object PostSpec {
+  /** Final-table fingerprint of Post on DumpGen's 4,000-entity dump. */
+  val cyclicFingerprint: String =
+    "3812:b6f1ebb3015a6320:768db8b53b9eb/" +
+      "10329:8d5346703ac40730:144009ff0a58c0/200:1301949503f2657f:5bbf785818c9"
+
   type Inputs = (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
     DataFrame, DataFrame, DataFrame)
 
