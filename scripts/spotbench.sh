@@ -13,10 +13,10 @@
 #    twice and trust run 2, or warm with a throwaway query first;
 #  - do NOT recompile target/ while this runs (mid-run class reloads mix
 #    versions and the compile steals CPU from the timed run).
-# Self-adjudication without a re-run: the part-lines (cc20_rounds,
-# cc15_phases, dd25_phases, ss11_phases, ss38_phases) printed below —
-# identical rounds / pair counts with uniformly inflated wall = host
-# contention, not code.
+# Self-adjudication without a re-run: read the `work` lines printed below
+# (per query: jobs, tasks, shuffle records, spill, GC, lease acquisitions
+# and blocked ms) — the same jobs/tasks/shuffle records with inflated wall
+# = host contention, not code.
 set -e
 cd "$(dirname "$0")/.."
 SF_DIR=/root/testdata/sf0.1

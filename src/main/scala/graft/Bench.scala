@@ -24,10 +24,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      // arm the bench-only telemetry (dd25's pinned pair count): the
-      // serving path keeps its streaming plan, the captures keep their
-      // self-adjudicating part-lines
-      .config("spark.graft.bench.telemetry", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (executor threads, codegen, shuffle machinery) so the
@@ -57,24 +53,28 @@ object Bench {
     // the driver passes none and benches everything).
     val picked = if (args.isEmpty) SparkEntry.queries
                  else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    // per-query lock-protocol cost (round-13 verdict #4): acquisitions and
-    // blocked-ms attributed to each query, so a lease-cost regression is
-    // read from the artifact instead of inferred from wall deltas
-    val leaseOps = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+    // The first timed run of each query is a telemetry scope: its work
+    // record (jobs, tasks, shuffle records, spill, GC, and the artifact
+    // lease acquisitions and blocked ms) makes a slow capture readable
+    // from the artifact alone — the same work with inflated wall is host
+    // contention, different work is a code change.
+    val works = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
       try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
       val (acq0, blk0, _) = graft.operators.Artifact.leaseStatsSnapshot()
+      val (first, w) = Telemetry.scope(name)(timed(fn))
+      val (acq1, blk1, _) = graft.operators.Artifact.leaseStatsSnapshot()
+      works(name) = s""""$name":{"jobs":${w.jobs.size},"tasks":${w.tasks},""" +
+        s""""shuffle_records":${w.shuffleRecords},"spill_bytes":${w.spillBytes},""" +
+        s""""gc_ms":${w.gcMs},"lease_acq":${acq1 - acq0},"blocked_ms":${blk1 - blk0}}"""
       // Sub-second queries are dominated by shared-host scheduling noise
       // (a 0.24 s join was captured at 1.69 s in one driver round), so
       // they get a median-of-3; anything slower is measured once — its
       // signal already dwarfs the jitter and two extra runs cost minutes.
       // (first >= 0: a crash sentinel must not masquerade as "sub-second"
       // and trigger two more runs of a possibly-multi-minute OOM)
-      val first = timed(fn)
       val runs = if (first >= 0 && first < 0.5) Seq(first, timed(fn), timed(fn))
                  else Seq(first)
-      val (acq1, blk1, _) = graft.operators.Artifact.leaseStatsSnapshot()
-      if (acq1 > acq0 || blk1 > blk0) leaseOps(name) = (acq1 - acq0, blk1 - blk0)
       // Nudge the ContextCleaner: accumulated broadcast/checkpoint blocks
       // from one query otherwise bleed GC pressure into the next timing.
       System.gc()
@@ -100,7 +100,7 @@ object Bench {
     // queries: the round-4 capture proved the driver's stdout tail window
     // is ~2 KB, and ~95 queries × ~27 B ≈ 2.6 KB got the line beheaded
     // into "parsed": null. total still covers EVERY query; the complete
-    // map follows in the chunked part-lines and the file below.
+    // map follows in the chunked `part` lines and the file below.
     val slow = median.sortBy(-_._2).take(30).toMap
     val qsTop = median.collect { case (k, v) if slow.contains(k) =>
       "\"" + k + "\":" + ms(v) }
@@ -115,72 +115,27 @@ object Bench {
       sys.props("java.io.tmpdir") + "/graft_bench.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (jsonFull + "\n" + s"""{"metric":"runs","queries":$runsJson,"sf":"$sfDir"}""" + "\n")
+        (jsonFull + "\n" + s"""{"metric":"runs","queries":$runsJson,"sf":"$sfDir"}""" + "\n" +
+          s"""{"metric":"work","queries":${works.values.mkString("{", ",", "}")}}""" + "\n")
           .getBytes("UTF-8"))
       println(f"[bench] wrote $outPath, total=$total%.2f s over ${results.size}%d queries, ${errs.size}%d FAILED")
     } catch { case e: java.io.IOException =>
       println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    // The driver keeps only a TAIL of stdout, so the per-query map is
+    // A capture may keep only a TAIL of stdout, so the per-query maps are
     // printed LAST as short (<1 KB) individually-valid JSON lines — a
     // window too small for the full one-line JSON still retains complete
-    // trailing chunks — and the capped canonical JSON (top-30 map,
-    // ~1 KB regardless of query count) is the final line.
-    qs.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
-      println(s"""{"metric":"part","idx":${i + 1},"queries":${chunk.mkString("{", ",", "}")}}""")
-    }
-    // cc20's per-peel-round telemetry (its timed run is the last trussEdges
-    // call in this JVM): makes a slow capture self-explaining — identical
-    // rounds with uniformly inflated wall = host contention; extra rounds
-    // or one slow round = a real regression. See VERDICT r7 finding #1.
-    val truss = graft.operators.Relational.trussRoundLog.get()
-    if (truss.nonEmpty) {
-      val rj = truss.map { case (r, nb, na, sec) =>
-        s"""{"round":$r,"edges_in":$nb,"edges_out":$na,"sec":${ms(sec)}}""" }
-        .mkString("[", ",", "]")
-      println(s"""{"metric":"cc20_rounds","rounds":$rj}""")
-    }
-    // ss38's phase split (build / append / serve-materialize): the total is
-    // dominated by the deliberate cold standing-index build — the
-    // O(increment) claim lives in the append share, which must NOT grow
-    // with the corpus (round-9 delta-append telemetry, cc20_rounds pattern)
-    graft.operators.Similarity.ss38PhaseLog.get().foreach {
-      case (b, a, sv) => println(
-        s"""{"metric":"ss38_phases","build_sec":${ms(b)},""" +
-          s""""append_sec":${ms(a)},"serve_sec":${ms(sv)}}""")
-    }
-    // ss11's train-phase split (coarse Lloyd / PQ codebooks): the ADC join
-    // share is ss11's benched total minus these — holds the r11 watch item
-    // (a 1.5× capture drift) apart from host noise without a re-run
-    graft.operators.Similarity.pqPhaseLog.get().foreach {
-      case (c, p) => println(
-        s"""{"metric":"ss11_phases","coarse_train_sec":${ms(c)},""" +
-          s""""pq_train_sec":${ms(p)}}""")
-    }
-    // cc15's split (graph build / star-contraction rounds / CC wall) and
-    // dd25's (candidate pairs / candidate wall): the last two heavies
-    // without self-adjudicating telemetry (round-12 verdict #5) — a
-    // contended capture now reads as "same rounds / same pair count,
-    // uniform wall inflation" from the artifact alone
-    graft.operators.Similarity.cc15PhaseLog.get().foreach {
-      case (g, r, c) => println(
-        s"""{"metric":"cc15_phases","graph_sec":${ms(g)},""" +
-          s""""star_rounds":$r,"cc_sec":${ms(c)}}""")
-    }
-    graft.operators.Dedup.dd25PhaseLog.get().foreach {
-      case (n, w) => println(
-        s"""{"metric":"dd25_phases","cand_pairs":$n,""" +
-          s""""cand_sec":${ms(w)}}""")
-    }
-    // lock-protocol attribution: every query that acquired an artifact
-    // lock, with its blocked wall — the store/index families in practice
-    if (leaseOps.nonEmpty) {
-      val lj = leaseOps.toSeq.map { case (k, (a, b)) =>
-        s""""$k":{"acq":$a,"blocked_ms":$b}""" }
-      lj.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
-        println(s"""{"metric":"lease_ops","idx":${i + 1},"queries":${chunk.mkString("{", ",", "}")}}""")
-      }
-    }
+    // trailing chunks — the work records first, then the timings, and the
+    // capped canonical JSON (top-30 map, ~1 KB regardless of query count)
+    // is the final line.
+    def chunked(metric: String, entries: Seq[String]): Unit =
+      entries.foldLeft(Vector(Vector.empty[String])) { (ls, e) =>
+        if (ls.last.nonEmpty && (ls.last :+ e).mkString(",").length > 950) ls :+ Vector(e)
+        else ls.init :+ (ls.last :+ e)
+      }.zipWithIndex.foreach { case (es, i) => println(
+        s"""{"metric":"$metric","idx":${i + 1},"queries":${es.mkString("{", ",", "}")}}""") }
+    chunked("work", works.values.toSeq)
+    chunked("part", qs)
     // host window label (start + end loadavg): a contended capture now
     // reads as contended from the artifact alone — BASELINE.md keys the
     // clean-band comparison off this line

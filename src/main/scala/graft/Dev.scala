@@ -5,10 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** Dev utility: time queries repeatedly / print plans.
   *
   * Usage: graft.Dev <sfDir> <reps> [query ...]   (no names = all)
-  *        graft.Dev <sfDir> explain <query>      (formatted plan)
+  *        graft.Dev <sfDir> jobs|plans|explain <query>
+  *          (per-job wall + call site | every SQL execution's plan,
+  *           checkpoints included | the formatted plan)
   */
 object Dev {
   def main(args: Array[String]): Unit = {
+    val modes = Set("counts", "jobs", "plans", "explain", "sql")
+    if (args.length < 2 || !modes(args(1)) && args(1).toIntOption.isEmpty) {
+      System.err.println("usage: graft.Dev <sfDir> counts|jobs|plans|explain|sql|<reps> [query ...]")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
@@ -26,22 +33,26 @@ object Dev {
       println("rows-only: " + (q -- o).toSeq.sorted.mkString(", "))
       println("orphan oracles: " + (o -- q).toSeq.sorted.mkString(", "))
     } else if (args(1) == "jobs") {
-      // per-Spark-job wall time + call site for one query — finds which
-      // step of a multi-job verb dominates
-      val starts = new scala.collection.concurrent.TrieMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          // properties is null for jobs submitted without local properties
-          starts(e.jobId) = (e.time, Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""))
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          starts.get(e.jobId).foreach { case (t0, cs) =>
-            println(f"job ${e.jobId}%3d ${(e.time - t0) / 1e3}%7.2f s  $cs") }
-      })
+      // per-Spark-job wall time + call site for one query, with the action
+      // whose SQL execution ran it — finds which step of a multi-job verb
+      // dominates
       for (r <- 1 to 2) {
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(args(2))(spark, sfDir).count()
-        println(f"rep$r total ${(System.nanoTime() - t0) / 1e9}%8.2f s ($n rows)")
+        val (n, w) = Telemetry.scope(args(2))(
+          SparkEntry.queries(args(2))(spark, sfDir).count())
+        val action = w.plans.map(p => p.executionId -> s"  [${p.description}]").toMap
+        w.jobs.foreach(j => println(f"job ${j.id}%3d ${(j.endMs - j.startMs) / 1e3}%7.2f s  " +
+          j.site + action.getOrElse(j.executionId, "")))
+        println(f"rep$r total ${(System.nanoTime() - t0) / 1e9}%8.2f s ($n rows, " +
+          f"${w.jobs.size} jobs, ${w.tasks} tasks, busy ${w.busyMs / 1e3}%.2f s, " +
+          s"GC ${w.gcMs} ms, shuffle ${w.shuffleBytes} B / ${w.shuffleRecords} records, " +
+          s"spill ${w.spillBytes} B)")
+      }
+    } else if (args(1) == "plans") {
+      val (_, w) = Telemetry.scope(args(2))(
+        SparkEntry.queries(args(2))(spark, sfDir).count())
+      w.plans.foreach { p =>
+        println(s"== execution ${p.executionId}: ${p.description} ==\n${p.plan}")
       }
     } else if (args(1) == "explain") {
       SparkEntry.queries(args(2))(spark, sfDir).explain("formatted")

@@ -528,8 +528,9 @@ object Artifact {
 
   // Lock telemetry (round-13 verdict #4): successful acquisitions, total
   // wall-ms spent blocked waiting for a held lock, and renewal fallbacks
-  // (see withLockFile). Bench snapshots these around each query and emits
-  // a part-line, so the lease protocol's cost is attributed, not inferred.
+  // (see withLockFile). Bench snapshots these around each query's first
+  // timed run and reports them in its `work` line, so the lease protocol's
+  // cost is attributed, not inferred.
   private val leaseAcquisitions =
     new java.util.concurrent.atomic.AtomicLong()
   private val leaseBlockedMs =

@@ -2298,19 +2298,13 @@ object Dedup {
   // and re-read by four consumers; candidates come from the rare-posting
   // self-join (fan-out bounded by df ≤ 20 → ≤190 pairs per shingle);
   // dots touch only candidate pairs' postings, never the O(n²) cross
-  // join.
+  // join. The candidate pairs stream into the verify join unpinned. A
+  // slow capture is read from Bench's `work` line: the same jobs/tasks/
+  // shuffle records with inflated wall is host contention; a jump in
+  // shuffle records means the posting band drifted.
   // ---------------------------------------------------------------------
-  /** dd25's phase split of the LAST run in this JVM: (candidate pairs,
-    * candidate-generation wall). The exact-verify share is dd25's benched
-    * total minus this wall (the ss11_phases arithmetic), so a contended
-    * capture self-adjudicates: same pair count + uniform wall inflation =
-    * host noise; a pair-count jump = the posting-band dial drifted. */
-  val dd25PhaseLog = new java.util.concurrent.atomic.AtomicReference[
-    Option[(Long, Double)]](None)
-
   def dd25CosinePairs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    val t0 = System.nanoTime()
     val docs = Tables(s, dir, "documents")
     // The whole shingle-count derivation is row-local (a doc's shingles all
     // live in its own token array), so it is ONE codegen'd pass per row
@@ -2322,39 +2316,19 @@ object Dedup {
     // checkpointed posting rows. Values are identical: same shingles (the
     // expression mirrors the concat-null filter), same local counts, same
     // binary-sorted key order that sort_array produced.
-    val dv0 = Tables.balanced(docs.select(col("doc_id"), split(col("text"), " ").as("tk")))
+    val dv = Tables.balanced(docs.select(col("doc_id"), split(col("text"), " ").as("tk")))
       .select(col("doc_id"), expr("shingle_rle(tk)").as("r"))
       .select(col("doc_id"), col("r.ss").as("ss"), col("r.cs").as("cs"),
         col("r.n2").as("n2"))
-    // the returned plan is checkpoint-truncated; the one-pass claim is
-    // evidenced by this env-gated pre-checkpoint dump (r14 plan hygiene)
-    if (sys.env.contains("GRAFT_PLAN_DEBUG"))
-      System.err.println("[plan] dd25 shingle-count pre-checkpoint:\n" +
-        dv0.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    val dv = dv0
       .localCheckpoint() // feeds df, candidates, and the dot join
     val sc0 = dv.select(col("doc_id"), explode(col("ss")).as("s"))
     val dfreq = sc0.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val rare = sc0.join(dfreq.filter(col("df").between(2, 20)).select("s"), Seq("s"))
       .select(col("doc_id"), col("s"))
-    val candRaw = rare.as("a").join(rare.as("b"),
+    val cand = rare.as("a").join(rare.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
       .distinct()
-    // telemetry is BENCH-only (round-13 advice): the checkpoint+count pins
-    // the full candidate-pair set in executor block-manager storage, which
-    // the serving path must not pay — unflagged, the pairs stream straight
-    // through the verify join below. Bench sets the flag, so the captures
-    // keep their self-adjudicating pair count.
-    val cand =
-      if (s.conf.getOption("spark.graft.bench.telemetry").contains("true")) {
-        // pinned: the pair set feeds one join but is ALSO the telemetry —
-        // the count reads the checkpoint, not a recompute
-        val pinned = candRaw.localCheckpoint()
-        dd25PhaseLog.set(Some((pinned.count(), (System.nanoTime() - t0) / 1e9)))
-        pinned
-      } else candRaw
     // Exact verify WITHOUT the posting-join blowup (r14, guide §2.3/§3.3):
     // the join form (cand ⋈ postings(doc1) ⋈ postings(doc2) on s, then
     // SUM) materializes |cand| × postings-per-doc rows — 71.6M at sf0.1
@@ -2469,13 +2443,8 @@ object Dedup {
     // window minima, same distinct set — winnowing fingerprints are
     // value-defined, the tie convention never matters), and the exploded
     // (doc_id, fp) rows below are already distinct by construction.
-    val fps0 = Tables.balanced(docs.select(col("doc_id"), split(col("text"), " ").as("tk")))
+    val fps = Tables.balanced(docs.select(col("doc_id"), split(col("text"), " ").as("tk")))
       .select(col("doc_id"), explode(expr("winnow_fps(tk)")).as("fp"))
-    if (sys.env.contains("GRAFT_PLAN_DEBUG"))
-      System.err.println("[plan] dd26 fps pre-checkpoint:\n" +
-        fps0.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    val fps = fps0
       .localCheckpoint() // feeds the df filter and both join sides
     val banded = fps.join(
       fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))

@@ -130,15 +130,6 @@ object Relational {
   // (the reference loops per row, src/post/mod.rs:96-107 — see SURVEY C16).
   // ---------------------------------------------------------------------
 
-  /** Per-peel-round record of the LAST [[trussEdges]] run in this JVM:
-    * (round, edges-before, edges-after, wall seconds). Exists so the
-    * bench artifact is self-explaining: a slow cc20 capture can be read
-    * as "same rounds, wall inflated uniformly" (host contention) vs
-    * "extra rounds / one slow round" (a real regression) from the
-    * artifact alone — Bench prints it as its own part-line. */
-  val trussRoundLog = new java.util.concurrent.atomic.AtomicReference[
-    Seq[(Int, Long, Long, Double)]](Nil)
-
   // once-per-JVM latch for loopCheckpoint's reliable-mode config warnings
   private val reliableWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -519,8 +510,6 @@ object Relational {
       // so they don't need this.
       val jumped = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
       val s = labelSum(jumped)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[ccjump] round sum=$s at ${System.nanoTime() / 1000000}ms")
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = jumped
@@ -968,10 +957,12 @@ object Relational {
     * with `maxRounds` as a loud-failure fence, lineage cut per round;
     * most of the work is in the first rounds — the edge set typically
     * collapses geometrically (115k→93k→67k→…→5k at sf0.01, k=10).
+    * Each peel round is a fixed set of jobs, so Bench's `work` line for
+    * cc20 tells the cases apart: the same jobs/tasks/shuffle records with
+    * inflated wall is host contention, extra jobs are extra rounds.
     * Returns the surviving undirected (a, b) edges, a < b. */
   def trussEdges(edges: DataFrame, k: Int, maxRounds: Int = 40): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    trussRoundLog.set(Nil)
     val minSup = k - 2
     var e = edges.select(col("a"), col("b")).transform(loopCheckpoint)
     var n = e.count()
@@ -1019,7 +1010,6 @@ object Relational {
       org.apache.spark.util.sketch.BloomFilter] = null
     var bloomBuiltAt = 0L
     while (round < maxRounds && result == null) {
-      val roundT0 = System.nanoTime()
       // round 1 peels the ORIGINAL edge set — or0 IS its orientation
       val orE = if (round == 0) or0 else or0.join(e, Seq("a", "b"), "left_semi")
       val wedges0 = orE.as("x").join(orE.as("y"),
@@ -1043,8 +1033,6 @@ object Relational {
           // so the replaced handle has no live consumers
           if (retired != null) retired.unpersist(false)
           bloomBuiltAt = n
-          if (sys.env.contains("GRAFT_CC_DEBUG"))
-            System.err.println(s"[truss] bloom build at n=$n (round ${round + 1})")
         }
         wedges0.filter(org.apache.spark.sql.graft.ColumnShim.column(
           graft.functions.BloomMightContainBC(
@@ -1080,23 +1068,8 @@ object Relational {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= minSup)
         .select(col("a"), col("b"))
-        // the committed final plan is lineage-truncated by loopCheckpoint,
-        // so the per-round exchange claims are evidenced by this env-gated
-        // PRE-checkpoint dump (plans/r15/, round-14 verdict #5)
-        .transform(df => {
-          if (round == 0 && sys.env.contains("GRAFT_PLAN_DEBUG"))
-            System.err.println("[plan] trussEdges round-1 pre-checkpoint:\n" +
-              df.queryExecution.explainString(
-                org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          df
-        })
         .transform(loopCheckpoint)
       val n2 = e2.count()
-      trussRoundLog.set(trussRoundLog.get() :+
-        (round + 1, n, n2, (System.nanoTime() - roundT0) / 1e9))
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(
-          s"[truss] round ${round + 1}: $n -> $n2 edges at ${System.nanoTime() / 1000000}ms")
       round += 1
       if (n2 == n) result = e2
       e = e2
@@ -1175,16 +1148,9 @@ object Relational {
     // closing edge is undirected; e0 stores it as (min, max) = (w1, w2)
     val tri = wedges.join(e0,
       col("w1") === col("a") && col("w2") === col("b"))
-    val counts0 = tri
+    val counts = tri
       .select(explode(array(col("u"), col("w1"), col("w2"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    // the returned plan is checkpoint-truncated; the wedge/bloom-screen
-    // claims are evidenced by this env-gated pre-checkpoint dump
-    if (sys.env.contains("GRAFT_PLAN_DEBUG"))
-      System.err.println("[plan] triangleCounts pre-checkpoint:\n" +
-        counts0.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    val counts = counts0
       .localCheckpoint() // eager: materialized before `or` goes away
     or.unpersist()
     bloomBc.unpersist(false) // counts are materialized; no live consumers

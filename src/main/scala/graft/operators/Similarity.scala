@@ -681,20 +681,13 @@ object Similarity {
   // min-label components (cc01's machinery); singleton points (no mutual
   // neighbor) keep their own id as cluster — the corpus never vanishes
   // from the report. Oracle = the same graph chain + recursive closure.
+  // A slow capture is read from Bench's `work` line: the same jobs/tasks/
+  // shuffle records with inflated wall is host contention; extra star
+  // rounds show as extra jobs.
   // ---------------------------------------------------------------------
-  /** cc15's phase split of the LAST run in this JVM: (mutual-graph build
-    * wall, star-contraction rounds, CC loop wall). Bench prints it as a
-    * part-line (the cc20_rounds discipline): a contended capture reads as
-    * "same rounds, wall inflated uniformly" from the artifact alone —
-    * extra rounds are a real regression, nothing else is. */
-  val cc15PhaseLog = new java.util.concurrent.atomic.AtomicReference[
-    Option[(Double, Int, Double)]](None)
-
   def cc15EmbeddingClusters(s: SparkSession, dir: String): DataFrame = {
-    val t0 = System.nanoTime()
     val mutual = ss28KnnGraph(s, dir).filter(col("mutual"))
       .select(col("src").as("a"), col("dst").as("b")).localCheckpoint()
-    val graphWall = (System.nanoTime() - t0) / 1e9
     // Star-contraction CC (provably O(log n) rounds) rather than the
     // O(d) min-label variant: identical components (both converge to the
     // per-component min id — cc02 proves the equivalence against cc01's
@@ -704,13 +697,8 @@ object Similarity {
     // first and REJECTED: on shuffled-id chains its label(label) lookup
     // hops across id space, not along the path, and degenerates to the
     // same linear creep as min-label (see connectedComponentsJump's doc).
-    var rounds = 0
-    val t1 = System.nanoTime()
-    // the loop materializes per round (loopCheckpoint), so timing the call
-    // captures the CC wall; the report join below is edge-free and cheap
-    val comp = Relational.connectedComponentsStar(mutual, r => rounds = r)
+    val comp = Relational.connectedComponentsStar(mutual)
       .select(col("node").as("vec_id"), col("component"))
-    cc15PhaseLog.set(Some((graphWall, rounds, (System.nanoTime() - t1) / 1e9)))
     Tables(s, dir, "embeddings").select(col("vec_id"))
       .join(comp, Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -874,16 +862,6 @@ object Similarity {
         coalesce(col("m"), lit(false)).as("mutual"))
   }
 
-  /** Phase wall-times of the LAST ss38 run in this JVM — (build, append,
-    * serve-materialize) seconds, printed by Bench as its own part-line so
-    * the artifact self-explains (cc20_rounds' pattern): ss38's total is
-    * DOMINATED by the deliberate cold standing-index build; the
-    * O(increment) claim is the append share, and a capture where the
-    * append share grows with the corpus is a real regression while a
-    * uniformly inflated triple is host contention. */
-  val ss38PhaseLog = new java.util.concurrent.atomic.AtomicReference[
-    Option[(Double, Double, Double)]](None)
-
   def ss38KnnGraphRollforward(s: SparkSession, dir: String): DataFrame = {
     // round 8 moved the roll-forward onto the artifact verbs; round 9 made
     // the append LSM-shaped — build the standing graph index, append the
@@ -905,22 +883,19 @@ object Similarity {
 
   /** The suite's ROLLED-FORWARD index (build on standing, append the
     * vec_id % 10 == 3 increment as one delta partition), built once per
-    * JVM — ss38 measures the cycle (and records [[ss38PhaseLog]]); ss49
-    * serves a beam over the resulting delta-bearing artifact. Contents
-    * are a pure function of the corpus, so sharing across queries is
-    * order-independent. */
+    * JVM — ss38 measures the cycle; ss49 serves a beam over the resulting
+    * delta-bearing artifact. Both read the merged edges right after, which
+    * promotes the delta stage and runs the sprawl check. Contents are a
+    * pure function of the corpus, so sharing across queries is
+    * order-independent. Build vs append cost is read from Bench's `work`
+    * line for ss38: the same jobs/tasks/shuffle records with inflated wall
+    * is host contention. */
   private def rolledNswIndexFor(s: SparkSession, dir: String,
       base: DataFrame): String = {
     val idxDir = indexPathFor(dir + "#graphroll")
     Derived(s, idxDir) {
-      val t0 = System.nanoTime()
       buildNswIndex(s, base.filter(col("vec_id") % 10 =!= 3), idxDir)
-      val t1 = System.nanoTime()
       appendToNswIndex(s, idxDir, base.filter(col("vec_id") % 10 === 3), "roll")
-      val t2 = System.nanoTime()
-      storedNswEdgesMerged(s, idxDir).localCheckpoint().count()
-      val t3 = System.nanoTime()
-      ss38PhaseLog.set(Some(((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)))
     }
     idxDir
   }
@@ -2915,16 +2890,7 @@ object Similarity {
         .repartition(col("q_id"))
         .dropDuplicates(Seq("q_id", "c_id"))
       visited = visited.unionByName(grown)
-      val scored = beam(grown)
-      // the committed final plans are lineage-truncated by the hop
-      // checkpoints, so the one-exchange-per-hop and two-hops-per-job
-      // claims are evidenced by this env-gated PRE-checkpoint dump of
-      // the h=3 fused job (spans hops 2-3; plans/r15/, r14 verdict #5)
-      if (h == 3 && fuseHops && sys.env.contains("GRAFT_PLAN_DEBUG"))
-        System.err.println("[plan] nswBeamSearch fused hops 2-3 pre-checkpoint:\n" +
-          scored.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      b = hopCk(scored, h)
+      b = hopCk(beam(grown), h)
     }
     (b.filter(col("rnk") <= K)
        .select(col("q_id"), col("c_id"), col("rnk"), col("cos")),
@@ -4575,23 +4541,14 @@ object Similarity {
         col("cluster").as("code")))
   }
 
-  // wall of the LAST PQ training actually executed in this JVM — the
-  // ss11_phases part-line keeps reporting the real build cost even when
-  // a later query hits the memo
-  private val pqTrainWallRef =
-    new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-
   /** The PQ training pipeline, a [[Derived]] key (round 15): ss09/ss10
     * and the IVF-PQ family each re-ran the identical per-subspace Lloyd
     * chain (≈2 s) inside one process. */
   private def pqAllFor(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     Derived(s, s"pqall#$dir") {
-      val t0 = System.nanoTime()
       val (pts, cents, codes) = pqAll(qvec(s, dir).localCheckpoint())
-      val out = (pts, cents, Relational.loopCheckpoint(codes))
-      pqTrainWallRef.set((System.nanoTime() - t0) / 1e9)
-      out
+      (pts, cents, Relational.loopCheckpoint(codes))
     }
 
   def ss09PqEncode(s: SparkSession, dir: String): DataFrame =
@@ -4654,19 +4611,6 @@ object Similarity {
   // BROADCAST query LUTs — one map-side pass over the index, and the
   // only per-query shuffle is the final top-k window.
   // ---------------------------------------------------------------------
-  /** Phase wall-times of the LAST IVF-PQ build in this JVM — (coarse
-    * Lloyd train, PQ train) seconds, printed by Bench as an `ss11_phases`
-    * part-line (cc20_rounds' pattern — round-11 verdict watch #2: ss11
-    * drifted ~1.5× in one driver capture with no telemetry to separate
-    * code from host). Both phases materialize eagerly inside their
-    * builders (per-round localCheckpoints), so the timestamps cost
-    * nothing extra; the ADC join share is ss11's benched total minus
-    * these two — a capture where the TRAIN shares hold and only the
-    * total inflates is host contention, a grown train share is a real
-    * regression in the shared Lloyd/assignment helpers. */
-  val pqPhaseLog = new java.util.concurrent.atomic.AtomicReference[
-    Option[(Double, Double)]](None)
-
   /** The IVF-PQ candidate stream shared by ss11 (ADC top-k is the answer)
     * and ss14 (ADC is the SCREEN, exact rerank is the answer): distinct
     * (q_id, c_id, adc_d2) for candidates inside the probed lists. Returns
@@ -4676,17 +4620,18 @@ object Similarity {
     // ss14 and ss15 all consume exactly this pair
     Derived(s, s"ivfpq#$dir")(ivfPqScoredCompute(s, dir))
 
+  /** Builds the coarse quantizer, the PQ codebooks and the ADC-scored
+    * candidates. Whether a slow ss11 is the training or the host is read
+    * from Bench's `work` line: the same jobs/tasks/shuffle records with
+    * inflated wall is host contention. */
   private def ivfPqScoredCompute(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val base = qvec(s, dir).localCheckpoint()
-    val tCoarse0 = System.nanoTime()
     // coarse quantizer + assignment + probes: the shared per-JVM memos
-    // (identical machinery and tiebreaks to ss03). The phase line keeps
-    // reporting the wall of what actually ran in this JVM.
+    // (identical machinery and tiebreaks to ss03)
     val cents = coarseCentroidsFor(s, dir)
       .select(col("cent_id"), col("cv").as("v2"), col("cnrm").as("n2"))
     val assigned = coarseAssignedFor(s, dir)
-    val tCoarse1 = System.nanoTime()
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("ccos").desc, col("cent_id").asc)
     val probes = base.filter(col("vec_id") % 100 === 0)
@@ -4697,12 +4642,8 @@ object Similarity {
       .withColumn("crn", row_number().over(wProbe)).filter(col("crn") <= nprobe)
       .select(col("q_id"), col("cent_id"))
     // PQ side: codebooks + codes from the shared per-JVM training memo,
-    // then the stored list-codes layout. The phase line reports the wall
-    // of the training that actually ran in this JVM (pqAllFor records
-    // it), so the artifact stays self-adjudicating under the memo.
+    // then the stored list-codes layout
     val (pts, pcents, codes) = pqAllFor(s, dir)
-    pqPhaseLog.set(Some(
-      ((tCoarse1 - tCoarse0) / 1e9, pqTrainWallRef.get())))
     val listCodes = assigned.join(pqCodesWide(codes),
         col("a_id") === col("vec_id"))
       .select(col("cent_id"), col("vec_id"), col("codes"))
