@@ -380,7 +380,7 @@ object Artifact {
     * unscreened plan (absent ledger = zero screening cost). */
   private[operators] def foldLedger(s: SparkSession, table: String,
       left: DataFrame)(write: DataFrame => Unit): Unit = {
-    val pinned = left.localCheckpoint()
+    val pinned = left.transform(Relational.pin)
     if (pinned.isEmpty)
       fs(s, table).delete(new org.apache.hadoop.fs.Path(table), true)
     else write(pinned)

@@ -20,7 +20,7 @@ import graft.Tables
   *    n-gram strings keeps the build side tiny.
   */
 object Curation {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   /** First 8 hex chars of md5 as a non-negative long in [0, 2^32) — the
     * portable content-hash bucket both Spark and DuckDB compute
@@ -202,7 +202,7 @@ object Curation {
       .select(col("doc_id"),
         posexplode(expr("ngram_hashes(toks, 8)")).as(Seq("pos0", "gh")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("gh"))
-      .localCheckpoint()
+      .transform(pin)
     val keep = pg.select(col("doc_id"), col("gh")).distinct()
       .groupBy(col("gh")).agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2 && col("nd") <= spanGramDocCap)
@@ -829,7 +829,7 @@ object Curation {
     // downstream exchanges then carry ~24-byte rows. Callers no longer
     // pre-checkpoint (this cut subsumes tp04/tp08's).
     val toks = docsTokens.withColumn("bkt", expr(s"doc_id div $packBucketWidth"))
-      .localCheckpoint()
+      .transform(pin)
     val bucketPrefix = toks.groupBy(pc :+ col("bkt"): _*)
       .agg(sum(col("n_tokens")).as("bsum"))
       .withColumn("bpre",
@@ -1346,7 +1346,7 @@ object Curation {
   def ds17PrioritySample(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     // TakeOrderedAndProject(k+1); ≤ k+1 rows from here on
-    val head = prioHead(docs).localCheckpoint()
+    val head = prioHead(docs).transform(pin)
     val tau = head.agg(min(col("priority")).as("tau"))
     head.orderBy(col("priority").desc, col("doc_id")).limit(prioK)
       .crossJoin(broadcast(tau))
@@ -1976,18 +1976,18 @@ object Curation {
   private val kcRounds = 4
 
   def ds20KcenterCoreset(s: SparkSession, dir: String): DataFrame = {
-    val base = Similarity.qvec(s, dir).localCheckpoint()
+    val base = Similarity.qvec(s, dir)
     def asCenter(df: DataFrame): DataFrame =
       df.select(col("vec_id").as("c_id"), col("v").as("cv"),
         col("nrm").as("cn"))
-    var centers = asCenter(base.filter(col("vec_id") === 0)).localCheckpoint()
+    var centers = asCenter(base.filter(col("vec_id") === 0)).transform(pin)
     for (_ <- 2 to kcRounds) {
       val dmin = base.join(broadcast(centers), lit(true))
         .withColumn("d2", col("nrm") + col("cn") - expr("2 * dot_l(v, cv)"))
         .groupBy(col("vec_id")).agg(min(col("d2")).as("dmin"))
       val next = asCenter(dmin.join(base, Seq("vec_id"))
         .orderBy(col("dmin").desc, col("vec_id").asc).limit(1))
-      centers = centers.unionByName(next).localCheckpoint()
+      centers = centers.unionByName(next).transform(pin)
     }
     base.join(broadcast(centers), lit(true))
       .withColumn("d2", col("nrm") + col("cn") - expr("2 * dot_l(v, cv)"))
@@ -2558,7 +2558,7 @@ object Curation {
   def tp12GdprErasure(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val del = docs.filter(col("doc_id") % 83 === 7)
-      .select(col("doc_id")).localCheckpoint()
+      .select(col("doc_id")).transform(pin)
     val erased = docs.join(del, Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("n_chars")), lit(0L)).as("detail"))
@@ -2658,7 +2658,7 @@ object Curation {
     val docs = Tables(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 10 < 8)
     val storeDir = DedupStore.storePathFor(dir + "#tp13")
-    val base = Similarity.qvec(s, dir).localCheckpoint()
+    val base = Similarity.qvec(s, dir)
     val goneV = base.filter(col("vec_id") % 9 === 0).select(col("vec_id"))
     val ivfDir = Similarity.indexPathFor(dir + "#tp13ivf")
     val nswDir = Similarity.indexPathFor(dir + "#nswerase")

@@ -33,7 +33,7 @@ import graft.Tables
   * integer arithmetic: cos ≥ t  ⟺  dot > 0 ∧ dot²·denom ≥ t²·denom·‖a‖²‖b‖²).
   */
 object Dedup {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   /** (doc_id, shingles) with the tokenization materialized in its own
     * projection so it is evaluated once per row. The trigram build is the
@@ -165,7 +165,7 @@ object Dedup {
   }
 
   def candidatePairs(docs: DataFrame): DataFrame =
-    candidatePairsFromSets(shingleSets(docs).localCheckpoint())
+    candidatePairsFromSets(shingleSets(docs).transform(pin))
 
   def dd03LshPairs(s: SparkSession, dir: String): DataFrame =
     candidatePairs(Tables(s, dir, "documents"))
@@ -245,7 +245,7 @@ object Dedup {
     * join would shuffle |corpus|·|shingles| rows; this shuffles
     * |candidates| rows of two ~KB arrays. */
   def jaccardVerified(docs: DataFrame): DataFrame = {
-    val sharr = shingleSets(docs).localCheckpoint()
+    val sharr = shingleSets(docs).transform(pin)
     val cand = candidatePairsFromSets(sharr)
     cand
       .join(sharr.as("s1"), col("doc1") === col("s1.doc_id"))
@@ -289,7 +289,7 @@ object Dedup {
   // div), so the oracle hash-matches.
   // ---------------------------------------------------------------------
   def dd15SigEstimate(s: SparkSession, dir: String): DataFrame = {
-    val sharr = shingleSets(Tables(s, dir, "documents")).localCheckpoint()
+    val sharr = shingleSets(Tables(s, dir, "documents")).transform(pin)
     val sig = minhashSigsFromSets(sharr).drop("sh")
     val cand = candidatePairsFromSets(sharr)
     val agree = (0 until numHashes)
@@ -389,7 +389,7 @@ object Dedup {
 
   def dd17SortedNeighborhood(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val ranked = snmRanked(docs).localCheckpoint()
+    val ranked = snmRanked(docs).transform(pin)
     val lhs = ranked.select(col("doc_id").as("doc1"), col("rn"))
       .withColumn("d", explode(expr(s"sequence(1, ${snmWindow - 1})")))
       .select(col("doc1"), (col("rn") + col("d")).as("rn2"),
@@ -398,7 +398,7 @@ object Dedup {
         ranked.select(col("doc_id").as("doc2"), col("rn").as("rnb")),
         col("rn2") === col("rnb"))
       .select(col("doc1"), col("doc2"), col("win_d"))
-    val sharr = shingleSets(docs).localCheckpoint()
+    val sharr = shingleSets(docs).transform(pin)
     cand
       .join(sharr.as("s1"), col("doc1") === col("s1.doc_id"))
       .join(sharr.as("s2"), col("doc2") === col("s2.doc_id"))
@@ -454,7 +454,7 @@ object Dedup {
   // ---------------------------------------------------------------------
   def dd18PrefixFilter(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val sharr = shingleSets(docs).localCheckpoint()
+    val sharr = shingleSets(docs).transform(pin)
     val tok = sharr.select(col("doc_id"), explode(col("sh")).as("tok"))
     val dfreq = tok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val pref = tok.join(dfreq, Seq("tok"))
@@ -611,7 +611,7 @@ object Dedup {
     // trains on its survivor subset and keeps its own chain (None).
     val cents = centsPre.getOrElse(Similarity.learnedCentroids(base, sdRounds))
     val assigned = Similarity.kmAssign(base, cents)
-      .select(col("vec_id"), col("cluster")).localCheckpoint()
+      .select(col("vec_id"), col("cluster")).transform(pin)
     val withV = assigned.join(base, Seq("vec_id"))
     val a = withV.select(col("cluster"), col("vec_id").as("v1c"),
       col("v").as("v1"), col("nrm").as("n1"))
@@ -643,7 +643,7 @@ object Dedup {
        | WHERE dot > 0 AND dot * dot * 25 >= n1 * n2 * 4)""".stripMargin
 
   def dd20Semdedup(s: SparkSession, dir: String): DataFrame = {
-    val base = Similarity.qvec(s, dir).localCheckpoint()
+    val base = Similarity.qvec(s, dir)
     // guard the share on the round-count equality it relies on
     val (assigned, drops) = semClusterDrops(base,
       if (sdRounds == Similarity.ivfRounds)
@@ -682,14 +682,14 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
     val sdocs = docs.join(surv1, Seq("doc_id"), "left_semi")
       .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .transform(pin)
     val removed2 = jaccardVerified(sdocs)
       .filter(col("is_dup")).select(col("doc2").as("doc_id")).distinct()
     val surv2 = sdocs.select(col("doc_id"))
-      .join(removed2, Seq("doc_id"), "left_anti").localCheckpoint()
+      .join(removed2, Seq("doc_id"), "left_anti").transform(pin)
     val base = Similarity.qvec(s, dir)
       .join(surv2.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      .localCheckpoint()
+      .transform(pin)
     val (_, drops3) = semClusterDrops(base)
     val surv3 = base.select(col("vec_id"))
       .join(drops3, Seq("vec_id"), "left_anti")
@@ -804,13 +804,13 @@ object Dedup {
   // ---------------------------------------------------------------------
   def dd23IncrementalSemdedup(s: SparkSession, dir: String): DataFrame = {
     val all = Similarity.qvec(s, dir)
-    val qbase = all.filter(col("vec_id") % 10 < 8).localCheckpoint()
-    val qnew = all.filter(col("vec_id") % 10 >= 8).localCheckpoint()
+    val qbase = all.filter(col("vec_id") % 10 < 8).transform(pin)
+    val qnew = all.filter(col("vec_id") % 10 >= 8).transform(pin)
     val cents = Similarity.learnedCentroids(qbase, sdRounds)
     val abase = Similarity.kmAssign(qbase, cents)
       .select(col("vec_id"), col("cluster"))
     val anew = Similarity.kmAssign(qnew, cents)
-      .select(col("vec_id"), col("cluster")).localCheckpoint()
+      .select(col("vec_id"), col("cluster")).transform(pin)
     val nside = anew.join(qnew, Seq("vec_id"))
       .select(col("cluster"), col("vec_id").as("nv"),
         col("v").as("v1"), col("nrm").as("n1"))
@@ -871,7 +871,7 @@ object Dedup {
   // directions flagged at 90% in integer space (10·∩ ≥ 9·|side|).
   // ---------------------------------------------------------------------
   def containmentVerified(docs: DataFrame): DataFrame = {
-    val sharr = shingleSets(docs).localCheckpoint()
+    val sharr = shingleSets(docs).transform(pin)
     val cand = candidatePairsFromSets(sharr)
     cand
       .join(sharr.as("s1"), col("doc1") === col("s1.doc_id"))
@@ -919,7 +919,7 @@ object Dedup {
     // expensive verification pass.
     val sdocs = docs.join(surv1.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .transform(pin)
     val removed = jaccardVerified(sdocs)
       .filter(col("is_dup")).select(col("doc2").as("doc_id")).distinct()
     sdocs.select(col("doc_id"))
@@ -1061,7 +1061,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"))
     val sdocs = qual.join(surv1.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .transform(pin)
     val removed = jaccardVerified(sdocs)
       .filter(col("is_dup")).select(col("doc2").as("doc_id")).distinct()
     sdocs.select(col("doc_id"))
@@ -1101,7 +1101,7 @@ object Dedup {
     val dup = jaccardVerified(Tables(s, dir, "documents"))
       .filter(col("is_dup"))
       .select(col("doc1").as("a"), col("doc2").as("b"))
-      .localCheckpoint()
+      .transform(pin)
     Relational.connectedComponents(dup)
       .select(col("node").as("doc_id"), col("component"))
   }
@@ -1130,7 +1130,7 @@ object Dedup {
     val dup = jaccardVerified(Tables(s, dir, "documents"))
       .filter(col("is_dup"))
       .select(col("doc1").as("a"), col("doc2").as("b"))
-      .localCheckpoint()
+      .transform(pin)
     Relational.connectedComponentsStar(dup)
       .select(col("node").as("doc_id"), col("component"))
   }
@@ -1171,7 +1171,7 @@ object Dedup {
     val docs = Tables(s, dir, "documents")
     val sized = cc01DupComponents(s, dir)
       .join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-      .localCheckpoint() // referenced twice; the CC rounds must not re-run
+      .transform(pin) // referenced twice; the CC rounds must not re-run
     val canon = sized.groupBy(col("component"))
       .agg(max_by(col("doc_id"),
         struct(col("n_chars"), (-col("doc_id")).as("nid"))).as("canon_id"))
@@ -1214,7 +1214,7 @@ object Dedup {
     val dup = jaccardVerified(Tables(s, dir, "documents"))
       .filter(col("is_dup"))
       .select(col("doc1").as("a"), col("doc2").as("b"))
-      .localCheckpoint()
+      .transform(pin)
     Relational.labelPropagation(dup, lpRounds)
       .select(col("node").as("doc_id"), col("label"))
   }
@@ -1257,7 +1257,7 @@ object Dedup {
     val dup = jaccardVerified(Tables(s, dir, "documents"))
       .filter(col("is_dup"))
       .select(col("doc1").as("a"), col("doc2").as("b"))
-      .localCheckpoint()
+      .transform(pin)
     Relational.kCore(dup, kcoreK, kcoreRounds)
       .select(col("node").as("doc_id"), col("deg"))
   }
@@ -1303,7 +1303,7 @@ object Dedup {
     val dup = jaccardVerified(Tables(s, dir, "documents"))
       .filter(col("is_dup"))
       .select(col("doc1").as("a"), col("doc2").as("b"))
-      .localCheckpoint()
+      .transform(pin)
     val labels = Relational.labelPropagation(dup, lpRounds)
     val deg = dup.select(col("a").as("node"))
       .unionAll(dup.select(col("b").as("node")))
@@ -1457,9 +1457,9 @@ object Dedup {
       .join(scc.select(col("node").as("src"), col("scc_id").as("a")), Seq("src"))
       .join(scc.select(col("node").as("dst"), col("scc_id").as("b")), Seq("dst"))
       .where(col("a") =!= col("b"))
-      .select(col("a"), col("b")).distinct().localCheckpoint()
+      .select(col("a"), col("b")).distinct().transform(pin)
     var layers = scc.select(col("scc_id").as("node")).distinct()
-      .withColumn("layer", lit(0L)).localCheckpoint()
+      .withColumn("layer", lit(0L)).transform(pin)
     // Round fusion (round 15, the beam-search hop-fusion discipline): a
     // localCheckpoint per relaxation made each of the 12 rounds its own
     // synchronous job over a dictionary-sized DAG — pure barrier cost.
@@ -1474,7 +1474,7 @@ object Dedup {
       val next = layers.join(prop, layers("node") === col("n2"), "left")
         .select(col("node"),
           greatest(col("layer"), coalesce(col("nl"), col("layer"))).as("layer"))
-      layers = if (r % 2 == 0 || r == condRounds) next.localCheckpoint()
+      layers = if (r % 2 == 0 || r == condRounds) next.transform(pin)
         else next
     }
     val sizes = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("n_nodes"))
@@ -1528,7 +1528,7 @@ object Dedup {
     val l = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct().localCheckpoint()
+      .distinct().transform(pin)
     val keep = cs.groupBy(col("cust")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") <= bipCap).select(col("cust"))
     val k = cs.join(keep, Seq("cust"))
@@ -1873,7 +1873,7 @@ object Dedup {
     val wCap = Window.partitionBy(col("node")).orderBy(col("nbr"))
     val capped = adj.withColumn("rn", row_number().over(wCap))
       .filter(col("rn") <= lpCap).select(col("node"), col("nbr"))
-      .localCheckpoint()
+      .transform(pin)
     val wedges = capped.as("p").join(capped.as("q"),
         col("p.node") === col("q.node") && col("p.nbr") < col("q.nbr"))
       .select(col("p.nbr").as("u"), col("q.nbr").as("v"))
@@ -2093,7 +2093,7 @@ object Dedup {
     val exact = prefilter.fold(hashedNew)(p => hashedNew.filter(p.hashFilter))
       .join(hashesOld, Seq("h"), "left_semi")
       .select(col("doc_id")).distinct()
-    val setsNew = shingleSets(neu).localCheckpoint()
+    val setsNew = shingleSets(neu).transform(pin)
     val allBandsNew = lshBands(minhashSigsFromSets(setsNew).drop("sh"))
     val bandsNew = prefilter.fold(allBandsNew)(p => allBandsNew.filter(p.bandFilter))
     val cand = bandsNew.as("n").join(bandsOld.as("o"),
@@ -2144,7 +2144,7 @@ object Dedup {
       .withColumn("mn", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .filter(col("doc_id") > col("mn"))
       .select(col("doc_id")).distinct()
-    val sets = shingleSets(batch).localCheckpoint()
+    val sets = shingleSets(batch).transform(pin)
     val bands = lshBands(minhashSigsFromSets(sets).drop("sh"))
     val cand = bands.as("n").join(bands.as("o"),
         col("n.band") === col("o.band") && col("n.k1") === col("o.k1") &&
@@ -2172,7 +2172,7 @@ object Dedup {
     val docs = Tables(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 10 < 8)
     val neu = docs.filter(col("doc_id") % 10 >= 8)
-    val setsOld = shingleSets(old).localCheckpoint()
+    val setsOld = shingleSets(old).transform(pin)
     incrementalFlags(neu,
       old.select(md5(col("text")).as("h")).distinct(),
       setsOld,
@@ -2192,9 +2192,9 @@ object Dedup {
     val docs = Tables(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 10 < 8)
     val neu = docs.filter(col("doc_id") % 10 >= 8)
-    val setsOld = shingleSets(old).localCheckpoint()
-    val hashesOld = old.select(md5(col("text")).as("h")).distinct().localCheckpoint()
-    val bandsOld = lshBands(minhashSigsFromSets(setsOld).drop("sh")).localCheckpoint()
+    val setsOld = shingleSets(old).transform(pin)
+    val hashesOld = old.select(md5(col("text")).as("h")).distinct().transform(pin)
+    val bandsOld = lshBands(minhashSigsFromSets(setsOld).drop("sh")).transform(pin)
     incrementalFlags(neu, hashesOld, setsOld, bandsOld,
       Some(BloomPrefilter.build(s, hashesOld, bandsOld)))
   }
@@ -2320,7 +2320,7 @@ object Dedup {
       .select(col("doc_id"), expr("shingle_rle(tk)").as("r"))
       .select(col("doc_id"), col("r.ss").as("ss"), col("r.cs").as("cs"),
         col("r.n2").as("n2"))
-      .localCheckpoint() // feeds df, candidates, and the dot join
+      .transform(pin) // feeds df, candidates, and the dot join
     val sc0 = dv.select(col("doc_id"), explode(col("ss")).as("s"))
     val dfreq = sc0.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val rare = sc0.join(dfreq.filter(col("df").between(2, 20)).select("s"), Seq("s"))
@@ -2445,7 +2445,7 @@ object Dedup {
     // (doc_id, fp) rows below are already distinct by construction.
     val fps = Tables.balanced(docs.select(col("doc_id"), split(col("text"), " ").as("tk")))
       .select(col("doc_id"), explode(expr("winnow_fps(tk)")).as("fp"))
-      .localCheckpoint() // feeds the df filter and both join sides
+      .transform(pin) // feeds the df filter and both join sides
     val banded = fps.join(
       fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
         .filter(col("df").between(2, 20)).select("fp"), Seq("fp"))
@@ -2502,9 +2502,9 @@ object Dedup {
     val l = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val e = o.join(l, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-      .distinct().localCheckpoint()
+      .distinct().transform(pin)
     var hubs = e.select(col("src")).distinct().withColumn("h", lit(scale))
-      .localCheckpoint()
+      .transform(pin)
     var auths: DataFrame = null
     // one lineage cut per HITS round, not two (round 15): the auth table
     // is consumed only by the same round's hub update (and the final
@@ -2516,7 +2516,7 @@ object Dedup {
         .groupBy(col("dst")).agg(expr("sum(h) div 64").as("a"))
       hubs = e.join(auths, Seq("dst"))
         .groupBy(col("src")).agg(expr("sum(a) div 64").as("h"))
-        .localCheckpoint()
+        .transform(pin)
     }
     hubs.select(col("src").as("node"), lit("hub").as("role"), col("h").as("score"))
       .unionByName(auths.select(col("dst").as("node"), lit("authority").as("role"),
@@ -2623,7 +2623,7 @@ object Dedup {
   def cc24Assortativity(s: SparkSession, dir: String): DataFrame = {
     val e0 = copurchaseEdges(s, dir)
     val e = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
+      .transform(pin)
     val deg = e.groupBy(col("a").as("n0")).agg(count(lit(1)).as("d"))
     val xy = e
       .join(broadcast(deg.select(col("n0").as("a"), col("d").as("dx"))), Seq("a"))
@@ -2686,7 +2686,7 @@ object Dedup {
     val e0 = copurchaseEdges(s, dir)
     val deg = e0.select(col("a").as("n0")).unionAll(e0.select(col("b").as("n0")))
       .groupBy(col("n0")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+      .transform(pin)
     val ks = Seq(64L, 128L, 192L, 256L).toDF("k")
     val nk = ks.crossJoin(deg).filter(col("d") > col("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n_k"))

@@ -47,6 +47,7 @@ import graft.Tables
   * never read, which at 100 TB is the entire point of the store.
   */
 object DedupStore {
+  import Relational.pin
 
   final case class Store(hashes: DataFrame, sets: DataFrame, bands: DataFrame,
       blooms: Option[Dedup.BloomPrefilter] = None)
@@ -112,12 +113,12 @@ object DedupStore {
       // compute the increment outside the lock, append + merge blooms
       // inside it (the manual one-shot path)
       val s = accepted.sparkSession
-      val inc = accepted.localCheckpoint()
-      val sets = Dedup.shingleSets(inc).localCheckpoint()
+      val inc = accepted.transform(pin)
+      val sets = Dedup.shingleSets(inc).transform(pin)
       val hashes = inc.select(md5(col("text")).as("h"), col("doc_id"))
-        .localCheckpoint()
+        .transform(pin)
       val bands = Dedup.lshBands(Dedup.minhashSigsFromSets(sets).drop("sh"))
-        .localCheckpoint()
+        .transform(pin)
       Artifact.withTableLock(s, dir) {
         Artifact.promoteStages(s, dir)
         storeBaseCountsMemo.remove(dir)
@@ -133,9 +134,9 @@ object DedupStore {
       accepted: DataFrame, tag: String): Unit = {
     require(tag.matches("[A-Za-z0-9_-]+"), s"unsafe roll-forward tag: $tag")
     requireErasableLayout(s, dir)
-    val inc = accepted.localCheckpoint()
+    val inc = accepted.transform(pin)
     val hashesInc = inc.select(md5(col("text")).as("h"), col("doc_id"))
-      .localCheckpoint()
+      .transform(pin)
     // batch identity: (set rows, hash rows — equal under the per-doc hash
     // layout, kept as two fields for format stability — and an order-
     // independent CONTENT hash XOR over (doc_id, md5(text)) pairs; xor,
@@ -200,10 +201,10 @@ object DedupStore {
       () => { stageAppendWrite(s, dir, "hashes", hashesInc, tag,
         partitioned = false); null },
       () => {
-        val setsInc = Dedup.shingleSets(inc).localCheckpoint()
+        val setsInc = Dedup.shingleSets(inc).transform(pin)
         val bands =
           Dedup.lshBands(Dedup.minhashSigsFromSets(setsInc).drop("sh"))
-            .localCheckpoint()
+            .transform(pin)
         Relational.parLadder(Seq[() => Unit](
           () => stageAppendWrite(s, dir, "sets", setsInc, tag,
             partitioned = false),
@@ -449,7 +450,7 @@ object DedupStore {
     // redelivery window) must not materialize the ledger — the "absent
     // ledger = zero read cost" steady state would never be restored by a
     // no-op append (round-12 advice, low)
-    val batch = ids.select(col("doc_id")).localCheckpoint()
+    val batch = ids.select(col("doc_id")).transform(pin)
     if (!batch.isEmpty)
       // under the mutation lock: [[erase]]'s ledger fold is a staged
       // read→rewrite of `_erase_pending/` — a request file appended inside
@@ -507,7 +508,7 @@ object DedupStore {
     val pending = Artifact.retryOnMissingFiles(s, dir) {
       // checkpoint pins the ledger snapshot against a concurrent erase's
       // ledger delete; the retry covers the listing→checkpoint window
-      pendingErasures(s, dir).map(_.localCheckpoint())
+      pendingErasures(s, dir).map(pin)
     }
     val hintCap = Artifact.confInt(
       s, "spark.graft.dedup.eraseScreenBroadcastRows", 4000000).toLong
@@ -813,7 +814,7 @@ object DedupStore {
   private def foldEraseLedger(s: SparkSession, dir: String): Unit =
     Artifact.withWriterLease(s, dir) {
       Artifact.withTableLock(s, dir) {
-        pendingErasures(s, dir).foreach(p => writeLedger(s, dir, p.localCheckpoint()))
+        pendingErasures(s, dir).foreach(p => writeLedger(s, dir, p.transform(pin)))
       }
     }
 
@@ -858,7 +859,7 @@ object DedupStore {
     // across the swap blink — semantically identical to the round-13
     // blocking order (erase, then append), because an increment admitted
     // after the erase began was never subject to it.
-    val ids = erasedIds.select(col("doc_id")).localCheckpoint()
+    val ids = erasedIds.select(col("doc_id")).transform(pin)
     // fulfilled deferred requests leave the ledger ([[requestErase]],
     // [[Artifact.foldLedger]]): rewrite pending minus the erased ids
     // (staged), delete when empty — a maintenance-run erase self-clears and
@@ -982,7 +983,7 @@ object DedupStore {
     val storeDir = storePathFor(dir + "#dd27")
     cloneBase80Store(s, dir, storeDir) // same build; verb mutates its clone
     val flagged = incrementalAgainstStore(neu, read(s, storeDir))
-      .select(col("doc_id")).localCheckpoint()
+      .select(col("doc_id")).transform(pin)
     val accepted = neu.join(flagged, Seq("doc_id"), "left_anti")
     rollForward(storeDir, accepted, Some("inc1"))
     dedupMaintenancePlan(s, storeDir)
@@ -1004,7 +1005,7 @@ object DedupStore {
     val storeDir = storePathFor(dir + "#dd28")
     build(old, storeDir)
     val flagged1 = incrementalAgainstStore(inc1, read(s, storeDir))
-      .select(col("doc_id")).localCheckpoint()
+      .select(col("doc_id")).transform(pin)
     val acc1 = inc1.join(flagged1, Seq("doc_id"), "left_anti")
     rollForward(storeDir, acc1, Some("day1"))
     incrementalAgainstStore(neu, read(s, storeDir))

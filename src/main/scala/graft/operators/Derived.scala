@@ -30,10 +30,10 @@ private[operators] object Derived {
   def apply[A](s: SparkSession, name: String)(build: => A): A =
     inApp(s.sparkContext.applicationId, name)(build)
 
-  /** A derived DataFrame pinned through [[Relational.loopCheckpoint]], so
+  /** A derived DataFrame pinned through [[Relational.pin]], so
     * `spark.graft.reliableCheckpoint=true` covers it like a loop table. */
   def pinned(s: SparkSession, name: String)(build: => DataFrame): DataFrame =
-    apply(s, name)(Relational.loopCheckpoint(build))
+    apply(s, name)(Relational.pin(build))
 
   private[operators] def inApp[A](appId: String, name: String)(build: => A): A = {
     val key = (appId, name)

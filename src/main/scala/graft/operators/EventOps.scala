@@ -19,7 +19,7 @@ import graft.Tables
   * exactly on both engines under every encoding.
   */
 object EventOps {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   // ---------------------------------------------------------------------
   // q20: tumbling window aggregate (D6 — window(ts, ...) equivalent in
@@ -1010,7 +1010,7 @@ object EventOps {
         unix_timestamp(col("ts")).as("te"))
     val pairs = purchases.join(touches, Seq("user_id"))
       .filter(col("te") <= col("pe") && col("te") >= col("pe") - 1800)
-      .localCheckpoint() // aggregated per purchase, then credited per touch
+      .transform(pin) // aggregated per purchase, then credited per touch
     val per = pairs.groupBy(col("purchase_id"))
       .agg(count(lit(1)).as("n"),
         min(col("te") * 100000000L + col("touch_id")).as("first_packed"),
@@ -1243,7 +1243,7 @@ object EventOps {
     val bm = Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(expr("bitmap_agg(user_id)").as("bm"))
-      .localCheckpoint() // |types| rows; feeds cards and both join sides
+      .transform(pin) // |types| rows; feeds cards and both join sides
     val cards = bm.select(col("event_type"),
       expr("bitmap_cardinality(bm)").as("n_users"))
     bm.as("a").join(bm.as("b"), col("a.event_type") < col("b.event_type"))

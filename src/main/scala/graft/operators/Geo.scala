@@ -43,7 +43,7 @@ import graft.Tables
   * superset.
   */
 object Geo {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   /** Domain size: coordinates live on the [0, 1024)² integer grid. */
   private val D = 1024L
@@ -116,7 +116,7 @@ object Geo {
       // levelCandidates directly (GeoSpec).
       val confirmed = levelBest(residue, st, g, extraKeys)
         .filter(col("d2") <= g * g)
-        .localCheckpoint()
+        .transform(pin)
       out = Some(out.map(_.union(confirmed)).getOrElse(confirmed))
       residue = residue.join(confirmed.select("pt_id"), Seq("pt_id"), "left_anti")
     }
@@ -244,7 +244,7 @@ object Geo {
         }
       // same DAG-cut rationale as gridNearest
       val picked = certified.select(col("pt_id"), col("site_id"),
-        col("rnk"), col("d2")).localCheckpoint()
+        col("rnk"), col("d2")).transform(pin)
       out = Some(out.map(_.union(picked)).getOrElse(picked))
       residue = residue.join(picked.select("pt_id").distinct(), Seq("pt_id"), "left_anti")
     }
@@ -415,7 +415,7 @@ object Geo {
       .agg(count(lit(1)).as("n_points"))
       .filter(col("n_points") >= densMinPts)
       .withColumn("id", col("cx") * D + col("cy"))
-      .localCheckpoint()
+      .transform(pin)
     val nbr = cells.select(col("id"), col("cx"), col("cy"))
       .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
       .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
@@ -471,7 +471,7 @@ object Geo {
     val cells = points(s, dir)
       .groupBy(expr(s"px div $densG").as("cx"), expr(s"py div $densG").as("cy"))
       .agg(count(lit(1)).as("n_points"))
-      .localCheckpoint()
+      .transform(pin)
     val contrib = cells
       .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
       .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))

@@ -32,7 +32,7 @@ import graft.Tables
   * table's files.
   */
 object MatView {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   /** Deterministic scratch location per input dir (same convention as
     * [[DedupStore.storePathFor]] — queries must stay pure functions of
@@ -148,7 +148,7 @@ object MatView {
     * .eventRollupStream]]. */
   def mergeEventBatch(batch: DataFrame, stateDir: String): Unit = {
     val s = batch.sparkSession
-    val incr = eventPartials(batch).localCheckpoint()
+    val incr = eventPartials(batch).transform(pin)
     val days = incr.select(col("day")).distinct().collect().map(_.getLong(0))
     if (days.nonEmpty) {
       val existing =
@@ -213,7 +213,7 @@ object MatView {
   /** Report served from state only: one aggregation for cross-language
     * hash totals (dup status), one per-language rollup. */
   private def dedupReport(state: DataFrame): DataFrame = {
-    val st = state.localCheckpoint()
+    val st = state.transform(pin)
     val tot = st.groupBy(col("h")).agg(sum(col("n")).as("tot"))
     st.join(tot, Seq("h"))
       .groupBy(col("lang"))
@@ -310,7 +310,7 @@ object MatView {
     * cents) — dictionary-sized, never the stream. */
   def mergeHistBatch(batch: DataFrame, stateDir: String): Unit = {
     val s = batch.sparkSession
-    val incr = histPartials(batch).localCheckpoint()
+    val incr = histPartials(batch).transform(pin)
     val types = incr.select(col("event_type")).distinct()
       .collect().map(_.getString(0))
     if (types.nonEmpty) {
@@ -649,12 +649,12 @@ object MatView {
     val st = s.read.parquet(path + "/cand")
     val n0 = s.read.parquet(path + "/n")
     val delta = delta0.groupBy(col("lang"), col("v")).agg(sum(col("w")).as("w"))
-      .localCheckpoint() // read once per side
+      .transform(pin) // read once per side
     val nTot = n0
       .unionByName(delta.groupBy(col("lang")).agg(sum(col("w")).as("n_docs")))
       .groupBy(col("lang")).agg(sum(col("n_docs")).as("n_docs"))
       .filter(col("n_docs") > 0)
-      .localCheckpoint() // read by both sides' hole probes + final join
+      .transform(pin) // read by both sides' hole probes + final join
     def serve(side: String): DataFrame = {
       val isMin = side == "min"
       val cand0 = st.filter(col("side") === side).select(col("lang"), col("v"), col("cnt"))
@@ -732,14 +732,14 @@ object MatView {
       ins: DataFrame, del: DataFrame, cur: DataFrame): DataFrame = {
     val st = s.read.parquet(path + "/cand")
     val n0 = s.read.parquet(path + "/n")
-    val surv = st.join(del, Seq("lang", "doc_id"), "left_anti").localCheckpoint()
+    val surv = st.join(del, Seq("lang", "doc_id"), "left_anti").transform(pin)
     val baseRem = n0
       .join(del.groupBy(col("lang")).agg(count(lit(1)).as("n_del")), Seq("lang"), "left")
       .select(col("lang"), (col("n_base") - coalesce(col("n_del"), lit(0L))).as("base_rem"))
     val holes = baseRem
       .join(surv.groupBy(col("lang")).agg(count(lit(1)).as("n_surv")), Seq("lang"), "left")
       .filter(coalesce(col("n_surv"), lit(0L)) < least(lit(tkK.toLong), col("base_rem")))
-      .select(col("lang")).localCheckpoint()
+      .select(col("lang")).transform(pin)
     def top3(d: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("lang"))
         .orderBy(col("v").desc, col("doc_id").asc)

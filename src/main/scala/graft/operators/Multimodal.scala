@@ -40,7 +40,7 @@ import graft.Tables
   * [[decodeVideo]] only — none of the Spark plumbing around them.
   */
 object Multimodal {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   final case class MediaRow(media_id: Long, kind: String, bytes: Array[Byte],
       width: Int, height: Int, channels: Int)
@@ -388,7 +388,7 @@ object Multimodal {
     // which would otherwise re-run the whole decode pipeline per branch
     val hashed = withPerceptualHash(extractFeatures(
       mediaFromDocuments(s, dir).filter((m: MediaRow) => m.kind == "image")))
-      .localCheckpoint()
+      .transform(pin)
     val groups = hashed.groupBy(col("phash"))
       .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_images"))
     hashed.select(col("media_id"), col("phash"))
@@ -700,7 +700,7 @@ object Multimodal {
         (id, n, sig)
       }
       .toDF("media_id", "n_frames", "sig")
-      .localCheckpoint()
+      .transform(pin)
     val groups = sig.groupBy(col("sig"))
       .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_videos"))
     sig.join(groups, Seq("sig"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
@@ -130,13 +130,15 @@ object Relational {
   // (the reference loops per row, src/post/mod.rs:96-107 — see SURVEY C16).
   // ---------------------------------------------------------------------
 
-  // once-per-JVM latch for loopCheckpoint's reliable-mode config warnings
+  // once-per-JVM latch for pin's reliable-mode config warnings
   private val reliableWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Lineage truncation for LOOP-CARRIED tables in the iterative fixpoint
-    * operators (CC ×3, SCC, PageRank/PPR, BFS/SSSP/stress, k-core,
-    * k-truss, label propagation, k-means), applied as
-    * `.transform(loopCheckpoint)`:
+  /** The one eager materialization in `src/main`, applied as
+    * `.transform(pin)`: loop-carried tables in the fixpoint operators,
+    * the [[Derived]] memos (`Derived.pinned`), and every one-off pin that
+    * cuts lineage or freezes rows a later step re-reads (a streaming
+    * batch, a table about to be overwritten). MaterializationSpec fails
+    * on any other `localCheckpoint`/`checkpoint` call.
     *
     *  - default: `localCheckpoint()` — fast, but pins blocks to
     *    executors, so on a real cluster ONE executor loss kills the
@@ -146,17 +148,14 @@ object Relational {
     *    is written to the fault-tolerant checkpoint dir
     *    (`spark.graft.checkpointDir`, or the SparkContext's if already
     *    set), so a lost executor recomputes from storage instead of
-    *    failing the job. This is the production setting for long loops
-    *    on a 1000-executor cluster, at the price of a write+read per
-    *    round — set the dir to HDFS/S3, not local disk.
+    *    failing the job. This is the production setting on a
+    *    1000-executor cluster, at the price of a write+read per pin —
+    *    set the dir to HDFS/S3, not local disk.
     *
-    * Both variants are eager and semantically identical (one spec runs a
-    * loop under both and proves equal output — ReliableCheckpointSpec).
-    * The [[Derived]] registry's DataFrame pins, [[transitiveClosure]]'s
-    * one materialization (which `wikidata.Post` walks) and Post's final
-    * cities go through here too, so the reliable setting covers them as
-    * well. */
-  private[graft] def loopCheckpoint(df: DataFrame): DataFrame = {
+    * Both variants are eager and semantically identical (ReliableCheckpointSpec
+    * runs loops, a memo, a one-off pin and `wikidata.Post` under both and
+    * proves equal output). */
+  private[graft] def pin[T](df: Dataset[T]): Dataset[T] = {
     val s = df.sparkSession
     val reliable = s.conf.getOption("spark.graft.reliableCheckpoint")
       .exists(_.trim.equalsIgnoreCase("true"))
@@ -262,7 +261,7 @@ object Relational {
     *  - each task walks its seeds on that map until the frontier is empty
     *    or `maxSteps` is reached: it counts the walks reaching each node,
     *    or, with `dedupPerStep`, keeps one node set per step;
-    *  - the rows are materialized once through [[loopCheckpoint]].
+    *  - the rows are materialized once through [[pin]].
     *
     * The sub-graph must fit in driver and executor memory. On DumpGen's
     * 520k-entity world it is at most 20,800 edges, one per plain TE (40
@@ -293,7 +292,7 @@ object Relational {
         }
       }(Encoders.row(walkSchema))
     val out = s.select(col("seed"), col("seed").as("node"), lit(0).as("step"))
-      .unionAll(walked).transform(loopCheckpoint)
+      .unionAll(walked).transform(pin)
     adj.unpersist()
     out
   }
@@ -334,6 +333,15 @@ object Relational {
       .drop("__salt")
   }
 
+  /** The fixpoint loops' convergence aggregate: the exact sum of column
+    * `c` (0 on an empty table). Summed as decimal(38,0): a Long sum could
+    * wrap-overflow to the previous value on ~10^9 nodes × 10^12-scale ids
+    * and falsely converge; the decimal sum is exact and just as cheap
+    * (one partial-aggregated pass). */
+  private def decSum(df: DataFrame, c: String): java.math.BigDecimal =
+    df.agg(coalesce(sum(col(c).cast("decimal(38,0)")),
+      lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
+
   /** Connected components by min-label propagation: every node starts as
     * its own label; each round takes the min over direct neighbors; stop at
     * fixpoint. Rounds needed = graph diameter (dup clusters are tiny;
@@ -347,17 +355,11 @@ object Relational {
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct().persist()
     var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node")).transform(loopCheckpoint)
+      .withColumn("label", col("node")).transform(pin)
     // Labels only ever DECREASE under min-propagation, so the label sum
     // strictly decreases iff any label changed — one aggregate per round
-    // replaces an old-vs-new join as the convergence check. Summed as
-    // decimal(38,0): a Long sum could wrap-overflow to the previous value
-    // on ~10^9 nodes × 10^12-scale ids and falsely converge; the decimal
-    // sum is exact (and just as cheap — one partial-aggregated pass).
-    def labelSum(df: DataFrame): java.math.BigDecimal = // empty graph → null
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
+    // replaces an old-vs-new join as the convergence check ([[decSum]]).
+    var prevSum = decSum(labels, "label")
     var converged = false
     while (!converged) {
       // Round body: propagate neighbor minima (one shuffle join + keyed min),
@@ -370,8 +372,8 @@ object Relational {
       val merged = labels.join(nbrMin, labels("node") === nbrMin("n2"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .transform(loopCheckpoint)
-      val s = labelSum(merged)
+        .transform(pin)
+      val s = decSum(merged, "label")
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = merged
@@ -429,16 +431,16 @@ object Relational {
         .distinct()
     }
     val nodes = edges.select(col("a")).unionAll(edges.select(col("b")))
-      .distinct().transform(loopCheckpoint)
+      .distinct().transform(pin)
     var e = edges.select(col("a"), col("b")).where(col("a") =!= col("b"))
-      .distinct().transform(loopCheckpoint)
+      .distinct().transform(pin)
     var round = 0
     // carry the round's edge count forward: re-counting the previous
     // checkpoint every round was one extra (tiny) job per round
     var eCount = e.count()
     var done = eCount == 0L
     while (!done) {
-      val next = smallStar(largeStar(e)).transform(loopCheckpoint)
+      val next = smallStar(largeStar(e)).transform(pin)
       round += 1
       onRound(round)
       val nextCount = next.count()
@@ -476,11 +478,8 @@ object Relational {
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct().persist()
     var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node")).transform(loopCheckpoint)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
+      .withColumn("label", col("node")).transform(pin)
+    var prevSum = decSum(labels, "label")
     var converged = false
     while (!converged) {
       val nbrMin = sym.join(labels, sym("b") === labels("node"))
@@ -496,7 +495,7 @@ object Relational {
           col("x.label") === col("y.ln"), "left")
         .select(col("x.node").as("node"),
           least(col("x.label"), coalesce(col("ll"), col("x.label"))).as("label"))
-        .transform(loopCheckpoint)
+        .transform(pin)
       // Break the STATS chain, not just the lineage: localCheckpoint's
       // LogicalRDD inherits the replaced plan's sizeInBytes estimate, and
       // this round's self-join SQUARES it — so the estimate grows doubly
@@ -509,7 +508,7 @@ object Relational {
       // estimate by a constant factor per round — linear digit growth —
       // so they don't need this.
       val jumped = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-      val s = labelSum(jumped)
+      val s = decSum(jumped, "label")
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = jumped
@@ -551,17 +550,14 @@ object Relational {
     * edge endpoints (callers attach isolated nodes as their own SCCs if
     * they need them). Returns (node, scc_id = min member id). */
   def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
-    def decSum(df: DataFrame, c: String): java.math.BigDecimal =
-      df.agg(coalesce(sum(col(c).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
     var rem = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().transform(loopCheckpoint)
+      .where(col("src") =!= col("dst")).distinct().transform(pin)
     var nodes = rem.select(col("src").as("node"))
-      .unionAll(rem.select(col("dst").as("node"))).distinct().transform(loopCheckpoint)
+      .unionAll(rem.select(col("dst").as("node"))).distinct().transform(pin)
     var out: Option[DataFrame] = None
     while (!nodes.isEmpty) {
       // 1. forward min coloring to fixpoint
-      var colors = nodes.withColumn("color", col("node")).transform(loopCheckpoint)
+      var colors = nodes.withColumn("color", col("node")).transform(pin)
       var prev = decSum(colors, "color")
       var stable = false
       while (!stable) {
@@ -569,7 +565,7 @@ object Relational {
           .select(col("dst").as("node"), col("color"))
         val merged = colors.unionAll(prop)
           .groupBy(col("node")).agg(min(col("color")).as("color"))
-          .transform(loopCheckpoint)
+          .transform(pin)
         val s = decSum(merged, "color")
         stable = s.compareTo(prev) == 0
         prev = s
@@ -581,16 +577,16 @@ object Relational {
         .join(colors.select(col("node").as("dst"), col("color").as("cd")), Seq("dst"))
         .where(col("cs") === col("cd"))
         .select(col("src"), col("dst"), col("cs").as("color"))
-        .transform(loopCheckpoint)
+        .transform(pin)
       var member = colors.where(col("color") === col("node"))
-        .select(col("node"), col("color")).transform(loopCheckpoint)
+        .select(col("node"), col("color")).transform(pin)
       var mCount = member.count()
       var done = false
       while (!done) {
         val prop = ce.join(member,
             ce("dst") === member("node") && ce("color") === member("color"))
           .select(ce("src").as("node"), ce("color").as("color"))
-        val grown = member.unionAll(prop).distinct().transform(loopCheckpoint)
+        val grown = member.unionAll(prop).distinct().transform(pin)
         val c = grown.count()
         done = c == mCount
         mCount = c
@@ -600,11 +596,11 @@ object Relational {
       out = Some(out.map(_.unionAll(scc)).getOrElse(scc))
       // 3. peel certified nodes and their edges
       nodes = nodes.join(member.select(col("node")), Seq("node"), "left_anti")
-        .transform(loopCheckpoint)
+        .transform(pin)
       rem = rem
         .join(member.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(member.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .transform(loopCheckpoint)
+        .transform(pin)
     }
     out.getOrElse(
       edges.select(col("src").as("node"), col("dst").as("scc_id")).limit(0))
@@ -644,7 +640,7 @@ object Relational {
     val ed = edges.join(deg, Seq("src"))
       .repartition(col("src")).persist()
     var ranks = edges.select(col("src").as("node")).distinct()
-      .withColumn("pr", lit(scale)).transform(loopCheckpoint)
+      .withColumn("pr", lit(scale)).transform(pin)
     // Per-round lineage cut is LOAD-BEARING here, not just a barrier
     // (round 15, measured): the checkpointed rank table has a known
     // (small) size, so the planner broadcasts it against the cached
@@ -657,7 +653,7 @@ object Relational {
         .groupBy(col("dst"))
         .agg((lit(base) + expr("(85 * sum(c)) div 100")).as("pr"))
         .select(col("dst").as("node"), col("pr"))
-        .transform(loopCheckpoint) // eager: materialized before ed goes away
+        .transform(pin) // eager: materialized before ed goes away
     }
     ed.unpersist()
     ranks
@@ -684,9 +680,9 @@ object Relational {
     val ed = edges.join(deg, Seq("src"))
       .repartition(col("src")).persist()
     val restart = seeds.select(col("node")).withColumn("pr", lit(base))
-      .transform(loopCheckpoint)
+      .transform(pin)
     var ranks = seeds.select(col("node")).withColumn("pr", lit(scale))
-      .transform(loopCheckpoint)
+      .transform(pin)
     // per-round cut kept deliberately — see pageRank's fusion note
     for (_ <- 1 to iters) {
       ranks = restart
@@ -696,7 +692,7 @@ object Relational {
           .agg(expr("(85 * sum(c)) div 100").as("pr"))
           .select(col("dst").as("node"), col("pr")))
         .groupBy(col("node")).agg(sum(col("pr")).as("pr"))
-        .transform(loopCheckpoint) // eager: materialized before ed goes away
+        .transform(pin) // eager: materialized before ed goes away
     }
     ed.unpersist()
     ranks
@@ -728,9 +724,9 @@ object Relational {
     // exchanged in the loop — pre-hashing it only added an upfront full
     // exchange and cache pressure. The pageRank/sssp persist discipline
     // applies when the evolving side is corpus-sized, not here.
-    val e = edges.transform(loopCheckpoint)
+    val e = edges.transform(pin)
     var st = seeds.select(col("node").as("seed"), col("node"),
-      lit(0).as("dist"), lit(1L).as("sigma")).transform(loopCheckpoint)
+      lit(0).as("dist"), lit(1L).as("sigma")).transform(pin)
     var n = st.count()
     var d = 0
     var exhausted = false
@@ -745,7 +741,7 @@ object Relational {
         .groupBy(col("seed"), col("node"))
         .agg(sum(col("sigma")).as("sigma"))
         .select(col("seed"), col("node"), lit(d + 1).as("dist"), col("sigma"))
-      st = st.unionByName(next).transform(loopCheckpoint)
+      st = st.unionByName(next).transform(pin)
       val n2 = st.count()
       exhausted = n2 == n
       n = n2
@@ -757,9 +753,9 @@ object Relational {
           col("v.dist") === col("u.dist") + 1)
       .select(col("u.seed").as("seed"), col("u.node").as("u"),
         col("v.node").as("v"), col("u.dist").as("du"))
-      .transform(loopCheckpoint)
+      .transform(pin)
     var c = st.select(col("seed"), col("node"), col("dist"), lit(0L).as("c"))
-      .transform(loopCheckpoint)
+      .transform(pin)
     // deepest populated level: backward rounds above it would be no-ops
     val maxDist = st.agg(max(col("dist"))).head().getInt(0)
     // Round fusion (round 15, the hop-fusion discipline): the backward
@@ -781,7 +777,7 @@ object Relational {
         .select(col("seed"), col("node"), col("dist"),
           when(col("dist") === d, coalesce(col("x"), lit(0L)))
             .otherwise(col("c")).as("c"))
-      c = if ((dStart - d) % 2 == 1 || d == 0) loopCheckpoint(next) else next
+      c = if ((dStart - d) % 2 == 1 || d == 0) pin(next) else next
     }
     val joined = st.join(c, Seq("seed", "node", "dist"))
       .filter(col("node") =!= col("seed"))
@@ -819,16 +815,16 @@ object Relational {
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val sym = edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().repartition(col("a")).transform(loopCheckpoint)
+      .distinct().repartition(col("a")).transform(pin)
     var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node")).transform(loopCheckpoint)
+      .withColumn("label", col("node")).transform(pin)
     // per-round cut kept deliberately — see pageRank's fusion note
     for (_ <- 1 to rounds) {
       val nbrMin = sym.join(labels, sym("a") === labels("node"))
         .groupBy(sym("b").as("n2")).agg(min(col("label")).as("nl"))
       labels = labels.join(nbrMin, labels("node") === nbrMin("n2"))
         .select(col("node"), least(col("label"), col("nl")).as("label"))
-        .transform(loopCheckpoint)
+        .transform(pin)
     }
     labels
   }
@@ -862,14 +858,14 @@ object Relational {
     val e = edges.select(col("src"), col("dst"), col("wt"))
       .repartition(col("src")).persist()
     var d = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).transform(loopCheckpoint)
+      .withColumn("dist", lit(0L)).transform(pin)
     // per-round cut kept deliberately — see pageRank's fusion note (the
     // checkpointed distance table broadcasts against the cached edges)
     for (_ <- 1 to rounds) {
       val prop = e.join(d, e("src") === d("node"))
         .select(col("dst").as("node"), (col("dist") + col("wt")).as("dist"))
       d = d.unionAll(prop).groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .transform(loopCheckpoint)
+        .transform(pin)
     }
     e.unpersist()
     d
@@ -890,7 +886,7 @@ object Relational {
       .repartition(col("src")).persist()
     var all = seeds.select(col("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-      .transform(loopCheckpoint)
+      .transform(pin)
     // Unit weights ⇒ first-touch IS the shortest distance, so only the
     // FRONTIER (pairs first reached last round) propagates — re-relaxing
     // settled pairs (the Bellman–Ford shape ssspDistances needs for
@@ -903,7 +899,7 @@ object Relational {
         .distinct()
       val fresh = prop.join(all, Seq("seed", "node"), "left_anti")
         .withColumn("dist", lit(r.toLong))
-        .transform(loopCheckpoint)
+        .transform(pin)
       // fresh is checkpointed, so the union's lineage stays flat — no
       // need to re-materialize the growing `all` every round.
       all = all.unionAll(fresh)
@@ -928,13 +924,13 @@ object Relational {
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     var e = edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().transform(loopCheckpoint)
+      .distinct().transform(pin)
     for (_ <- 1 to rounds) {
       val keep = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("a").as("n"))
       e = e.join(keep, e("a") === keep("n"), "left_semi")
         .join(keep, e("b") === keep("n"), "left_semi")
-        .transform(loopCheckpoint)
+        .transform(pin)
     }
     // e is symmetric, so per-node out-degree IS the degree
     e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
@@ -964,7 +960,7 @@ object Relational {
   def trussEdges(edges: DataFrame, k: Int, maxRounds: Int = 40): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val minSup = k - 2
-    var e = edges.select(col("a"), col("b")).transform(loopCheckpoint)
+    var e = edges.select(col("a"), col("b")).transform(pin)
     var n = e.count()
     // Orientation is computed ONCE from the INITIAL degrees — any fixed
     // total order keeps the one-apex-per-triangle property on every
@@ -1068,7 +1064,7 @@ object Relational {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= minSup)
         .select(col("a"), col("b"))
-        .transform(loopCheckpoint)
+        .transform(pin)
       val n2 = e2.count()
       round += 1
       if (n2 == n) result = e2
@@ -1103,7 +1099,7 @@ object Relational {
     * generation, not shuffle). Returns (node, n_tri) for nodes in ≥1
     * triangle. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("a"), col("b")).localCheckpoint()
+    val e0 = edges.select(col("a"), col("b")).transform(pin)
     val nEdges = e0.count()
     // The filter travels as a BROADCAST handle, not a binary literal
     // (round 15, the trussEdges round-14 lesson): a megabyte-scale
@@ -1151,7 +1147,7 @@ object Relational {
     val counts = tri
       .select(explode(array(col("u"), col("w1"), col("w2"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint() // eager: materialized before `or` goes away
+      .transform(pin) // eager: materialized before `or` goes away
     or.unpersist()
     bloomBc.unpersist(false) // counts are materialized; no live consumers
     counts
@@ -1416,7 +1412,7 @@ object Relational {
       .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
     val counts = li.groupBy(col("l_returnflag"), col("q"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds the median pass, the distance histogram, and the fence count
+      .transform(pin) // feeds the median pass, the distance histogram, and the fence count
     def histMedian2(h: DataFrame, valCol: String): DataFrame = {
       // (group, 2·median) from a (group, value, cnt) histogram — q54's
       // cumulative positions p1/p2, summed instead of averaged.
@@ -1439,7 +1435,7 @@ object Relational {
         abs(lit(2L) * col("q") - col("m2")).as("d2"), col("cnt"))
       .groupBy(col("l_returnflag"), col("d2"))
       .agg(sum(col("cnt")).as("cnt"))
-      .localCheckpoint() // feeds the MAD pass and the fence count
+      .transform(pin) // feeds the MAD pass and the fence count
     val mad = histMedian2(dist, "d2")
       .select(col("l_returnflag"), col("m2").as("mad4"))
     val fence = dist.join(mad, Seq("l_returnflag"))
@@ -2169,7 +2165,7 @@ object Relational {
   def q74AssocRules(s: SparkSession, dir: String): DataFrame = {
     val items = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
-      .distinct().localCheckpoint()
+      .distinct().transform(pin)
     val nRow = items.select(col("ok")).distinct().agg(count(lit(1)).as("n"))
     val ic = items.groupBy(col("item")).agg(count(lit(1)).as("s"))
     val pairs = items.as("x").join(items.as("y"),
@@ -2387,7 +2383,7 @@ object Relational {
       .withColumn("i", row_number().over(w).cast("long"))
       .withColumn("cum", sum(col("cents")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint() // four percentile probes + the totals read it
+      .transform(pin) // four percentile probes + the totals read it
     val tot = ranked.agg(max(col("i")).as("n"), sum(col("cents")).as("total"))
     val pcts = Seq(10L, 50L, 100L, 200L).toDF("pct_x1k") // 1%, 5%, 10%, 20%
     pcts.crossJoin(broadcast(tot))

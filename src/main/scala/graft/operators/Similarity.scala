@@ -26,7 +26,7 @@ import graft.Tables
   * bit-identical IEEE math in Spark and DuckDB.
   */
 object Similarity {
-  import Relational.{Q, parLadder}
+  import Relational.{Q, parLadder, pin}
   import Artifact.{appendTagFingerprint, compactAppendTags, confInt,
     promoteStages, stagedWrite, withMaintenanceLease, withTableLock,
     withWriterLease}
@@ -39,10 +39,16 @@ object Similarity {
   private val K = 10
   private val numPlanes = 8
 
-  // (vec_id, v: Array[Long], nrm: Long) — quantized ints, shared with Dedup.
-  private[operators] def qvec(s: SparkSession, dir: String): DataFrame =
-    Dedup.quantized(Tables(s, dir, "embeddings"))
-      .select(col("vec_id"), col("v"), col("nrm"))
+  // (vec_id, v: Array[Long], nrm: Long) — quantized ints, shared with Dedup
+  // and Curation; built and pinned once per directory. The native functions
+  // are registered on every call: registration is per session, the memo is
+  // per application.
+  private[operators] def qvec(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.VectorFunctions.register(s)
+    Derived.pinned(s, s"qvec#$dir")(
+      Dedup.quantized(Tables(s, dir, "embeddings"))
+        .select(col("vec_id"), col("v"), col("nrm")))
+  }
 
   private[operators] val qvecSql: String =
     """q AS (
@@ -246,7 +252,7 @@ object Similarity {
     var cents = seedCentroids(pts)
     for (_ <- 1 to rounds)
       cents = kmUpdate(kmAssign(pts, cents), pts)
-        .transform(Relational.loopCheckpoint)
+        .transform(pin)
     cents
   }
 
@@ -305,7 +311,7 @@ object Similarity {
     * already checkpoints the final round). A [[Derived]] key. */
   private[operators] def coarseCentroidsFor(s: SparkSession, dir: String): DataFrame =
     Derived(s, s"cents#$dir")(
-      learnedCentroids(qvec(s, dir).localCheckpoint(), ivfRounds))
+      learnedCentroids(qvec(s, dir), ivfRounds))
 
   /** The corpus's cosine-argmax assignment (vec_id, cent_id) under the
     * memoized coarse quantizer — the second shared corpus pass every
@@ -316,7 +322,7 @@ object Similarity {
     * can pin the scale-critical shape (argmax AGGREGATE, never a window
     * over corpus×centroids) that the memo's checkpoint otherwise hides. */
   private[operators] def coarseAssignedPlan(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val cents = coarseCentroidsFor(s, dir)
       .select(col("cent_id"), col("cv").as("v2"), col("cnrm").as("n2"))
     // Assignment (k=1) is an argmax, NOT a top-k: max_by gets a
@@ -347,7 +353,7 @@ object Similarity {
     * per pair, checkpointed once per JVM. */
   private def ivfCandPairsFor(s: SparkSession, dir: String): DataFrame =
     Derived.pinned(s, s"cand#$dir") {
-      val base = qvec(s, dir).localCheckpoint()
+      val base = qvec(s, dir)
       val cents = coarseCentroidsFor(s, dir)
         .select(col("cent_id"), col("cv").as("v2"), col("cnrm").as("n2"))
       // Probes need the nprobe nearest lists, and only for the query
@@ -390,7 +396,7 @@ object Similarity {
   }
 
   def ss03AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val scored = ivfScoredPairs(s, dir, base)
       .withColumn("cos",
         col("dot") / sqrt(col("n1").cast("double") * col("n2").cast("double")))
@@ -413,7 +419,7 @@ object Similarity {
   // vs a brute radius scan — the ss06 audit pattern applies unchanged.
   // ---------------------------------------------------------------------
   def ss26RangeSearch(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     ivfScoredPairs(s, dir, base)
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * 100 >= col("n1") * col("n2") * 9)
@@ -501,7 +507,7 @@ object Similarity {
     * artifact. Pinned [[Derived]] keys like the other baselines. */
   private def externalQueriesFor(s: SparkSession, dir: String): DataFrame =
     Derived.pinned(s, s"extq#$dir")(
-      externalQueries(qvec(s, dir).localCheckpoint()))
+      externalQueries(qvec(s, dir)))
 
   private def externalExactPairs(s: SparkSession, dir: String): DataFrame =
     Derived.pinned(s, s"extexact#$dir") {
@@ -554,7 +560,7 @@ object Similarity {
        |FROM ex LEFT JOIN ap USING (q_id, c_id)""".stripMargin
 
   def ss34AnnTombstoned(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val tombs = base.filter(col("vec_id") % 9 === 0)
       .select(col("vec_id").as("c_id"))
     // the tombstone-alive query subset is a q_id slice of the canonical
@@ -641,7 +647,7 @@ object Similarity {
     val idx = ensureNswIndex(s, dir)
     val edges = storedNswEdgesMerged(s, idx).filter(col("rnk") <= graphK)
       .select(col("src"), col("dst"), col("rnk"), col("cos"))
-      .localCheckpoint()
+      .transform(pin)
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
     edges.join(rev.withColumn("m", lit(true)), Seq("src", "dst"), "left")
       .select(col("src"), col("dst"), col("rnk"), col("cos"),
@@ -687,7 +693,7 @@ object Similarity {
   // ---------------------------------------------------------------------
   def cc15EmbeddingClusters(s: SparkSession, dir: String): DataFrame = {
     val mutual = ss28KnnGraph(s, dir).filter(col("mutual"))
-      .select(col("src").as("a"), col("dst").as("b")).localCheckpoint()
+      .select(col("src").as("a"), col("dst").as("b")).transform(pin)
     // Star-contraction CC (provably O(log n) rounds) rather than the
     // O(d) min-label variant: identical components (both converge to the
     // per-component min id — cc02 proves the equivalence against cc01's
@@ -737,7 +743,7 @@ object Similarity {
   private val hardNegPos = 3
 
   def ss39HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val labels = graft.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val scored = ivfScoredPairs(s, dir, base)
@@ -747,7 +753,7 @@ object Similarity {
         .withColumnRenamed("label", "l1"), Seq("q_id"))
       .join(labels.withColumnRenamed("vec_id", "c_id")
         .withColumnRenamed("label", "l2"), Seq("c_id"))
-      .localCheckpoint() // feeds the threshold pass AND the negative pass
+      .transform(pin) // feeds the threshold pass AND the negative pass
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id").asc)
     val thr = scored.filter(col("l1") === col("l2"))
@@ -855,7 +861,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(wk)).filter(col("rnk") <= graphK)
       .select(col("q_id").as("src"), col("c_id").as("dst"),
         col("rnk"), col("cos"))
-      .localCheckpoint()
+      .transform(pin)
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
     edges.join(rev.withColumn("m", lit(true)), Seq("src", "dst"), "left")
       .select(col("src"), col("dst"), col("rnk"), col("cos"),
@@ -870,11 +876,11 @@ object Similarity {
     // flag mutuals. The oracle (one-shot build under the frozen standing
     // quantizer) is unchanged: the merged view must be indistinguishable
     // from it.
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxDir = rolledNswIndexFor(s, dir, base)
     val edges = storedNswEdgesMerged(s, idxDir).filter(col("rnk") <= graphK)
       .select(col("src"), col("dst"), col("rnk"), col("cos"))
-      .localCheckpoint()
+      .transform(pin)
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
     edges.join(rev.withColumn("m", lit(true)), Seq("src", "dst"), "left")
       .select(col("src"), col("dst"), col("rnk"), col("cos"),
@@ -909,7 +915,7 @@ object Similarity {
     * relational recurrence (standing-trained quantizer, full-corpus
     * edges, the beam chain) with no knowledge of the delta layout. */
   def ss49NswDeltaServe(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxDir = rolledNswIndexFor(s, dir, base)
     nswBeamOver(base, storedNswEdges(s, idxDir, nswServeDegree),
       materialize = true, beamHops,
@@ -929,7 +935,7 @@ object Similarity {
     * executed here (maintainNswIndex's effects are NswIndexSpec-pinned,
     * the streaming wiring EventStreamSpec-pinned). */
   def ss50NswMaintenance(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     nswMaintenancePlan(s, rolledNswIndexFor(s, dir, base))
   }
 
@@ -1273,7 +1279,7 @@ object Similarity {
     // standalone IVF callers; NswIndexSpec pins both derivations equal.
     val ivfDir = s"$dir/ivf"
     val cents = centsPre.getOrElse(
-      learnedCentroids(pts, ivfRounds).localCheckpoint())
+      learnedCentroids(pts, ivfRounds).transform(pin))
     probeAssignmentsFrom(pts, cents).repartition(col("cent_id"))
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$dir/probes")
     // the three derived tables all read ONLY the just-written probes (the
@@ -1371,7 +1377,7 @@ object Similarity {
     // ivf/lists (child of dir/ivf) before reading either table below
     promoteStages(s, dir)
     promoteStages(s, s"$dir/ivf")
-    val inc = newVecs.select(col("vec_id"), col("v"), col("nrm")).localCheckpoint()
+    val inc = newVecs.select(col("vec_id"), col("v"), col("nrm")).transform(pin)
     val incIds = inc.select(col("vec_id"))
     // batch-identity fingerprint: (count, order-independent id hash XOR —
     // xor, not sum: wrapping sums throw under ANSI mode); max rides along
@@ -1407,7 +1413,7 @@ object Similarity {
     // same tiebreak as assignToCentroids), the full rows are the reverse-
     // probe increment, and its q-side is the out-edge probe — no
     // recomputation, no corpus read anywhere in this verb
-    val incProbes = probeAssignments(s, inc, s"$dir/ivf").localCheckpoint()
+    val incProbes = probeAssignments(s, inc, s"$dir/ivf").transform(pin)
     // the two table appends write disjoint partitioned dirs and the
     // touched-partition collect reads only the pinned incProbes — three
     // independent jobs, overlapped (round 15, guide §2.6): the r14
@@ -1520,7 +1526,7 @@ object Similarity {
     if (f.exists(dp)) {
       val merged = storedNswEdgesMerged(s, dir)
         .select(col("src"), col("dst"), col("rnk"), col("cos"))
-        .localCheckpoint() // materialize BEFORE replacing what it reads
+        .transform(pin) // materialize BEFORE replacing what it reads
       writeNswEdges(s, dir, merged)
       f.delete(dp, true)
       deltaSprawlChecked.remove(dir) // the sized tag set no longer exists
@@ -1539,7 +1545,7 @@ object Similarity {
     // concurrent erase's tombstone fold also rewrites
     val add = ids.select(col("vec_id"))
     writeTombstones(s, dir, storedNswTombstones(s, dir).unionByName(add)
-      .distinct().localCheckpoint()) // materialize BEFORE overwriting what it reads
+      .distinct().transform(pin)) // materialize BEFORE overwriting what it reads
   }
 
   /** The one tombstone writer of both index tiers: staged overwrite of
@@ -1592,10 +1598,10 @@ object Similarity {
     if (retrain) buildNswIndex(s, alive, dstDir)
     else {
       val aliveCk = alive.select(col("vec_id"), col("v"), col("nrm"))
-        .localCheckpoint()
+        .transform(pin)
       val cents = s.read
         .parquet(s"${resolveNswTable(s, srcDir, "ivf")}/centroids")
-        .localCheckpoint()
+        .transform(pin)
       cents.write.mode("overwrite").parquet(s"$dstDir/ivf/centroids")
       // one alive × centroids scoring pass, then three independent
       // derived-table jobs overlapped — the buildNswIndex r14 shape
@@ -1750,7 +1756,7 @@ object Similarity {
       else withMaintenanceLease(s, idxDir)((0L, 0L, 0L, 1L)) {
         if (eraseDue)
           eraseFromNswIndex(s, idxDir,
-            storedNswTombstones(s, idxDir).localCheckpoint())
+            storedNswTombstones(s, idxDir).transform(pin))
         if (foldDue) {
           foldNswDeltas(s, idxDir)
           compactNswProbes(s, idxDir)
@@ -1782,9 +1788,9 @@ object Similarity {
     * then it is the rollback target. */
   def rotateNswIndex(s: SparkSession, srcDir: String, dstDir: String): Unit = {
     deltaSprawlChecked.remove(dstDir) // dst may be a reused blue/green dir
-    val tomb = storedNswTombstones(s, srcDir).localCheckpoint()
+    val tomb = storedNswTombstones(s, srcDir).transform(pin)
     s.read.parquet(s"${resolveNswTable(s, srcDir, "ivf")}/centroids")
-      .localCheckpoint()
+      .transform(pin)
       .write.mode("overwrite").parquet(s"$dstDir/ivf/centroids")
     // cast the rediscovered partition column back to long before the
     // rewrite (the rewriteCentPartitioned discipline — partition
@@ -1792,7 +1798,7 @@ object Similarity {
     val lists = s.read
       .parquet(s"${resolveNswTable(s, srcDir, "ivf")}/lists")
       .withColumn("cent_id", col("cent_id").cast("long"))
-      .join(tomb, Seq("vec_id"), "left_anti").localCheckpoint()
+      .join(tomb, Seq("vec_id"), "left_anti").transform(pin)
     lists.repartition(col("cent_id"))
       .write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$dstDir/ivf/lists")
@@ -1851,7 +1857,7 @@ object Similarity {
     deltaSprawlChecked.remove(dir) // the sized tag set is about to vanish
     promoteStages(s, dir)
     promoteStages(s, s"$dir/ivf")
-    val gone = ids.select(col("vec_id")).localCheckpoint()
+    val gone = ids.select(col("vec_id")).transform(pin)
     // the two survivor rewrites are independent anti-join passes over
     // different tables — overlap them (guide §2.6), then derive
     // edges/entries/tombstones (which need the rewritten tables) with the
@@ -1888,7 +1894,7 @@ object Similarity {
   private[operators] def ensureNswIndex(s: SparkSession, dir: String): String = {
     val idx = indexPathFor(dir + "#nswidx")
     Derived(s, idx) {
-      buildNswIndex(s, qvec(s, dir).localCheckpoint(), idx,
+      buildNswIndex(s, qvec(s, dir), idx,
         centsPre = Some(coarseCentroidsFor(s, dir)))
     }
     idx
@@ -1964,7 +1970,7 @@ object Similarity {
     * oracle is ss36's, shared — build→serve must be indistinguishable
     * from the in-query graph the oracle derives. */
   def ss46NswIndexBuild(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idx = indexPathFor(dir + "#nswcold")
     buildNswIndex(s, base, idx)
     nswBeamOver(base, storedNswEdges(s, idx, nswServeDegree),
@@ -2016,11 +2022,11 @@ object Similarity {
     * concern is real only if ids correlate with vector space — this audit
     * is the standing instrument to re-check per corpus. */
   def ss47NswEntryRules(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idx = ensureNswIndex(s, dir)
     val exact = ss01ExactPairs(s, dir)
-      .localCheckpoint()
-    val edges = storedNswEdges(s, idx, nswServeDegree).localCheckpoint()
+      .transform(pin)
+    val edges = storedNswEdges(s, idx, nswServeDegree).transform(pin)
     def audit(rule: String, ents: DataFrame) =
       recallAgainst(exact,
         nswBeamOver(base, edges, materialize = true, beamHops,
@@ -2090,13 +2096,13 @@ object Similarity {
     * so the standing schedule remains "compact late, frozen first,
     * retrain only when the ss48 curve sags below ss44's". */
   def ss48NswCompactFrozen(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idx = nswTombOverlayFor(s, dir)
     tombstoneNswIndex(s, idx,
       base.filter(col("vec_id") % 9 === 0).select(col("vec_id")))
     val idxF = indexPathFor(dir + "#nswfrozen")
     Derived(s, idxF) { compactNswIndex(s, base, idx, idxF, retrain = false) }
-    val alive = base.filter(col("vec_id") % 9 =!= 0).localCheckpoint()
+    val alive = base.filter(col("vec_id") % 9 =!= 0).transform(pin)
     recallAgainst(bruteAlive9Pairs(s, dir),
       nswBeamOver(alive, storedNswEdges(s, idxF, nswServeDegree),
         materialize = true, beamHops,
@@ -2150,7 +2156,7 @@ object Similarity {
   // survivors).
   // ---------------------------------------------------------------------
   def ss58NswErased(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxE = indexPathFor(dir + "#nswerase")
     Derived(s, idxE) {
       buildNswIndex(s, base, idxE,
@@ -2158,7 +2164,7 @@ object Similarity {
       eraseFromNswIndex(s, idxE,
         base.filter(col("vec_id") % 9 === 0).select(col("vec_id")))
     }
-    val alive = base.filter(col("vec_id") % 9 =!= 0).localCheckpoint()
+    val alive = base.filter(col("vec_id") % 9 =!= 0).transform(pin)
     nswBeamOver(alive, storedNswEdges(s, idxE, nswServeDegree),
       materialize = true, beamHops,
       entriesOverride = Some(storedNswEntries(s, idxE)))
@@ -2202,7 +2208,7 @@ object Similarity {
   private[operators] def nswBeamPipeline(s: SparkSession, dir: String,
       materialize: Boolean, hops: Int = beamHops,
       degree: Int = nswServeDegree): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idx = ensureNswIndex(s, dir)
     nswBeamOver(base, storedNswEdges(s, idx, degree), materialize, hops,
       entriesOverride = Some(storedNswEntries(s, idx)))
@@ -2287,7 +2293,7 @@ object Similarity {
         qsOverride = Some(qs))._2
       .join(storedNswTombstones(s, idxDir).withColumnRenamed("vec_id", "c_id"),
         Seq("c_id"), "left_anti")
-      .localCheckpoint()
+      .transform(pin)
     val cs = lists.select(col("vec_id").as("c_id"), col("v").as("v2"),
       col("nrm").as("n2"))
     topK(visited.join(qs, Seq("q_id")).join(cs, Seq("c_id"))
@@ -2427,7 +2433,7 @@ object Similarity {
   /** ss52: [[ivfServeExternal]] oracle-checked over ss05's persisted
     * index and ss51's perturbed external query family. */
   def ss52IvfExternalServe(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     ivfServeExternal(s, ensureIvfIndex(s, dir, base),
       externalQueriesFor(s, dir))
   }
@@ -2484,7 +2490,7 @@ object Similarity {
     * the audit runs offline per corpus snapshot, never in the serve
     * path. */
   def ss53ExternalRecall(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val ext = externalQueriesFor(s, dir)
     val exact = externalExactPairs(s, dir)
     val beam = externalBeamServed(s, dir)
@@ -2542,7 +2548,7 @@ object Similarity {
     * it knows nothing about deltas, so the LSM layout must be
     * indistinguishable from a pristine index to an outside caller. */
   def ss55ExternalDeltaServe(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     beamServeExternal(s, rolledNswIndexFor(s, dir, base),
       externalQueriesFor(s, dir))
   }
@@ -2596,7 +2602,7 @@ object Similarity {
     * the production rung is a measured probe-count decision the serve
     * consumes ([[ivfServeNprobeMeasured]]), not a guess. */
   def ss54ExternalNprobeLadder(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val ext = externalQueriesFor(s, dir)
     val exact = externalExactPairs(s, dir)
     val idxDir = ensureIvfIndex(s, dir, base)
@@ -2692,9 +2698,9 @@ object Similarity {
     // candidates from the ARTIFACT's lists, exactly like the serve
     val cands = s.read.parquet(s"${resolveNswTable(s, idx, "ivf")}/lists")
       .select(col("vec_id").as("c_id"), col("v").as("v2"),
-        col("nrm").as("n2")).localCheckpoint()
-    val edges = storedNswEdges(s, idx, nswServeDegree).localCheckpoint()
-    val entries = storedNswEntries(s, idx).localCheckpoint()
+        col("nrm").as("n2")).transform(pin)
+    val edges = storedNswEdges(s, idx, nswServeDegree).transform(pin)
+    val entries = storedNswEntries(s, idx).transform(pin)
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id").asc)
     def beamW(front: DataFrame, width: Int): DataFrame = front
@@ -2702,9 +2708,9 @@ object Similarity {
       .withColumn("cos",
         expr(dotExpr) / sqrt(col("n1").cast("double") * col("n2").cast("double")))
       .withColumn("rnk", row_number().over(wq)).filter(col("rnk") <= width)
-      .select(col("q_id"), col("c_id"), col("cos")).localCheckpoint()
+      .select(col("q_id"), col("c_id"), col("cos")).transform(pin)
     val u0 = qs.select(col("q_id")).crossJoin(broadcast(entries))
-      .localCheckpoint()
+      .transform(pin)
     parLadder(beamLadderWidths) { width =>
       var b = beamW(u0, width)
       var visited = u0
@@ -2715,7 +2721,7 @@ object Similarity {
           .unionAll(b.join(edges, b("c_id") === edges("src"))
             .select(col("q_id"), col("dst").as("c_id")))
           .repartition(col("q_id"))
-          .dropDuplicates(Seq("q_id", "c_id")).localCheckpoint()
+          .dropDuplicates(Seq("q_id", "c_id")).transform(pin)
         visited = visited.unionByName(grown)
         b = beamW(grown, width)
         if (!beamLadderHops.contains(h)) None
@@ -2830,7 +2836,7 @@ object Similarity {
       qsOverride: Option[DataFrame] = None,
       fuseHops: Boolean = false): (DataFrame, DataFrame) = {
     def ck(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
+      if (materialize) df.transform(pin) else df
     // qsOverride carries EXTERNAL queries ((q_id, v1, n1) — not corpus
     // members); its id space must be disjoint from vec_ids, or the
     // self-pair filter below would drop a legitimate (query, candidate)
@@ -2978,13 +2984,13 @@ object Similarity {
     * the cost curve is the beam side alone, which is how the dial
     * would be tuned offline on a real corpus too. */
   def ss37NswRecall(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // ONE stored artifact serves every out-degree in the ladder (edges
     // carry rnk to nswMaxDegree; each M is a filter) — the offline dial
     // sweep against the shared exact baseline, now index-scans only.
     val idx = ensureNswIndex(s, dir)
     val exact = ss01ExactPairs(s, dir)
-      .localCheckpoint()
+      .transform(pin)
     val entries = Some(storedNswEntries(s, idx))
     parLadder(nswDegrees) { m =>
       recallAgainst(exact,
@@ -3064,12 +3070,12 @@ object Similarity {
   }
 
   def ss40FilteredNswBeam(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idx = ensureNswIndex(s, dir)
     val visited = nswBeamSearch(base, storedNswEdges(s, idx, nswServeDegree),
         materialize = true, beamHops,
         entriesOverride = Some(storedNswEntries(s, idx)))._2
-      .localCheckpoint()
+      .transform(pin)
     val labels = graft.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     topK(visitedScored(base, visited)
@@ -3166,7 +3172,7 @@ object Similarity {
   // that schedules graph compaction as deletions accumulate.
   // ---------------------------------------------------------------------
   def ss42NswTombstoned(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // the delete VERB against the COPY-ON-WRITE overlay: tombstones are
     // recorded in the overlay's private table while edges/entries resolve
     // to the shared artifact — ss28/ss36/ss37/ss40 read an index this
@@ -3174,7 +3180,7 @@ object Similarity {
     val idx = nswTombOverlayFor(s, dir)
     tombstoneNswIndex(s, idx,
       base.filter(col("vec_id") % 9 === 0).select(col("vec_id")))
-    val tomb = storedNswTombstones(s, idx).localCheckpoint()
+    val tomb = storedNswTombstones(s, idx).transform(pin)
     // queries screen against the STORED tombstones (frontier restriction —
     // beam() inner-joins on the frontier's q_ids, so the %100 sample pred
     // stays inside the search while the alive-ness comes from the table)
@@ -3185,7 +3191,7 @@ object Similarity {
         materialize = true, beamHops, initialFrontier = Some(u0))._2
       // tombstone screen on RESULTS only — dead nodes routed the walk
       .join(tomb.withColumnRenamed("vec_id", "c_id"), Seq("c_id"), "left_anti")
-      .localCheckpoint()
+      .transform(pin)
     topK(visitedScored(base, visited))
       .select(col("q_id"), col("c_id"), col("rnk"), col("cos"))
   }
@@ -3258,7 +3264,7 @@ object Similarity {
   // the same ladder the IVF tier has.
   // ---------------------------------------------------------------------
   def ss44NswCompacted(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // compaction is driven by the SOURCE index's recorded tombstones (the
     // verb ladder: ss42 tombstones into the overlay, ss43 audits, this
     // rebuilds) — ensure the suite's deletion set is recorded, then
@@ -3269,7 +3275,7 @@ object Similarity {
       base.filter(col("vec_id") % 9 === 0).select(col("vec_id")))
     val idxC = indexPathFor(dir + "#nswcompact")
     Derived(s, idxC) { compactNswIndex(s, base, idx, idxC) }
-    val alive = base.filter(col("vec_id") % 9 =!= 0).localCheckpoint()
+    val alive = base.filter(col("vec_id") % 9 =!= 0).transform(pin)
     recallAgainst(bruteAlive9Pairs(s, dir),
       nswBeamOver(alive, storedNswEdges(s, idxC, nswServeDegree),
         materialize = true, beamHops,
@@ -3384,7 +3390,7 @@ object Similarity {
   }
 
   def ss45PerLabelNsw(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val labels = graft.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val idxL = perLabelNswIndexFor(s, dir)
@@ -3466,7 +3472,7 @@ object Similarity {
   // nprobe choice before anyone serves it.
   // ---------------------------------------------------------------------
   def ss27RangeRecall(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     def inRadius(df: DataFrame): DataFrame =
       df.filter(col("dot") > 0 &&
         col("dot") * col("dot") * 100 >= col("n1") * col("n2") * 9)
@@ -3477,7 +3483,7 @@ object Similarity {
       .select(col("vec_id").as("c_id"), col("v").as("v2"), col("nrm").as("n2"))
       .join(broadcast(qs), col("q_id") =!= col("c_id"))
       .withColumn("dot", expr(dotExpr)))
-      .localCheckpoint()
+      .transform(pin)
     val probed = inRadius(ivfScoredPairs(s, dir, base))
     val hit = brute.join(probed, Seq("q_id", "c_id"), "left_semi")
     brute.agg(count(lit(1)).as("n_brute"))
@@ -3541,7 +3547,7 @@ object Similarity {
   // inverted lists would simply store the label column.
   // ---------------------------------------------------------------------
   def ss19FilteredTopk(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val labels = graft.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val qs = base.select(col("vec_id").as("q_id"), col("v").as("v1"), col("nrm").as("n1"))
@@ -3798,7 +3804,7 @@ object Similarity {
   private val npCurve = Seq(1, 2, 4)
 
   def ss25RecallCurve(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // training and assignment from the shared per-JVM memos; only the
     // WIDER probe window (crn ≤ max nprobe of the curve) is ss25's own
     val cents = coarseCentroidsFor(s, dir)
@@ -3827,9 +3833,9 @@ object Similarity {
       .withColumn("cos",
         expr(dotExpr) / sqrt(col("n1").cast("double") * col("n2").cast("double")))
       .select(col("q_id"), col("a_id").as("c_id"), col("pr"), col("cos"))
-      .localCheckpoint()
+      .transform(pin)
     val exact = ss01ExactPairs(s, dir)
-      .localCheckpoint()
+      .transform(pin)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id").asc)
     npCurve.map { np =>
@@ -3929,7 +3935,7 @@ object Similarity {
   private val kmRounds = 3
 
   def ss04Kmeans(s: SparkSession, dir: String): DataFrame = {
-    val pts = qvec(s, dir).localCheckpoint()
+    val pts = qvec(s, dir)
     // Lloyd is a deterministic recurrence from the shared seed, so rounds
     // 1..ivfRounds ARE the memoized coarse chain — continue from it for
     // the remaining kmRounds-ivfRounds rounds instead of re-running them
@@ -3940,7 +3946,7 @@ object Similarity {
     if (kmRounds > ivfRounds)
       for (_ <- ivfRounds + 1 to kmRounds)
         cents = kmUpdate(kmAssign(pts, cents), pts)
-          .transform(Relational.loopCheckpoint)
+          .transform(pin)
     kmAssign(pts, cents)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"), sum(col("d2")).as("inertia"))
@@ -3988,7 +3994,7 @@ object Similarity {
   def buildIvfIndex(pts: DataFrame, dir: String, rounds: Int = ivfRounds,
       centsPre: Option[DataFrame] = None): Unit = {
     val cents = centsPre.getOrElse(
-      learnedCentroids(pts, rounds).localCheckpoint())
+      learnedCentroids(pts, rounds).transform(pin))
     // under the rewrite lease (round-13 advice): a concurrent
     // tombstoneIvfIndex recording a privacy delete during this rebuild's
     // tombstone clear would otherwise be silently discarded
@@ -4028,7 +4034,7 @@ object Similarity {
     // the assignment (the append's only non-trivial compute) materializes
     // OUTSIDE the lock; the mutation lock covers only the increment-sized
     // write, so the append never waits out a rewrite's wall (round 14)
-    val assigned = assignToCentroids(newVecs, cents).localCheckpoint()
+    val assigned = assignToCentroids(newVecs, cents).transform(pin)
     withTableLock(s, dir) {
       promoteStages(s, dir)
       assigned.repartition(col("cent_id"))
@@ -4173,7 +4179,7 @@ object Similarity {
     if (eraseDue) {
       val (erased, yielded) = withMaintenanceLease(s, idxDir)((0L, 1L)) {
         eraseFromIvfIndex(s, idxDir,
-          storedNswTombstones(s, idxDir).localCheckpoint())
+          storedNswTombstones(s, idxDir).transform(pin))
         (1L, 0L)
       }
       // the erase rewrote every list as one file — compaction is moot
@@ -4309,7 +4315,7 @@ object Similarity {
   }
 
   def ss05AnnIvfIndexed(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     probeIvfIndex(s, base, ensureIvfIndex(s, dir, base))
   }
 
@@ -4330,7 +4336,7 @@ object Similarity {
     // other rewriters and tombstone read-modify-writes serialize here,
     // while appends keep landing and are carried across the swap blink
     // (round 14, the two-phase no-stall discipline).
-    val gone = ids.select(col("vec_id")).localCheckpoint()
+    val gone = ids.select(col("vec_id")).transform(pin)
     // fulfilled tombstones leave the ledger inside the swap blink (the
     // DedupStore.erase discipline): a crash before the fold leaves no-op
     // screens (the rows are already gone) and a still-armed dial whose
@@ -4353,7 +4359,7 @@ object Similarity {
       withWriterLease(s, idxDir) {
     writeTombstones(s, idxDir, storedNswTombstones(s, idxDir)
       .unionByName(ids.select(col("vec_id"))).distinct()
-      .localCheckpoint()) // materialize BEFORE overwriting what it reads
+      .transform(pin)) // materialize BEFORE overwriting what it reads
   }
 
   /** Screen an id-bearing table against the artifact's stored tombstones.
@@ -4380,7 +4386,7 @@ object Similarity {
   // differs is what remains on disk: nothing of the erased vectors.
   // ---------------------------------------------------------------------
   def ss57IvfErased(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxDir = indexPathFor(dir + "#erase")
     buildIvfIndex(base, idxDir,
       centsPre = Some(coarseCentroidsFor(s, dir)))
@@ -4405,7 +4411,7 @@ object Similarity {
   // in no stored table (IvfIndexSpec pins that half plus off-by-default).
   // ---------------------------------------------------------------------
   def ss59IvfAutoErased(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxDir = indexPathFor(dir + "#autoerase")
     buildIvfIndex(base, idxDir,
       centsPre = Some(coarseCentroidsFor(s, dir)))
@@ -4429,7 +4435,7 @@ object Similarity {
   // quantizer (IvfIndexSpec pins list-level equality too).
   // ---------------------------------------------------------------------
   def ss07AnnIndexRollforward(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val idxDir = indexPathFor(dir + "#rollforward")
     buildIvfIndex(base.filter(col("vec_id") % 10 =!= 3), idxDir)
     appendToIvfIndex(s, idxDir, base.filter(col("vec_id") % 10 === 3))
@@ -4530,12 +4536,12 @@ object Similarity {
   /** (pts, codebooks, codes): the tagged subvector stream, the learned
     * (m, cent_id, cv, cnrm) codebooks, and the (vec_id, m, code) encode. */
   private def pqAll(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val pts = pqPtsAll(base).localCheckpoint()
+    val pts = pqPtsAll(base).transform(pin)
     var cents = pts.filter(col("vec_id") % pqSeedMod === 0)
       .select(col("m"), col("vec_id").as("cent_id"),
         col("v").as("cv"), col("nrm").as("cnrm"))
     for (_ <- 1 to pqRounds)
-      cents = pqUpdateAll(pqAssignAll(pts, cents), pts).localCheckpoint()
+      cents = pqUpdateAll(pqAssignAll(pts, cents), pts).transform(pin)
     (pts, cents,
       pqAssignAll(pts, cents).select(col("vec_id"), col("m"),
         col("cluster").as("code")))
@@ -4547,8 +4553,8 @@ object Similarity {
   private def pqAllFor(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     Derived(s, s"pqall#$dir") {
-      val (pts, cents, codes) = pqAll(qvec(s, dir).localCheckpoint())
-      (pts, cents, Relational.loopCheckpoint(codes))
+      val (pts, cents, codes) = pqAll(qvec(s, dir))
+      (pts, cents, pin(codes))
     }
 
   def ss09PqEncode(s: SparkSession, dir: String): DataFrame =
@@ -4626,7 +4632,7 @@ object Similarity {
     * inflated wall is host contention. */
   private def ivfPqScoredCompute(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // coarse quantizer + assignment + probes: the shared per-JVM memos
     // (identical machinery and tiebreaks to ss03)
     val cents = coarseCentroidsFor(s, dir)
@@ -4655,7 +4661,7 @@ object Similarity {
       // partition the corpus, but DISTINCT the (q, c) pairs like ss03 to
       // keep the contract explicit
       .select(col("q_id"), col("vec_id").as("c_id"), col("adc_d2")).distinct()
-      .transform(Relational.loopCheckpoint)
+      .transform(pin)
     (base, adc)
   }
 
@@ -4841,7 +4847,7 @@ object Similarity {
   // assignment pass + a |lists|-row report.
   // ---------------------------------------------------------------------
   def ss13QuantizerDrift(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     val cents = learnedCentroids(base.filter(col("vec_id") % 10 =!= 3), ivfRounds)
     val assigned = assignToCentroids(base, cents)
       .withColumn("is_new", (col("vec_id") % 10 === 3).cast("long"))
@@ -4942,7 +4948,7 @@ object Similarity {
         .otherwise(expr("((x - mn) * 255) div (mx - mn)")))
 
   def ss16SqEncode(s: SparkSession, dir: String): DataFrame =
-    sqEncoded(qvec(s, dir).localCheckpoint())
+    sqEncoded(qvec(s, dir))
       .select(col("vec_id"), col("d").cast("long").as("d"), col("code"))
 
   /** Oracle CTE prefix shared by ss16/ss17/ss18: positional explode,
@@ -4969,7 +4975,7 @@ object Similarity {
        |FROM co""".stripMargin
 
   def ss17SqTopk(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // reconstructed candidate vectors, reassembled in dimension order
     val rec = sqEncoded(base)
       .withColumn("rx", col("mn") + expr("(code * (mx - mn)) div 255"))
@@ -5038,7 +5044,7 @@ object Similarity {
   // what stacking both compressions costs vs either alone.
   // ---------------------------------------------------------------------
   def ss21IvfSq(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // the candidate pairs are the memoized canonical probe (identical
     // derivation — train/assign/probe shapes lived here verbatim)
     val pairs = ivfCandPairsFor(s, dir)
@@ -5235,7 +5241,7 @@ object Similarity {
        |SELECT vec_id, CAST(p AS BIGINT) AS p, c FROM rpl""".stripMargin
 
   def ss30RpTopk(s: SparkSession, dir: String): DataFrame = {
-    val enc = rpEncoded(qvec(s, dir)).localCheckpoint()
+    val enc = rpEncoded(qvec(s, dir)).transform(pin)
     val qs = enc.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("rp").as("r1"), col("pn").as("pn1"))
     val scored = enc
@@ -5300,7 +5306,7 @@ object Similarity {
   // loss of the nprobe fence and the projection.
   // ---------------------------------------------------------------------
   def ss32IvfRp(s: SparkSession, dir: String): DataFrame = {
-    val base = qvec(s, dir).localCheckpoint()
+    val base = qvec(s, dir)
     // the candidate pairs are the memoized canonical probe (identical
     // derivation — train/assign/probe shapes lived here verbatim)
     val pairs = ivfCandPairsFor(s, dir)

@@ -16,7 +16,7 @@ import graft.Tables
   * the DuckDB oracle matches bit-for-bit.
   */
 object TextOps {
-  import Relational.Q
+  import Relational.{Q, pin}
 
   // ---------------------------------------------------------------------
   // q25: emission-order indexed explode (B6/B7 — lang_index counts only
@@ -460,7 +460,7 @@ object TextOps {
       expr("filter(split(text, ' '), x -> x != '')").as("toks"))
     for (_ <- 1 to bpeRounds) {
       minedTopPair(cur).foreach { case (a, b) =>
-        cur = cur.withColumn("toks", mergedToks(a, b)).localCheckpoint()
+        cur = cur.withColumn("toks", mergedToks(a, b)).transform(pin)
       }
     }
     cur.select(col("doc_id"), size(col("toks")).as("n_tokens"),
@@ -519,7 +519,7 @@ object TextOps {
     for (round <- 1 to bpeRounds) {
       minedTopPairWithCount(cur).foreach { case (a, b, n) =>
         merges += ((round, a, b, n))
-        cur = cur.withColumn("toks", mergedToks(a, b)).localCheckpoint()
+        cur = cur.withColumn("toks", mergedToks(a, b)).transform(pin)
       }
     }
     merges.toSeq.toDF("round", "a", "b", "n")
@@ -620,7 +620,7 @@ object TextOps {
       zip_with(slice(col("toks"), lit(1), n - 1), slice(col("toks"), lit(2), n - 1),
         (a, b) => struct(a.as("w1"), b.as("w2"))))
       .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    val toks = docs.select(col("doc_id"), toksE.as("toks")).localCheckpoint()
+    val toks = docs.select(col("doc_id"), toksE.as("toks")).transform(pin)
     val uni = toks.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val bi = toks.select(explode(pairsArr).as("p"))
@@ -1023,7 +1023,7 @@ object TextOps {
     val tf = docs.select(col("doc_id"),
         explode(expr("filter(split(lower(text), ' '), x -> x != '')")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(pin)
     val dls = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val stats = dls.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Relational.pin
+
 /** Structured Streaming surface over event streams — the streaming twins of
   * the batch operators in [[graft.operators.EventOps]] (SURVEY §2.D row D6:
   * the reference is batch-only; event-time processing is the north-star
@@ -35,13 +37,6 @@ object EventStream {
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** Sliding-window rates: 1-hour windows every 15 minutes. */
-  def slidingRates(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_value"))
 
   /** NATIVE session windows — Spark's built-in `session_window` dynamic-gap
     * aggregation, the declarative counterpart of the
@@ -119,10 +114,10 @@ object EventStream {
       (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
     val hashesOld = corpus.select(md5(col("text")).as("h"))
-      .distinct().localCheckpoint()
-    val setsOld = Dedup.shingleSets(corpus).localCheckpoint()
+      .distinct().transform(pin)
+    val setsOld = Dedup.shingleSets(corpus).transform(pin)
     val bandsOld = Dedup.lshBands(Dedup.minhashSigsFromSets(setsOld).drop("sh"))
-      .localCheckpoint()
+      .transform(pin)
     newDocs.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink(Dedup.incrementalFlags(batch, hashesOld, setsOld, bandsOld), batchId)
@@ -203,7 +198,7 @@ object EventStream {
       batchId: Long, autoMaintain: Boolean = false): Unit = {
     import graft.operators.{Artifact, Dedup, DedupStore}
     val s = batch.sparkSession
-    val b = batch.localCheckpoint() // pin: retries must re-check the same rows
+    val b = batch.transform(pin) // pin: retries must re-check the same rows
     val flagDir = s"$outDir/batch=$batchId"
     val f = Artifact.fs(s, outDir)
     if (!f.exists(new org.apache.hadoop.fs.Path(s"$flagDir/_SUCCESS")))
@@ -492,7 +487,7 @@ object EventStream {
           expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
             .as("v1"))
         .withColumn("n1", expr("dot_l(v1, v1)"))
-        .localCheckpoint() // pin the batch: retries must re-serve, not re-read
+        .transform(pin) // pin the batch: retries must re-serve, not re-read
       graft.operators.Artifact.retryOnMissingFiles(s, idxDir) {
         graft.operators.Similarity.beamServeExternal(s, idxDir, qs)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
@@ -537,7 +532,7 @@ object EventStream {
           expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
             .as("v1"))
         .withColumn("n1", expr("dot_l(v1, v1)"))
-        .localCheckpoint() // pin the batch: retries must re-serve, not re-read
+        .transform(pin) // pin the batch: retries must re-serve, not re-read
       graft.operators.Artifact.retryOnMissingFiles(s, idxDir) {
         graft.operators.Similarity.ivfServeExternal(s, idxDir, qs)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")

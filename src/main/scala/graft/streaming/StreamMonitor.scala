@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -29,10 +28,8 @@ final class StreamMonitor(
       watermark: String, at: Long)
 
   private val last = new ConcurrentHashMap[java.util.UUID, Snapshot]()
-  private val lastLine = new AtomicReference[String]("")
 
   def lastProgress(id: java.util.UUID): Option[Snapshot] = Option(last.get(id))
-  def lastLogged: String = lastLine.get()
 
   override def onQueryStarted(ev: QueryStartedEvent): Unit =
     log(s"[stream] ${Option(ev.name).getOrElse(ev.id.toString)} started")
@@ -49,7 +46,6 @@ final class StreamMonitor(
     val line = f"[stream] ${snap.name}%s batch=${snap.batchId}%d " +
       f"rows=${snap.inputRows}%d (${snap.rowsPerSec}%.1f/s) " +
       f"took=${snap.batchMs}%d ms state=${snap.stateRows}%d wm=${snap.watermark}%s"
-    lastLine.set(line)
     log(line)
     // a batch that lands after a long silent gap — while earlier data had
     // been flowing — is the operator signal for a stuck upstream/sink

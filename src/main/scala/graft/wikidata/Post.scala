@@ -317,7 +317,7 @@ object Post {
         c11("lat"), c11("lon"), c11("2nd_id"), c11("native_label"),
         c11("eo_label"), c11("2nd_native_label"), c11("2nd_eo_label"),
         c11("2nd_iso"))
-      .transform(Relational.loopCheckpoint)
+      .transform(Relational.pin)
 
     // ------------------------------------------------------------------
     // Cleanup 02/08 (C17): object_languages keyed (id, lang=code); the

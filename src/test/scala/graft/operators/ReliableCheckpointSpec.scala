@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** The cluster-grade fault-tolerance affordance for the iterative loops
   * (round-7 directive): every fixpoint loop truncates lineage through
-  * [[Relational.loopCheckpoint]], which is `localCheckpoint()` by default
+  * [[Relational.pin]], which is `localCheckpoint()` by default
   * (fast; blocks pinned to executors — fine on local[*]) and switches to
   * reliable `checkpoint()` under `spark.graft.reliableCheckpoint=true`
   * (RDD written to `spark.graft.checkpointDir`; an executor loss on a
@@ -18,8 +18,9 @@ import graft.SparkSpec
   * settings must produce identical output — the conf changes durability,
   * never results. One multi-round CC loop (star contraction — two
   * checkpoints per round) and one budgeted loop (PageRank) cover the
-  * fixpoint and fixed-iteration families. A [[Derived]] pin and the
-  * post-processing pipeline (`wikidata.Post`) go through the same switch.
+  * fixpoint and fixed-iteration families. A [[Derived]] pin, a one-off
+  * operator pin (triangle counts) and the post-processing pipeline
+  * (`wikidata.Post`) go through the same switch.
   */
 class ReliableCheckpointSpec extends SparkSpec {
 
@@ -88,6 +89,24 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(files.nonEmpty && files.forall(f =>
       new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(root)), files)
     assert(pinned.orderBy("x").collect().toSeq == df.orderBy("x").collect().toSeq)
+  }
+
+  test("a one-off operator pin (triangleCounts) under reliableCheckpoint=true lands in the configured dir") {
+    import spark.implicits._
+    // two triangles sharing the edge (1,2), plus a pendant edge
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L), (2L, 4L), (4L, 5L))
+      .toDF("a", "b")
+    val plain = Relational.triangleCounts(edges).orderBy("node").collect().toSeq
+    val reliable = withReliable(ckptDir.getPath)(Relational.triangleCounts(edges))
+    val files = reliable.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+    }.flatten
+    val root = ckptDir.getCanonicalPath + "/"
+    assert(files.nonEmpty && files.forall(f =>
+      new org.apache.hadoop.fs.Path(f).toUri.getPath.startsWith(root)), files)
+    assert(reliable.orderBy("node").collect().toSeq == plain)
+    assert(plain.map(r => (r.getLong(0), r.getLong(1))) ==
+      Seq(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
   }
 
   test("Post.apply under reliableCheckpoint=true checkpoints into the configured dir, same rows") {
